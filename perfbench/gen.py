@@ -26,21 +26,32 @@ SIZES = {
     "etl_daily": {
         "default": dict(customers=1500, suppliers=100, orders=60000,
                         rows_per_drop=6000, files_per_drop=(2, 5),
-                        backfill_every=6, backfill_months=(3, 6),
-                        ledger_history=1000),
+                        backfill_every=3, backfill_months=(3, 6),
+                        ledger_history=1000,
+                        events_per_drop=2000, event_users=3000),
         "tiny": dict(customers=100, suppliers=20, orders=3000,
                      rows_per_drop=300, files_per_drop=(1, 3),
                      backfill_every=3, backfill_months=(2, 3),
-                     ledger_history=50),
+                     ledger_history=50,
+                     events_per_drop=200, event_users=100),
     },
     "analyst_mix": {
         "default": dict(customers=1500, suppliers=100, parts=2000, orders=15000,
-                        lines_per_order=4, events=20000, users=1000),
+                        lines_per_order=4, events=20000, users=1000,
+                        documents=300, doc_words=(40, 120)),
         "tiny": dict(customers=150, suppliers=10, parts=200, orders=1500,
-                     lines_per_order=4, events=2000, users=100),
+                     lines_per_order=4, events=2000, users=100,
+                     documents=40, doc_words=(10, 30)),
     },
 }
 
+# event time of the stream drains: each drop's events file covers the next
+# slice, and a late event falls at most EVENT_LATE_MS before its slice, well
+# inside the drains' two-hour watermark
+EVENT_START_MS = int((dt.datetime(2024, 1, 1) - dt.datetime(1970, 1, 1)).total_seconds()) * 1000
+EVENT_SLICE_MS = 6 * 3600 * 1000
+EVENT_LATE_MS = 3600 * 1000
+EVENT_LATE_SHARE = 0.05
 HISTORY_START = dt.date(1995, 1, 1)
 HISTORY_DAYS = 2404  # through 2001-07-31: 80 months
 EPOCH = dt.datetime(1970, 1, 1)
@@ -182,13 +193,17 @@ def gen_etl(root, seed, size, n_ops, warmups):
     write_dims(sf, rng, p["customers"], p["suppliers"])
     odays, ocust = write_orders(sf, rng, p["orders"], p["customers"])
     base = dt.datetime.combine(HISTORY_START, dt.time())
+    ev_rng = rng_for(seed, "etl_daily", "events")
     drops = []
     completed = []  # file names delivered valid in earlier drops (replay pool)
     for k in range(n_ops):
         ddir = f"{root}/drops/d{k:04d}"
         os.makedirs(ddir)
-        # one drop in N is a multi-month backfill (never a warm-up drop)
-        backfill = k >= warmups and k % p["backfill_every"] == 0
+        # one drop in N is a multi-month backfill: the second timed drop and
+        # every Nth after it, never a warm-up drop. It carries a day's volume
+        # of rows spread over months, so the partitioned mart fans out wider
+        # while every op does a like amount of row work
+        backfill = k > warmups and (k - warmups) % p["backfill_every"] == 1
         span = (int(rng.integers(*p["backfill_months"], endpoint=True)) * 30
                 if backfill else int(rng.integers(1, 3)))
         start = int(rng.integers(0, HISTORY_DAYS - span))
@@ -196,8 +211,6 @@ def gen_etl(root, seed, size, n_ops, warmups):
         if hi <= lo:
             hi = min(lo + 1, len(odays))
         rows = max(50, int(rng.normal(p["rows_per_drop"], p["rows_per_drop"] * 0.05)))
-        if backfill:
-            rows *= 3
         okeys = rng.integers(lo, hi, rows)
         cols = line_columns(rng, okeys, p["suppliers"] + 2, odays[okeys])  # +2: orphan suppliers
         nfiles = int(rng.integers(*p["files_per_drop"], endpoint=True))
@@ -244,10 +257,56 @@ def gen_etl(root, seed, size, n_ops, warmups):
         for name in valid_names:
             os.link(f"{ddir}/{name}", f"{keep}/{name}")
             completed.append((keep, name))
-        drops.append(dict(dir=ddir, rows=rows, injected=inj, expected={f"{c}|{m}": v for (c, m), v in exp.items()},
-                          input_bytes=sum(os.path.getsize(f"{ddir}/{n}") for n in valid_names)))
+        events = write_event_drop(f"{root}/events_pending/e{k:04d}.parquet", ev_rng, k,
+                                  p["events_per_drop"], p["event_users"],
+                                  first_id=k * p["events_per_drop"])
+        drops.append(dict(dir=ddir, rows=rows, injected=inj, backfill=backfill,
+                          expected={f"{c}|{m}": v for (c, m), v in exp.items()},
+                          input_bytes=sum(os.path.getsize(f"{ddir}/{n}") for n in valid_names),
+                          events=events))
+    os.makedirs(f"{root}/stream_src")
     hist = rng.integers(int(p["ledger_history"] * 0.8), int(p["ledger_history"] * 1.2) + 1)
-    return dict(sf_dir=sf, drops=drops, ledger_history=int(hist))
+    return dict(sf_dir=sf, drops=drops, ledger_history=int(hist),
+                stream_src=f"{root}/stream_src",
+                event_files=[f"{root}/events_pending/e{k:04d}.parquet" for k in range(n_ops)])
+
+
+def write_event_drop(path, rng, k, n, users, first_id):
+    """Drop k's events file: the k-th slice of event time, rows out of order,
+    a share of them late (before the slice). Returns what the drain checks
+    need of it: per (hour start in epoch seconds, type) the event count and
+    exact value total, the largest timestamp, and each user's latest
+    (ts, event_id)."""
+    lo = k * EVENT_SLICE_MS
+    ts = rng.integers(lo, lo + EVENT_SLICE_MS, n)
+    if k > 0:
+        late = rng.random(n) < EVENT_LATE_SHARE
+        ts[late] = lo - rng.integers(1, EVENT_LATE_MS, int(late.sum()))
+    # no timestamp on an hour boundary, so the watermark never sits on a
+    # window end
+    ts[ts % 3_600_000 == 0] += 1
+    ts += EVENT_START_MS
+    user = rng.integers(0, users, n)
+    etype = rng.integers(0, len(EVENT_TYPES), n)
+    cents = _money(rng, 1, 500, n)
+    eid = np.arange(first_id, first_id + n)
+    _write(pa.table({
+        "event_id": pa.array(eid, pa.int64()),
+        "ts": pa.array(ts * 1000, pa.timestamp("us")),
+        "user_id": pa.array(user, pa.int64()),
+        "event_type": [EVENT_TYPES[i] for i in etype],
+        "value": cents / 100.0,
+        "props": [f'{{"k": {j}}}' for j in rng.integers(0, 100, n)],
+    }), path)
+    rollup = defaultdict(lambda: [0, 0])
+    latest = {}
+    for t, u, e, c, i in zip(ts.tolist(), user.tolist(), etype.tolist(), cents.tolist(), eid.tolist()):
+        r = rollup[(t // 3_600_000 * 3600, EVENT_TYPES[e])]
+        r[0] += 1
+        r[1] += c
+        if u not in latest or (t, i) > latest[u]:
+            latest[u] = (t, i)
+    return dict(rollup=dict(rollup), max_ts_ms=int(ts.max()), latest=latest)
 
 
 # ------------------------------------------------------------------- analyst_mix
@@ -275,6 +334,8 @@ def gen_analyst(root, seed, size, n_ops, warmups):
         "l_shipdate": _micros(cols["ship_days"]),
     }), f"{sf}/lineitem.parquet")
     write_events_table(f"{sf}/events.parquet", rng, p["events"], p["users"])
+    write_documents(f"{sf}/documents.parquet", rng_for(seed, "analyst_mix", "documents"),
+                    p["documents"], p["doc_words"])
     # exact expectations for the two business questions
     base = dt.datetime.combine(HISTORY_START, dt.time())
     cm = defaultdict(Decimal)
@@ -309,6 +370,22 @@ def write_events_table(path, rng, n, users):
         "event_type": [EVENT_TYPES[i] for i in rng.integers(0, 5, n)],
         "value": _money(rng, 1, 500, n) / 100.0,
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n)],
+    }), path)
+
+
+def write_documents(path, rng, n, words):
+    """Short text documents over a small made-up vocabulary."""
+    syl = ["ka", "lo", "mi", "ne", "ru", "sa", "ti", "vo", "ze", "pa", "do", "gu"]
+    vocab = ["".join(syl[j] for j in rng.integers(0, len(syl), int(rng.integers(1, 4))))
+             for _ in range(600)]
+    texts = [" ".join(vocab[j] for j in rng.integers(0, len(vocab), int(rng.integers(*words))))
+             for _ in range(n)]
+    _write(pa.table({
+        "doc_id": pa.array(range(n), pa.int64()),
+        "text": texts,
+        "lang": [["en", "de", "fr"][i] for i in rng.integers(0, 3, n)],
+        "source": [["web", "books", "code"][i] for i in rng.integers(0, 3, n)],
+        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
     }), path)
 
 

@@ -3,7 +3,6 @@ package graft.perfbench
 import java.io.File
 import java.lang.management.ManagementFactory
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -13,10 +12,10 @@ import org.apache.spark.sql.execution.SQLExecution
 
 import graft.core.SessionFactory
 
-/** One benchmark run inside one JVM: set up (several times, each a fresh
-  * session plus one untimed warm-up op), run the workload's loop until the
-  * deadline, collect what the output checks need, and write everything as
-  * one JSON document. Metrics are computed from that document by `run.py`.
+/** One benchmark run inside one JVM: set up (a session plus one untimed
+  * warm-up op), run the workload's loop until the deadline, collect what the
+  * output checks need, and write everything as one JSON document. Metrics
+  * are computed from that document by `run.py`.
   *
   * Usage: Main --workload <name> --plan <plan.json> --seconds <s>
   *             --trace <0|1> --out <result.json>
@@ -44,19 +43,13 @@ object Main {
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
 
-    val setupS = ArrayBuffer.empty[Double]
-    val sessionS = ArrayBuffer.empty[Double]
-    var spark: SparkSession = null
-    for (k <- 0 until plan.get("setup_repeats").asInt) {
-      if (spark != null) spark.stop()
-      val t0 = System.nanoTime()
-      spark = SessionFactory.local(cores, "graft-perfbench")
-      sessionS += (System.nanoTime() - t0) / 1e9
-      trace.install(spark.sparkContext)
-      workload.warmUp(spark, k)
-      // the first setup runs from JVM start, the later ones from a fresh session
-      setupS += (System.nanoTime() - t0) / 1e9 + (if (k == 0) jvmToMain else 0.0)
-    }
+    // set-up runs from JVM start to the first timed op
+    val t0 = System.nanoTime()
+    val spark = SessionFactory.local(cores, "graft-perfbench")
+    val sessionS = (System.nanoTime() - t0) / 1e9
+    trace.install(spark)
+    workload.warmUp(spark)
+    val setupS = jvmToMain + (System.nanoTime() - t0) / 1e9
 
     val cpu0 = cpuSeconds
     val w0 = trace.nowMs
@@ -68,8 +61,9 @@ object Main {
       "workload" -> opts("workload"),
       "load_before" -> loadBefore,
       "nproc" -> Runtime.getRuntime.availableProcessors,
-      "setup_s" -> setupS.toSeq,
-      "session_start_s" -> sessionS.toSeq,
+      "setup_s" -> setupS,
+      "jvm_to_main_s" -> jvmToMain,
+      "session_start_s" -> sessionS,
       "window_t0" -> w0,
       "window_t1" -> w1,
       "window_cpu_s" -> (cpu1 - cpu0),
@@ -78,7 +72,8 @@ object Main {
       "ops" -> ops,
       "checks" -> workload.checks,
       "spans" -> trace.spanRecords,
-      "jobs" -> trace.jobRecords(spark.sparkContext))
+      "jobs" -> trace.jobRecords(spark.sparkContext),
+      "batches" -> trace.batchRecords)
     new ObjectMapper().writeValue(new File(opts("out")), Json.toJava(result))
     workload.close()
     spark.stop()
@@ -121,12 +116,11 @@ object Main {
   }
 }
 
-/** A workload: its warm-up op (one per setup), its timed loop, and what
-  * its output checks need. Ops alternate traced/untraced in a traced run so
-  * the tracing overhead can be read off the same run.
+/** A workload: its warm-up op, its timed loop, and what its output checks
+  * need. In a traced run every timed op is traced.
   */
 abstract class Workload(plan: JsonNode, trace: Trace) {
-  def warmUp(spark: SparkSession, k: Int): Unit
+  def warmUp(spark: SparkSession): Unit
   def run(spark: SparkSession, deadlineMs: Double): Seq[Map[String, Any]]
   /** What the output checks need beyond the op records. */
   def checks: Map[String, Any] = Map.empty
@@ -135,12 +129,11 @@ abstract class Workload(plan: JsonNode, trace: Trace) {
   protected val work: String = plan.get("work").asText
   protected def strings(key: String): IndexedSeq[String] =
     plan.get(key).elements().asScala.map(_.asText).toIndexedSeq
-  protected def traced(op: Long): Boolean = trace.enabled && op % 2 == 0
 
   /** Run one op body, catching its failure into the record. */
   protected def op(spark: SparkSession, id: Long, kind: String)(
       body: Boolean => Map[String, Any]): Map[String, Any] = {
-    val tr = traced(id)
+    val tr = trace.enabled
     // Spark local properties are per thread and inherited by threads the op
     // starts, so the listener can attribute every job of a traced op to it
     spark.sparkContext.setLocalProperty(Trace.OpProperty, if (tr) id.toString else null)

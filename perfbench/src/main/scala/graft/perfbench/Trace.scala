@@ -1,14 +1,19 @@
 package graft.perfbench
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** In-memory trace of one benchmark run. Spans and Spark job/task counts are
-  * appended from any thread and written out once, when the run ends.
+/** In-memory trace of one benchmark run. Spans, Spark job/task counts and
+  * streaming batch progress are appended from any thread and written out
+  * once, when the run ends. Only traced ops are recorded: the listeners drop
+  * the untraced warm-up op's jobs, tasks and batches on a single map lookup.
   *
   * Times are epoch milliseconds with a fractional part: span boundaries come
   * from `System.nanoTime` anchored once to the wall clock, so they line up
@@ -24,32 +29,71 @@ final class Trace(val enabled: Boolean) {
 
   private val spans = new ConcurrentLinkedQueue[Span]()
   private val jobs = new ConcurrentLinkedQueue[Job]()
-  private val stageAgg = new java.util.concurrent.ConcurrentHashMap[Int, TaskAgg]()
+  // stages of traced ops' jobs only, registered when their job starts
+  private val stageAgg = new ConcurrentHashMap[Int, TaskAgg]()
+  private val drainRuns = new ConcurrentHashMap[UUID, (Long, String)]()
+  private val batches = new ConcurrentLinkedQueue[Batch]()
+  @volatile private var drainLabel: Option[(Long, String)] = None
 
   def addSpan(op: Long, name: String, t0: Double, t1: Double): Unit =
     if (enabled) spans.add(Span(op, name, t0, t1))
 
+  /** Run one streaming drain of op `op`, timed as a span named `name`; when
+    * the op is traced its micro-batches' progress is kept under that name.
+    */
+  def drain[T](op: Long, name: String, traced: Boolean)(body: => T): T = {
+    // read by onQueryStarted, which Spark calls synchronously inside start()
+    drainLabel = if (traced) Some((op, name)) else None
+    val t0 = nowMs
+    try body
+    finally {
+      drainLabel = None
+      if (traced) addSpan(op, name, t0, nowMs)
+    }
+  }
+
   private val sparkListener: SparkListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).flatMap(p => Option(p.getProperty(Trace.OpProperty))).foreach { op =>
+        e.stageIds.foreach(s => stageAgg.putIfAbsent(s, TaskAgg()))
         jobs.add(Job(op.toLong, e.jobId, e.time.toDouble, e.stageIds))
       }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      val a = stageAgg.get(e.stageId)
       val m = e.taskMetrics
-      if (m != null) {
-        val a = stageAgg.computeIfAbsent(e.stageId, _ => TaskAgg())
-        a.synchronized {
-          a.tasks += 1
-          a.runMs += m.executorRunTime
-          a.cpuNs += m.executorCpuTime
-          a.shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
-          a.spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
-        }
+      if (a != null && m != null) a.synchronized {
+        a.tasks += 1
+        a.runMs += m.executorRunTime
+        a.cpuNs += m.executorCpuTime
+        a.shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
+        a.spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
       }
     }
   }
 
-  def install(sc: SparkContext): Unit = if (enabled) sc.addSparkListener(sparkListener)
+  private val streamListener: StreamingQueryListener = new StreamingQueryListener {
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      drainLabel.foreach(l => drainRuns.put(e.runId, l))
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      val p = e.progress
+      Option(drainRuns.get(p.runId)).foreach { case (op, name) =>
+        val d = p.durationMs.asScala.map { case (k, v) => k -> v.longValue }
+        batches.add(Batch(op, name, p.batchId, p.numInputRows,
+          d.getOrElse("queryPlanning", 0L), d.getOrElse("addBatch", 0L),
+          d.getOrElse("walCommit", 0L) + d.getOrElse("commitOffsets", 0L),
+          d.getOrElse("triggerExecution", 0L),
+          p.stateOperators.map(_.numRowsTotal).sum))
+      }
+    }
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+  }
+
+  /** Attach the listeners to a session; one session per run. */
+  def install(spark: SparkSession): Unit = if (enabled) {
+    stageAgg.clear()
+    spark.sparkContext.addSparkListener(sparkListener)
+    spark.streams.addListener(streamListener)
+  }
 
   /** Jobs with their stages' task totals folded in; the listener bus is
     * drained first so every finished task has been counted.
@@ -73,6 +117,12 @@ final class Trace(val enabled: Boolean) {
 
   def spanRecords: Seq[Map[String, Any]] =
     spans.asScala.toSeq.map(s => Map("op" -> s.op, "name" -> s.name, "t0" -> s.t0, "t1" -> s.t1))
+
+  /** Streaming micro-batches of traced drains; call after [[jobRecords]]. */
+  def batchRecords: Seq[Map[String, Any]] =
+    batches.asScala.toSeq.map(b => Map("op" -> b.op, "drain" -> b.drain, "batch" -> b.batchId,
+      "input_rows" -> b.inputRows, "planning_ms" -> b.planningMs, "add_batch_ms" -> b.addBatchMs,
+      "wal_commit_ms" -> b.walCommitMs, "trigger_ms" -> b.triggerMs, "state_rows" -> b.stateRows))
 }
 
 object Trace {
@@ -82,6 +132,8 @@ object Trace {
   final case class Job(op: Long, jobId: Int, t0: Double, stageIds: Seq[Int])
   final case class TaskAgg(var tasks: Long = 0, var runMs: Long = 0, var cpuNs: Long = 0,
       var shuffleWriteBytes: Long = 0, var spillBytes: Long = 0)
+  final case class Batch(op: Long, drain: String, batchId: Long, inputRows: Long,
+      planningMs: Long, addBatchMs: Long, walCommitMs: Long, triggerMs: Long, stateRows: Long)
 
   def drainListenerBus(sc: SparkContext): Unit =
     org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc, 10000)
