@@ -174,21 +174,30 @@ final class AnalystMix(plan: JsonNode, trace: Trace) extends Workload(plan, trac
 
   @volatile private var results = Map.empty[String, Any]
 
-  /** The analyst's warm-up op: every query of the mix once, collected, spread
-    * over the clients. The collected results are the run's reference:
-    * fingerprinted for the golden check, row counts for every timed op, and
-    * the two business questions' rows for the exact recomputation.
+  /** The analyst's warm-up op: one whole block of the mix, untimed, so that
+    * the timed ops run on compiled code (in a fresh JVM, the first block of
+    * queries ran about an eighth slower than the blocks after it). The first
+    * run of each query is collected: the run's reference, fingerprinted for
+    * the golden check, row counts for every timed op, and the two business
+    * questions' rows for the exact recomputation.
     */
   override def warmUp(spark: SparkSession): Unit = {
-    val names = strings("warmup")
+    val names = strings("warmup_block")
+    val next = new AtomicLong(0L)
     val out = new java.util.concurrent.ConcurrentHashMap[String, Any]()
     val threads = (0 until clients).map { c =>
-      new Thread(() => names.indices.filter(_ % clients == c).foreach { i =>
-        val name = names(i)
-        val rows = queries(name)._2(spark, sfDir).collect().toSeq
-          .map(_.toSeq.map(v => if (v == null) "null" else v.toString).mkString("|"))
-        out.put(name, Map("fingerprint" -> Main.fingerprint(rows), "rows" -> rows.size,
-          "data" -> (if (queries(name)._1 == "etl") rows else Seq.empty)))
+      new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < names.size) {
+          val name = names(i.toInt)
+          if (!out.containsKey(name)) {
+            val rows = queries(name)._2(spark, sfDir).collect().toSeq
+              .map(_.toSeq.map(v => if (v == null) "null" else v.toString).mkString("|"))
+            out.put(name, Map("fingerprint" -> Main.fingerprint(rows), "rows" -> rows.size,
+              "data" -> (if (queries(name)._1 == "etl") rows else Seq.empty)))
+          } else query(spark, name)
+          i = next.getAndIncrement()
+        }
       }, s"perfbench-warmup-$c")
     }
     threads.foreach(_.start())
