@@ -23,11 +23,9 @@ object SessionFactory {
   def local(cores: Int, appName: String = "graft"): SparkSession =
     configure(
       SparkSession.builder().master(s"local[$cores]")
-        // managed tables (the bucketed-layout surface, ops.Layout) land in a
-        // scratch warehouse under the caller's checkout, not ./spark-warehouse
-        // in the cwd root and not a path hardcoded to this repo
-        .config("spark.sql.warehouse.dir",
-          s"${sys.props("user.dir")}/target/tmp/warehouse"),
+        // managed tables (the bucketed-layout surface, ops.Layout) land in
+        // the scratch area, not ./spark-warehouse in the cwd root
+        .config("spark.sql.warehouse.dir", s"${Scratch.root}/warehouse"),
       cores, appName)
 
   /** For cluster use: master/deploy config comes from spark-submit; only the
@@ -39,6 +37,10 @@ object SessionFactory {
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // INT64 TIMESTAMP(NANOS) parquet loads as its raw long, which
+      // Tables.events normalizes; set here once so that reading a table never
+      // writes session state another query could observe
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // Commit algorithm 2: task commit renames straight into the destination,
       // so committing a many-partition write parallelizes across tasks instead

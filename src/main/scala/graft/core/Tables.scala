@@ -35,16 +35,15 @@ object Tables {
     * microsecond TIMESTAMP_NTZ by branching on the type Spark actually loaded:
     *
     *  - nanos: read the raw nanos as a long (`spark.sql.legacy.parquet
-    *    .nanosAsLong`) and truncate with `div 1000`, matching DuckDB's own ns→µs
-    *    truncation on the same file (positive epochs only; pre-1970 would need
-    *    floor, not div).
+    *    .nanosAsLong`, which [[SessionFactory]] sets) and truncate with
+    *    `div 1000`, matching DuckDB's own ns→µs truncation on the same file
+    *    (positive epochs only; pre-1970 would need floor, not div).
     *  - micros (isAdjustedToUTC=false): already loads as TIMESTAMP_NTZ — no-op.
     *  - micros (UTC-adjusted): cast to NTZ, wall-clock identity only under a UTC
-    *    session timezone, which every entry point ([[graft.Verify]],
-    *    [[graft.Bench]], tests) sets explicitly.
+    *    session timezone, which [[SessionFactory]] sets for every entry
+    *    point.
     */
   def events(spark: SparkSession, d: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>

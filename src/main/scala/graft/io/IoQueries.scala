@@ -5,32 +5,22 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, when}
 
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.etl.Marts
 import graft.ledger.JdbcLedger
 import graft.pipeline.{PipelineConfig, SalesEtlJob}
 
 /** Oracle-checkable drivers for the I/O + control-plane surface. Sinks and the
   * orchestrator are side-effecting, so each query here performs the effect into
-  * a per-scale-factor scratch area and returns the READ-BACK data — the oracle
+  * a per-dataset [[Scratch]] area and returns the READ-BACK data — the oracle
   * then checks the round trip end-to-end (write fidelity, not just plan
   * shape).
   */
 object IoQueries {
 
-  /** Per-scale-factor scratch path (shared with the streaming ingest query). */
-  private[graft] def scratch(sub: String, sfDir: String): String = {
-    val sfName = Paths.get(sfDir).getFileName.toString
-    s"/root/repo/target/tmp/$sub/$sfName"
-  }
-
-  private[graft] def deleteRecursively(dir: String): Unit = graft.core.StagingClock.timed {
-    VersionedTable.deleteDir(Paths.get(dir))
-  }
-
   /** S2+S6: write `customer` over JDBC (embedded Derby), read it back. */
   def jdbcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val conn = JdbcConn(s"jdbc:derby:${scratch("derby_rt", sfDir)};create=true")
+    val conn = JdbcConn(s"jdbc:derby:${Scratch.dir("derby_rt", sfDir)};create=true")
     Jdbc.write(Tables.customer(spark, sfDir), conn, "customer_rt", SaveMode.Overwrite,
       maxConnections = Some(1))
     Jdbc.read(spark, conn, "customer_rt")
@@ -38,15 +28,12 @@ object IoQueries {
 
   /** JSON-lines source with an EXPLICIT schema (the same declare-don't-infer
     * stance as the CSV reader, SURVEY §2.1 S1): documents round-trip through
-    * a JSONL scratch written once per scale factor. Inference on JSON is a
+    * a JSONL scratch written once per dataset. Inference on JSON is a
     * full extra pass at 100 TB and types drift per batch — the declared
     * schema makes the read one pass and stable.
     */
-  def jsonSourceRoundtrip(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val dir = scratch("json_src", sfDir)
-    if (!Files.exists(Paths.get(dir, "_SUCCESS"))) {
-      Tables.documents(spark, sfDir).write.mode("overwrite").json(dir)
-    }
+  def jsonSourceRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
+    val dir = Scratch.once("json_src", sfDir)(Tables.documents(spark, sfDir).write.json(_))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
@@ -61,13 +48,8 @@ object IoQueries {
     * losslessness contract as the parquet/compaction paths; NTZ timestamps
     * survive (ORC stores them zone-free natively).
     */
-  def orcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val dir = scratch("orc_rt", sfDir)
-    if (!Files.exists(Paths.get(dir, "_SUCCESS"))) {
-      Tables.lineitem(spark, sfDir).write.mode("overwrite").orc(dir)
-    }
-    spark.read.orc(dir)
-  }
+  def orcRoundtrip(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.orc(Scratch.once("orc_rt", sfDir)(Tables.lineitem(spark, sfDir).write.orc(_)))
 
   /** S4: partitioned parquet sink of the sales mart, read back through the
     * partition-discovery path. Partition columns come back as path-inferred
@@ -76,18 +58,9 @@ object IoQueries {
     * partition tree deletes it directory-by-directory inside the write, which
     * is both slow and noisy to measure.
     */
-  def partitionedSinkRoundtrip(spark: SparkSession, sfDir: String,
-      onStage: (String, Double) => Unit = (_, _) => ()): DataFrame = synchronized {
-    def staged[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      onStage(label, (System.nanoTime() - t0) / 1e9)
-      r
-    }
-    val base = scratch("sink_rt", sfDir)
-    staged("scratch_delete")(deleteRecursively(base))
-    val path = staged("mart_partitioned_write")(ParquetSink.writePartitioned(
-      Marts.salesTeamMart(spark, sfDir), base, "run", Seq("sales_month", "store_id")))
+  def partitionedSinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = synchronized {
+    val path = ParquetSink.writePartitioned(Marts.salesTeamMart(spark, sfDir),
+      Scratch.fresh("sink_rt", sfDir), "run", Seq("sales_month", "store_id"))
     spark.read.parquet(path)
       .withColumn("store_id", col("store_id").cast("int"))
       .withColumn("sales_month", col("sales_month").cast("string"))
@@ -102,42 +75,24 @@ object IoQueries {
     * from the source tables, so ingest→enrich→aggregate→JDBC-write→JDBC-read
     * must all be lossless for this to match.
     */
-  def pipelineEndToEnd(spark: SparkSession, sfDir: String,
-      onStage: (String, Double) => Unit = (_, _) => ()): DataFrame = synchronized {
-    def staged[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      onStage(label, (System.nanoTime() - t0) / 1e9)
-      r
-    }
-    val root = scratch("pipeline", sfDir)
-    // Driver-side staging (Derby shutdown, scratch delete, CSV drop copy) is
-    // timed separately via StagingClock so the bench can attribute wall time
-    // to staging vs the measured pipeline run.
-    graft.core.StagingClock.timed {
-      staged("stage_derby_shutdown") {
-        // shut down any Derby instance booted over these paths in this JVM before
-        // deleting — a booted instance would resurrect run-1 ledger state over the
-        // recreated directory and poison the idempotency filter (C4)
-        JdbcLedger.shutdownDerby(s"$root/ledgerdb")
-        JdbcLedger.shutdownDerby(s"$root/metricsdb")
-      }
-      staged("stage_scratch_delete")(deleteRecursively(root))
-    }
+  def pipelineEndToEnd(spark: SparkSession, sfDir: String): DataFrame = synchronized {
+    val root = Scratch.dir("pipeline", sfDir)
+    // shut down any Derby instance booted over these paths in this JVM before
+    // deleting — a booted instance would resurrect run-1 ledger state over the
+    // recreated directory and poison the idempotency filter (C4)
+    JdbcLedger.shutdownDerby(s"$root/ledgerdb")
+    JdbcLedger.shutdownDerby(s"$root/metricsdb")
+    Scratch.delete(root)
     val inputDir = s"$root/input"
-    graft.core.StagingClock.timed {
-      staged("stage_csv_drop") {
-        Files.createDirectories(Paths.get(inputDir))
+    Files.createDirectories(Paths.get(inputDir))
 
-        // stage the CSV drop: the same lineitem CSV parts the ingest query uses,
-        // plus a wrong-type file that must be quarantined, not processed
-        val csvDir = graft.ops.Relational.csvCopyOfLineitem(spark, sfDir)
-        new java.io.File(csvDir).listFiles().filter(_.getName.endsWith(".csv")).foreach { f =>
-          Files.copy(f.toPath, Paths.get(inputDir, f.getName))
-        }
-        Files.writeString(Paths.get(inputDir, "notes.txt"), "not a csv")
-      }
+    // stage the CSV drop: the same lineitem CSV parts the ingest query uses,
+    // plus a wrong-type file that must be quarantined, not processed
+    val csvDir = graft.ops.Relational.csvCopyOfLineitem(spark, sfDir)
+    new java.io.File(csvDir).listFiles().filter(_.getName.endsWith(".csv")).foreach { f =>
+      Files.copy(f.toPath, Paths.get(inputDir, f.getName))
     }
+    Files.writeString(Paths.get(inputDir, "notes.txt"), "not a csv")
 
     val metricsConn = JdbcConn(s"jdbc:derby:$root/metricsdb;create=true")
     val cfg = PipelineConfig(
@@ -147,12 +102,9 @@ object IoQueries {
       sfDir = sfDir,
       runId = "run_0001",
       runDate = java.time.LocalDate.of(2026, 1, 1))
-    val ledger = graft.core.StagingClock.timed {
-      staged("stage_ledger_boot")(JdbcLedger.derby(s"$root/ledgerdb"))
-    }
+    val ledger = JdbcLedger.derby(s"$root/ledgerdb")
     try SalesEtlJob.run(spark, cfg, ledger,
-      (df, table) => Jdbc.write(df, metricsConn, table, maxConnections = Some(1)),
-      onStage)
+      (df, table) => Jdbc.write(df, metricsConn, table, maxConnections = Some(1)))
     finally ledger.close()
     Jdbc.read(spark, metricsConn, "customer_monthly_purchase")
   }
@@ -160,8 +112,7 @@ object IoQueries {
   // ---------------------------------------------------------------- versioned
 
   /** Build the deterministic 4-version orders history the versioned-table
-    * queries read (memoized per scale factor; a crashed build leaves no
-    * `_DONE` and rebuilds from clean):
+    * queries read (staged once per dataset through [[Scratch.once]]):
     *   v0 append  orders with status F        (initial load)
     *   v1 append  orders with status O        (incremental batch)
     *   v2 delete  o_totalprice < 50000        (copy-on-write GDPR-style purge)
@@ -169,19 +120,14 @@ object IoQueries {
     *                                           — time travel to v2 must not
     *                                           see it, the change feed must)
     */
-  private def versionedOrdersBase(spark: SparkSession, sfDir: String): String = synchronized {
-    val base = scratch("versioned_orders", sfDir)
-    if (!Files.exists(Paths.get(base, "_DONE"))) {
-      graft.core.StagingClock.timed { deleteRecursively(base) }
+  private def versionedOrdersBase(spark: SparkSession, sfDir: String): String =
+    Scratch.once("versioned_orders", sfDir) { base =>
       val orders = Tables.orders(spark, sfDir)
       VersionedTable.append(orders.filter(col("o_orderstatus") === "F"), base)
       VersionedTable.append(orders.filter(col("o_orderstatus") === "O"), base)
       VersionedTable.deleteWhere(spark, base, col("o_totalprice") < 50000.0)
       VersionedTable.append(orders.filter(col("o_orderstatus") === "P"), base)
-      Files.writeString(Paths.get(base, "_DONE"), "ok")
     }
-    base
-  }
 
   /** Time travel: the table AS OF v2 — after the copy-on-write purge, before
     * the v3 batch. The oracle recomputes that state straight from the source
@@ -224,19 +170,14 @@ object IoQueries {
   }
 
   /** Orders range-clustered on `o_totalprice` into 8 stat-carrying file
-    * groups (memoized per scale factor) — the write-side half of manifest
+    * groups (staged once per dataset) — the write-side half of manifest
     * data skipping.
     */
-  private def clusteredOrdersBase(spark: SparkSession, sfDir: String): String = synchronized {
-    val base = scratch("clustered_orders", sfDir)
-    if (!Files.exists(Paths.get(base, "_DONE"))) {
-      deleteRecursively(base)
+  private def clusteredOrdersBase(spark: SparkSession, sfDir: String): String =
+    Scratch.once("clustered_orders", sfDir) { base =>
       VersionedTable.appendClustered(Tables.orders(spark, sfDir), base,
         statsCol = "o_totalprice", nGroups = 8)
-      Files.writeString(Paths.get(base, "_DONE"), "ok")
     }
-    base
-  }
 
   /** Manifest-level data skipping (q135): a totalprice range read opens only
     * the file groups whose [min,max] stats intersect the range — the
@@ -251,7 +192,7 @@ object IoQueries {
         "o_orderdate")
   }
 
-  /** The versioned-MERGE history (memoized per scale factor):
+  /** The versioned-MERGE history (staged once per dataset):
     *   v0 append  orders with status F              (initial load)
     *   v1 append  orders with status O              (incremental batch)
     *   v2 merge   source = every 5th orderkey, price bumped +1.0:
@@ -261,10 +202,8 @@ object IoQueries {
     *                not matched (status P keys) → INSERT
     * committed copy-on-write through [[VersionedTable.merge]].
     */
-  private def mergedOrdersBase(spark: SparkSession, sfDir: String): String = synchronized {
-    val base = scratch("merged_orders", sfDir)
-    if (!Files.exists(Paths.get(base, "_DONE"))) {
-      deleteRecursively(base)
+  private def mergedOrdersBase(spark: SparkSession, sfDir: String): String =
+    Scratch.once("merged_orders", sfDir) { base =>
       val orders = Tables.orders(spark, sfDir)
       VersionedTable.append(orders.filter(col("o_orderstatus") === "F"), base)
       VersionedTable.append(orders.filter(col("o_orderstatus") === "O"), base)
@@ -277,10 +216,7 @@ object IoQueries {
           "o_totalprice" -> col("s.o_totalprice"),
           "o_orderpriority" -> lit("MERGED")),
         deleteWhen = Some(col("t.o_totalprice") < 50000.0))
-      Files.writeString(Paths.get(base, "_DONE"), "ok")
     }
-    base
-  }
 
   /** Versioned MERGE INTO (q136): the post-merge snapshot. The oracle
     * rebuilds the same final state in plain SQL (carried ∪ updated ∪
@@ -301,10 +237,8 @@ object IoQueries {
     *   v4    optimize                     (bin-pack carried + rewritten groups)
     *   then  checkpoint v4 and vacuum(retain 1) — old group dirs reclaimed.
     */
-  private def maintainedLineitemBase(spark: SparkSession, sfDir: String): String = synchronized {
-    val base = scratch("maintained_lineitem", sfDir)
-    if (!Files.exists(Paths.get(base, "_DONE"))) {
-      deleteRecursively(base)
+  private def maintainedLineitemBase(spark: SparkSession, sfDir: String): String =
+    Scratch.once("maintained_lineitem", sfDir) { base =>
       val li = Tables.lineitem(spark, sfDir)
       (0 to 2).foreach(k =>
         VersionedTable.append(li.filter(pmod(col("l_orderkey"), lit(3)) === k), base))
@@ -312,10 +246,7 @@ object IoQueries {
       VersionedTable.optimize(spark, base)
       VersionedTable.checkpoint(base)
       VersionedTable.vacuum(base, retainVersions = 1)
-      Files.writeString(Paths.get(base, "_DONE"), "ok")
     }
-    base
-  }
 
   /** OPTIMIZE + checkpoint + VACUUM (q137): the post-maintenance snapshot,
     * resolved THROUGH the checkpoint over vacuumed storage. The oracle
@@ -336,10 +267,8 @@ object IoQueries {
     * `n_chars`; odd doc_ids arrive later carrying it. No history rewrite —
     * each file group keeps its own schema.
     */
-  private def evolvedDocsBase(spark: SparkSession, sfDir: String): String = synchronized {
-    val base = scratch("evolved_docs", sfDir)
-    if (!Files.exists(Paths.get(base, "_DONE"))) {
-      deleteRecursively(base)
+  private def evolvedDocsBase(spark: SparkSession, sfDir: String): String =
+    Scratch.once("evolved_docs", sfDir) { base =>
       val docs = Tables.documents(spark, sfDir)
       VersionedTable.append(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0).select("doc_id", "lang", "source"),
@@ -348,10 +277,7 @@ object IoQueries {
         docs.filter(pmod(col("doc_id"), lit(2)) === 1)
           .select("doc_id", "lang", "source", "n_chars"),
         base)
-      Files.writeString(Paths.get(base, "_DONE"), "ok")
     }
-    base
-  }
 
   /** Schema evolution (q138): the evolved snapshot merges both group schemas;
     * rows appended before the column existed read it as NULL. The oracle
@@ -370,10 +296,8 @@ object IoQueries {
     * channel, status-O source keys insert with it, untouched groups keep
     * the old schema on disk.
     */
-  private def evolvedMergeBase(spark: SparkSession, sfDir: String): String = synchronized {
-    val base = scratch("evolved_merge", sfDir)
-    if (!Files.exists(Paths.get(base, "_DONE"))) {
-      deleteRecursively(base)
+  private def evolvedMergeBase(spark: SparkSession, sfDir: String): String =
+    Scratch.once("evolved_merge", sfDir) { base =>
       val orders = Tables.orders(spark, sfDir)
       VersionedTable.append(orders.filter(col("o_orderstatus") === "F"), base)
       val source = orders
@@ -387,10 +311,7 @@ object IoQueries {
           "o_totalprice" -> col("s.o_totalprice"),
           "o_channel" -> col("s.o_channel")),
         evolveSchema = true)
-      Files.writeString(Paths.get(base, "_DONE"), "ok")
     }
-    base
-  }
 
   /** Schema-evolving MERGE (q159): the post-merge evolved snapshot — rows
     * untouched by the merge read a typed NULL channel, updated and inserted
@@ -406,16 +327,11 @@ object IoQueries {
   }
 
   /** Orders hash-sliced into 8 bloom-indexed file groups (memoized). */
-  private def bloomOrdersBase(spark: SparkSession, sfDir: String): String = synchronized {
-    val base = scratch("bloom_orders", sfDir)
-    if (!Files.exists(Paths.get(base, "_DONE"))) {
-      deleteRecursively(base)
+  private def bloomOrdersBase(spark: SparkSession, sfDir: String): String =
+    Scratch.once("bloom_orders", sfDir) { base =>
       VersionedTable.appendBloomIndexed(Tables.orders(spark, sfDir), base,
         keyCol = "o_orderkey", nGroups = 8)
-      Files.writeString(Paths.get(base, "_DONE"), "ok")
     }
-    base
-  }
 
   /** The point-lookup keys q148 probes — fixed literals shared with the
     * oracle's IN-list (keys absent at a small scale factor simply match
@@ -455,10 +371,8 @@ object IoQueries {
     * oracle recomputes it straight from the source, so BOTH losers'
     * retried commits must have landed losslessly for the hash to match.
     */
-  private def concurrentOrdersBase(spark: SparkSession, sfDir: String): String = synchronized {
-    val base = scratch("concurrent_orders", sfDir)
-    if (!Files.exists(Paths.get(base, "_DONE"))) {
-      deleteRecursively(base)
+  private def concurrentOrdersBase(spark: SparkSession, sfDir: String): String =
+    Scratch.once("concurrent_orders", sfDir) { base =>
       val orders = Tables.orders(spark, sfDir)
       VersionedTable.append(orders.filter(col("o_orderstatus") === "F"), base)
       VersionedTable.appendOptimistic(
@@ -473,10 +387,7 @@ object IoQueries {
           if (attempt == 0) VersionedTable.appendOptimistic(
             orders.filter(col("o_totalprice") >= 400000.0), base, "c0")
         })
-      Files.writeString(Paths.get(base, "_DONE"), "ok")
     }
-    base
-  }
 
   /** q164: the final snapshot after the two forced commit races above. */
   def concurrentWritersState(spark: SparkSession, sfDir: String): DataFrame = {
@@ -498,19 +409,14 @@ object IoQueries {
     * time travel to it still shows the mistaken state — pinned by
     * VersionedTableSpec).
     */
-  private def restoredOrdersBase(spark: SparkSession, sfDir: String): String = synchronized {
-    val base = scratch("restored_orders", sfDir)
-    if (!Files.exists(Paths.get(base, "_DONE"))) {
-      deleteRecursively(base)
+  private def restoredOrdersBase(spark: SparkSession, sfDir: String): String =
+    Scratch.once("restored_orders", sfDir) { base =>
       val orders = Tables.orders(spark, sfDir)
       VersionedTable.append(orders.filter(col("o_orderstatus") === "F"), base)
       VersionedTable.append(orders.filter(col("o_orderstatus") === "O"), base)
       VersionedTable.deleteWhere(spark, base, col("o_totalprice") < 200000.0)
       VersionedTable.restore(base, 1)
-      Files.writeString(Paths.get(base, "_DONE"), "ok")
     }
-    base
-  }
 
   /** q171: the post-restore snapshot — the mistaken delete fully undone. */
   def restoredState(spark: SparkSession, sfDir: String): DataFrame = {
@@ -530,11 +436,9 @@ object IoQueries {
     * apply (deletes first, then inserts) handles without tripping MERGE's
     * one-source-row-per-key cardinality guard.
     */
-  private def cdcReplicaBase(spark: SparkSession, sfDir: String): String = synchronized {
+  private def cdcReplicaBase(spark: SparkSession, sfDir: String): String = {
     val primary = versionedOrdersBase(spark, sfDir)
-    val root = scratch("cdc_replica", sfDir)
-    if (!Files.exists(Paths.get(root, "_DONE"))) {
-      deleteRecursively(root)
+    Scratch.once("cdc_replica", sfDir) { root =>
       VersionedTable.append(VersionedTable.snapshot(spark, primary, version = 1), root)
       val changes = VersionedTable.changesBetween(spark, primary, fromV = 1, toV = 3)
       val dels = changes.filter(col("_change_type") === "delete").drop("_change_type")
@@ -543,9 +447,7 @@ object IoQueries {
           deleteWhen = Some(lit(true)), insertWhen = Some(lit(false)))
       val ins = changes.filter(col("_change_type") === "insert").drop("_change_type")
       if (!ins.isEmpty) VersionedTable.append(ins, root)
-      Files.writeString(Paths.get(root, "_DONE"), "ok")
     }
-    root
   }
 
   /** q177: the rolled-forward replica — must equal the primary's v3 state

@@ -615,18 +615,6 @@ object VersionedTable {
     finally walk.close()
   }
 
-  /** Recursive directory delete (no-op if absent) — the single shared
-    * implementation; `IoQueries.deleteRecursively` delegates here.
-    */
-  private[graft] def deleteDir(p: java.nio.file.Path): Unit = {
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
-  }
-
   /** OPTIMIZE (bin-packing compaction): merge live file groups smaller than
     * `smallBytes` into ONE rewritten group; groups already at size carry
     * over by reference, rows are bit-identical before/after (the spec and
@@ -718,7 +706,7 @@ object VersionedTable {
       val doomed = Files.list(groupsDir).iterator().asScala.toSeq
         .filter(Files.isDirectory(_))
         .filterNot(p => retained.contains(s"groups/${p.getFileName}"))
-      doomed.foreach(deleteDir)
+      doomed.foreach(p => graft.core.Scratch.delete(p.toString))
       doomed.size
     }
   }

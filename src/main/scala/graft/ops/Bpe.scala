@@ -73,34 +73,18 @@ object Bpe {
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
 
   /** Trained-tokenizer memo: q117 and q118 share one training run per
-    * (session, sfDir, k) — same session-reference keying and stopped-session
-    * eviction as [[Dedup.cached]], with hits/misses bumped into the shared
-    * bench attribution counters under the `bpe` label. The cached segs frame
-    * is checkpointed, so reuse never replays the rounds.
+    * (session, dataset, k) through [[Dedup.memo]], counted under the `bpe`
+    * label. The cached segs frame is checkpointed, so reuse never replays
+    * the rounds.
     */
   private val trainedCache =
     scala.collection.concurrent.TrieMap[(SparkSession, String),
       (Seq[(String, String)], DataFrame)]()
 
   private def train(spark: SparkSession, sfDir: String, k: Int)
-      : (Seq[(String, String)], DataFrame) = trainedCache.synchronized {
-    trainedCache.keySet.foreach { kk =>
-      if (kk._1.sparkContext.isStopped) trainedCache.remove(kk)
-    }
-    val key = (spark, s"$sfDir#k=$k")
-    trainedCache.get(key) match {
-      case Some(r) =>
-        Dedup.cacheHits.computeIfAbsent("bpe",
-          _ => new java.util.concurrent.atomic.LongAdder).increment()
-        r
-      case None =>
-        val r = trainUncached(spark, sfDir, k)
-        trainedCache.put(key, r)
-        Dedup.cacheMisses.computeIfAbsent("bpe",
-          _ => new java.util.concurrent.atomic.LongAdder).increment()
-        r
-    }
-  }
+      : (Seq[(String, String)], DataFrame) =
+    Dedup.memo(trainedCache, "bpe", spark, sfDir, s"#k=$k")(
+      r => Dedup.releaseCheckpoint(r._2))(trainUncached(spark, sfDir, k))
 
   /** Candidates per batched merge round — ⌈k/BatchB⌉ driver round-trips
     * total. Mirrored EXACTLY by the oracle's per-round candidate/selection

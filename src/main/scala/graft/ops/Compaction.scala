@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -57,12 +55,10 @@ object Compaction {
     * by CompactionSpec.
     */
   def compactedLineitem(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val root = graft.io.IoQueries.scratch("compact", sfDir)
-    val frag = s"$root/fragmented"
-    if (!Files.exists(Paths.get(frag, "_SUCCESS"))) {
-      Tables.lineitem(spark, sfDir).repartition(64)
-        .write.mode("overwrite").parquet(frag)
+    val root = graft.core.Scratch.once("compact", sfDir) { d =>
+      Tables.lineitem(spark, sfDir).repartition(64).write.parquet(s"$d/fragmented")
     }
+    val frag = s"$root/fragmented"
     val total = dataFiles(spark, frag).map(_._2).sum
     compact(spark, frag, s"$root/compacted", targetBytes = math.max(1L, total / 4))
     spark.read.parquet(s"$root/compacted")

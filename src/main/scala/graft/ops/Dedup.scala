@@ -164,12 +164,10 @@ object Dedup {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** Cache traffic counters PER CACHE LABEL ("edges" = the verified-pair
-    * table here, "clusters" = [[Graph]]'s CC label table), drained by
-    * [[graft.Bench]] to attribute which queries PAID which materialization
-    * (miss) vs rode it for free (hit). A single shared counter pair would
-    * label a query that only materialized the cluster cache as having paid
-    * "the dedup chain" — the per-query timing diff the annotation exists for
-    * would then point at the wrong stage.
+    * table here, "clusters" = [[Graph]]'s CC label table), read by the memo
+    * specs to pin which calls PAID a materialization (miss) and which rode
+    * it for free (hit). Per label, so a call that only materialized the
+    * cluster cache is not counted as having paid "the dedup chain".
     */
   private[graft] val cacheMisses =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]
@@ -187,38 +185,63 @@ object Dedup {
     b.result()
   }
 
-  /** Memoize `body`'s eagerly-checkpointed result per (session, sfDir). The key
-    * holds the session REFERENCE — `SparkSession` keeps default identity
-    * equality, so this is the intended per-instance memo without the collision
-    * risk of `identityHashCode` (hashes are not unique, and a post-GC session
-    * could alias a stale entry bound to a dead SparkContext). Entries of
-    * stopped sessions are evicted on every access: their checkpoint blocks are
-    * gone with the context, and dropping the key is what lets the session be
-    * collected at all.
+  /** Memoize `body`'s eagerly-checkpointed result per (session, dataset);
+    * see [[memo]] for the key.
     */
   private[graft] def cached(
       cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
       label: String,
       spark: SparkSession, sfDir: String)(body: => DataFrame): DataFrame =
+    memo(cache, label, spark, sfDir)(releaseCheckpoint)(body.localCheckpoint(true))
+
+  /** Memoize `body` per (session, dataset, `variant`). The key holds the
+    * session REFERENCE — `SparkSession` keeps default identity equality, so
+    * this is the intended per-instance memo without the collision risk of
+    * `identityHashCode` (hashes are not unique, and a post-GC session could
+    * alias a stale entry bound to a dead SparkContext). The dataset part is
+    * its canonical path plus its [[graft.core.Scratch.stamp]], so a rewritten
+    * table misses; the entries its old content keyed are `release`d then,
+    * since no later lookup can reach them. Entries of stopped sessions are
+    * evicted on every access: their checkpoint blocks are gone with the
+    * context, and dropping the key is what lets the session be collected.
+    */
+  private[graft] def memo[V](
+      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), V],
+      label: String, spark: SparkSession, sfDir: String, variant: String = "")(
+      release: V => Unit)(body: => V): V =
     // whole lookup-or-compute under the cache's lock: TrieMap.getOrElseUpdate
     // evaluates its default on every racing thread, which would run the
     // expensive chain twice and strand one thread's eagerly-checkpointed
     // blocks with no handle to unpersist them. The body is minutes of Spark
-    // jobs; serializing the few-microsecond hit path costs nothing.
+    // jobs; serializing the sub-millisecond hit path costs nothing.
     cache.synchronized {
       cache.keySet.foreach { k =>
         if (k._1.sparkContext.isStopped) cache.remove(k)
       }
-      cache.get((spark, sfDir)) match {
-        case Some(df) =>
+      val dataset = graft.core.Scratch.canonical(sfDir) + "\u0000"
+      val current = dataset + graft.core.Scratch.stamp(sfDir)
+      val key = (spark, current + variant)
+      cache.get(key) match {
+        case Some(v) =>
           bump(cacheHits, label)
-          df
+          v
         case None =>
-          val df = body.localCheckpoint(true)
-          cache.put((spark, sfDir), df)
+          cache.keySet.foreach { k =>
+            if (k._2.startsWith(dataset) && !k._2.startsWith(current))
+              cache.remove(k).foreach(release)
+          }
+          val v = body
+          cache.put(key, v)
           bump(cacheMisses, label)
-          df
+          v
       }
+    }
+
+  /** Drop the blocks behind a `localCheckpoint`ed frame. */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
     }
 
   private[graft] def ngramJaccardCompute(spark: SparkSession, sfDir: String): DataFrame = {
@@ -555,7 +578,7 @@ object Dedup {
     * comparisons.
     */
   /** The UN-PERSISTED scoring frame behind [[containmentPairs]] — factored
-    * out so ExplainAudit/PlanSpec can see the real attach-join shape (the
+    * out so PlanSpec can see the real attach-join shape (the
     * public entry materializes through persist + localCheckpoint, whose
     * executedPlan is a bare ExistingRDD scan — the q17 audit caveat).
     */

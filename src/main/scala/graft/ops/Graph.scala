@@ -731,7 +731,7 @@ object Graph {
   }
 
   /** The census plan over a given undirected edge set + degree table —
-    * separated so ExplainAudit can see the join shape (the public wrapper
+    * separated so a plan audit can see the join shape (the public wrapper
     * materializes through localCheckpoint, whose executedPlan is a bare
     * scan — the q17 audit caveat). `broadcastEdgeLimit` gates the closure
     * broadcast at runtime (default 10M edges ≈ 160 MB of two longs): a

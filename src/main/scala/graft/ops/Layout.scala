@@ -63,7 +63,7 @@ object Layout {
     */
   private def dropStaleLocation(spark: SparkSession, table: String): Unit = {
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.io.IoQueries.deleteRecursively(s"$wh/$table")
+    graft.core.Scratch.delete(s"$wh/$table")
   }
 
   /** q139: revenue per order priority over the bucketed join. Both sides are
@@ -98,19 +98,13 @@ object Layout {
       .select(col("l_orderkey"), col("o_orderpriority"))
   }
 
-  /** Events laid out as partition directories by `event_type` (memoized per
-    * scale factor — one partitioned rewrite, then every reader prunes).
+  /** Events laid out as partition directories by `event_type` (staged once
+    * per dataset — one partitioned rewrite, then every reader prunes).
     */
-  private def partitionedEventsPath(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = graft.io.IoQueries.scratch("events_by_type", sfDir)
-    val done = java.nio.file.Paths.get(path, "_DONE")
-    if (!java.nio.file.Files.exists(done)) {
-      Tables.events(spark, sfDir).write.mode("overwrite")
-        .partitionBy("event_type").parquet(path)
-      java.nio.file.Files.writeString(done, "ok")
+  private def partitionedEventsPath(spark: SparkSession, sfDir: String): String =
+    graft.core.Scratch.once("events_by_type", sfDir) {
+      Tables.events(spark, sfDir).write.partitionBy("event_type").parquet(_)
     }
-    path
-  }
 
   /** The "hot" event types: average value above 50, decided by EXACT decimal
     * sums so both engines select the identical set (a double-sum average

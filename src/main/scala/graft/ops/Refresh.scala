@@ -181,16 +181,6 @@ object Refresh {
         .filter(pmod(col("doc_a"), lit(7)) =!= 0 && pmod(col("doc_b"), lit(7)) =!= 0)
         .select(col("doc_a"), col("doc_b")))
 
-  // dev-probe access (ProbeQ101Phases) to the private chain pieces
-  private[ops] def priorFeaturesForProbe(spark: SparkSession, sfDir: String): DataFrame =
-    priorFeatures(spark, sfDir)
-  private[ops] def priorEdgesForProbe(spark: SparkSession, sfDir: String): DataFrame =
-    priorEdges(spark, sfDir)
-  private[ops] def bandsFromSigForProbe(feat: DataFrame): DataFrame =
-    bandsFromSig(feat)
-  private[ops] def verifyPairsForProbe(cands: DataFrame, docs: DataFrame): DataFrame =
-    verifyPairs(cands, docs)
-
   /** V1's component labels (id, component) — the third stored artifact a
     * production refresh reads beside features and edges (a dedup pipeline
     * that writes its edge table writes its label table in the same job).

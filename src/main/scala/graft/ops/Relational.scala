@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,23 +21,17 @@ object Relational {
 
   // ------------------------------------------------------------------ S1: CSV scan
 
-  /** One-time materialization of lineitem as CSV (scratch under target/tmp), so the
-    * CSV ingest path is exercised against real files. Deterministic: content derives
-    * only from the source parquet.
+  /** One-time materialization of lineitem as CSV (a [[graft.core.Scratch]]
+    * staged copy), so the CSV ingest path is exercised against real files.
+    * Deterministic: content derives only from the source parquet.
     */
   private[graft] def csvCopyOfLineitem(spark: SparkSession, sfDir: String): String =
-      synchronized { graft.core.StagingClock.timed {
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val dest = s"/root/repo/target/tmp/csv/$sfName/lineitem"
-    if (!Files.exists(Paths.get(dest, "_SUCCESS"))) {
-      Tables.lineitem(spark, sfDir)
-        .write.mode("overwrite")
+    graft.core.Scratch.once("csv_lineitem", sfDir) {
+      Tables.lineitem(spark, sfDir).write
         .option("header", "true")
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .csv(dest)
+        .csv(_)
     }
-    dest
-  } }
 
   /** S1 + P1–P3 + U1: validated CSV ingest of the lineitem CSV drop, explicit
     * schema, canonical projection. Round-trips exactly (2-decimal doubles and

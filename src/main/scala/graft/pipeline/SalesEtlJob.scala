@@ -58,9 +58,9 @@ object SalesEtlJob {
   /** Run the pipeline once. `writeMetrics(df, tableName)` is the metric sink —
     * JDBC append in production (`graft.io.Jdbc.write(df, conn, table)`), a
     * test-local sink in specs. `onStage(label, seconds)` receives a wall-time
-    * split per sequential stage (default no-op) — the ProfileQ33 attribution
+    * split per sequential stage (default no-op) — the benchmark's span
     * hook; the job is inherently sequential, so in-place timing attributes
-    * exactly without the re-run-the-prefix protocol ProfileQ230 needs.
+    * exactly without re-running a prefix of the job.
     */
   def run(
       spark: SparkSession,

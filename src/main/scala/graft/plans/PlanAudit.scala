@@ -6,9 +6,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
-/** Structural physical-plan audits shared by PlanSpec (the regression gate)
-  * and [[graft.tools.ExplainAudit]] (the interactive flag dump). The
-  * headline check is the SINGLE-TASK-WINDOW detector: a `Window` with an
+/** Structural physical-plan audits behind PlanSpec (the regression gate).
+  * The headline check is the SINGLE-TASK-WINDOW detector: a `Window` with an
   * empty partitionSpec moves its whole input through ONE task — fatal at
   * 100 TB when the input is a full-table row stream, harmless when the
   * input was already reduced to a dictionary/bucket-sized aggregate (the
@@ -55,15 +54,4 @@ object PlanAudit {
       case _: BaseAggregateExec => true
       case _ => false
     }
-
-  /** One-line summary for [[graft.tools.ExplainAudit]]. */
-  def flags(df: DataFrame): String = {
-    val p = df.queryExecution.executedPlan.toString
-    s"exchanges=${"Exchange".r.findAllIn(p).size}" +
-      s" reused=${p.contains("ReusedExchange")}" +
-      s" bhj=${"BroadcastHashJoin".r.findAllIn(p).size}" +
-      s" smj=${"SortMergeJoin".r.findAllIn(p).size}" +
-      s" cartesian=${p.contains("CartesianProduct")}" +
-      s" rawGlobalWindows=${rawGlobalWindows(df)}"
-  }
 }

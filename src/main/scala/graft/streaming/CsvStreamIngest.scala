@@ -41,8 +41,7 @@ object CsvStreamIngest {
     * drop, read the sink back — must equal the source table exactly.
     */
   def ingestLineitemAvailableNow(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val root = graft.io.IoQueries.scratch("stream_ingest", sfDir)
-    graft.io.IoQueries.deleteRecursively(root)
+    val root = graft.core.Scratch.fresh("stream_ingest", sfDir)
     val src = graft.ops.Relational.csvCopyOfLineitem(spark, sfDir)
     drain(spark, src, s"$root/out", s"$root/chk", Tables.lineitemSchema)
     spark.read.schema(Tables.lineitemSchema).parquet(s"$root/out")

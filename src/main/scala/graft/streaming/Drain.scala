@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
@@ -50,24 +49,6 @@ private[streaming] object Drain {
       }
     }
 
-  /** Stable per-SF directory copy of a single-file testdata table for the
-    * streaming file source — the ONE check-`_SUCCESS`-then-overwrite staging
-    * body behind [[ScoreStream.docsDir]]/[[ScoreStream.embsDir]]/
-    * [[EventStream.eventsDir]] (a partially-written dest or a path-root
-    * change is now fixed in exactly one place). Timed as staging via
-    * [[graft.core.StagingClock]] when `timed`.
-    */
-  def stagedTableDir(sfDir: String, subdir: String, timed: Boolean = true)(
-      frame: => org.apache.spark.sql.DataFrame): String = synchronized {
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val dest = s"/root/repo/target/tmp/$subdir/$sfName"
-    if (!Files.exists(Paths.get(dest, "_SUCCESS"))) {
-      def write(): Unit = frame.write.mode("overwrite").parquet(dest)
-      if (timed) graft.core.StagingClock.timed(write()) else write()
-    }
-    dest
-  }
-
   /** A unique scratch checkpoint dir on the fastest ephemeral medium. */
   private def ephemeralCheckpoint(): Path = {
     val shm = Paths.get("/dev/shm")
@@ -75,11 +56,6 @@ private[streaming] object Drain {
       else Paths.get(sys.props("java.io.tmpdir"))
     Files.createTempDirectory(base, "graft-ckpt-")
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-    }
 
   /** Drain `ds` to completion (AvailableNow) into a memory sink and return
     * the accumulated table. The caller's post-processing runs as a plain
@@ -99,7 +75,7 @@ private[streaming] object Drain {
           .start()
         try q.processAllAvailable() finally q.stop()
       }
-    } finally deleteRecursively(ckpt)
+    } finally graft.core.Scratch.delete(ckpt.toString)
     spark.table(name)
   }
 }

@@ -42,10 +42,7 @@ object EventStream {
     * source parquet.
     */
   private[streaming] def eventsDir(spark: SparkSession, sfDir: String): String =
-    // untimed by original design: the events copy predates StagingClock and
-    // its cost is attributed to the first consumer, as every committed
-    // bench artifact has recorded it — keep the ledger stable
-    Drain.stagedTableDir(sfDir, "events", timed = false)(Tables.events(spark, sfDir))
+    graft.core.Scratch.once("events", sfDir)(Tables.events(spark, sfDir).write.parquet(_))
 
   /** The PRODUCTION shape of the hourly rollup: event-time watermark + append
     * output. Only windows the watermark has passed are emitted (exactly once,
@@ -326,11 +323,9 @@ object EventStream {
     * EventStreamSpec; this query exercises the single-drain round trip.
     */
   def hourlyRollupJdbcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val root = graft.io.IoQueries.scratch("jdbcstream", sfDir)
-    graft.core.StagingClock.timed {
-      graft.ledger.JdbcLedger.shutdownDerby(s"$root/db")
-    }
-    graft.io.IoQueries.deleteRecursively(root)
+    val root = graft.core.Scratch.dir("jdbcstream", sfDir)
+    graft.ledger.JdbcLedger.shutdownDerby(s"$root/db")
+    graft.core.Scratch.delete(root)
     val conn = graft.io.JdbcConn(s"jdbc:derby:$root/db;create=true")
     hourlyRollupToJdbc(spark, eventsDir(spark, sfDir), conn, "hourly_rollup", s"$root/chk")
     graft.io.Jdbc.read(spark, conn, "hourly_rollup")
@@ -543,8 +538,7 @@ object EventStream {
     * scenario.
     */
   def latestEventsUpsertState(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val root = graft.io.IoQueries.scratch("upsert_latest", sfDir)
-    graft.io.IoQueries.deleteRecursively(root)
+    val root = graft.core.Scratch.fresh("upsert_latest", sfDir)
     upsertLatestToTable(spark, eventsDir(spark, sfDir), s"$root/table", s"$root/chk")
     graft.io.VersionedTable.snapshot(spark, s"$root/table")
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),

@@ -29,20 +29,11 @@ object OrderStream {
     StructField("o_orderpriority", StringType)))
 
   /** The streaming file source needs a DIRECTORY; the testdata table is a
-    * single parquet file — stage a stable per-SF copy once (the
-    * [[ScoreStream.docsDir]] pattern), timed as staging.
+    * single parquet file — stage a stable per-dataset copy once (the
+    * [[ScoreStream.docsDir]] pattern).
     */
-  private[streaming] def ordersDir(spark: SparkSession, sfDir: String): String = synchronized {
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val dest = s"/root/repo/target/tmp/orders/$sfName"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dest, "_SUCCESS"))) {
-      graft.core.StagingClock.timed {
-        graft.core.Tables.orders(spark, sfDir)
-          .write.mode("overwrite").parquet(dest)
-      }
-    }
-    dest
-  }
+  private[streaming] def ordersDir(spark: SparkSession, sfDir: String): String =
+    graft.core.Scratch.once("orders", sfDir)(graft.core.Tables.orders(spark, sfDir).write.parquet(_))
 
   def dailyAnomalyAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     val orders = spark.readStream.schema(ordersSchema)

@@ -19,10 +19,10 @@ object ScoreStream {
 
   /** The streaming file source needs a DIRECTORY; the testdata table is a
     * single parquet file — stage a stable per-SF copy once (the
-    * [[EventStream.eventsDir]] pattern), timed as staging.
+    * [[EventStream.eventsDir]] pattern).
     */
   private[streaming] def docsDir(spark: SparkSession, sfDir: String): String =
-    Drain.stagedTableDir(sfDir, "docs")(graft.core.Tables.documents(spark, sfDir))
+    graft.core.Scratch.once("docs", sfDir)(graft.core.Tables.documents(spark, sfDir).write.parquet(_))
 
   /** STREAMING THRESHOLD SWEEP: documents arrive as a stream, the quality
     * score is the SAME per-row expression tree as the batch classifier
@@ -432,10 +432,10 @@ object ScoreStream {
     StructField("label", org.apache.spark.sql.types.IntegerType)))
 
   /** Stable per-SF directory copy of the embeddings table for the streaming
-    * file source (the [[docsDir]] pattern), timed as staging.
+    * file source (the [[docsDir]] pattern).
     */
   private[streaming] def embsDir(spark: SparkSession, sfDir: String): String =
-    Drain.stagedTableDir(sfDir, "embs")(graft.core.Tables.embeddings(spark, sfDir))
+    graft.core.Scratch.once("embs", sfDir)(graft.core.Tables.embeddings(spark, sfDir).write.parquet(_))
 
   /** STREAMING SEMANTIC-DECONTAMINATION MONITOR — q354's embedding-channel
     * leak audit live over an arriving TRAINING corpus (the TWELFTH

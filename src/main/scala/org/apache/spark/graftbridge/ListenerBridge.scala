@@ -2,10 +2,10 @@ package org.apache.spark.graftbridge
 
 import org.apache.spark.SparkContext
 
-/** `SparkContext.listenerBus` is private[spark]; the dev-tool task-metric
-  * listeners ([[graft.tools.TimeQuery]]) need `waitUntilEmpty` so a query's
-  * async task-end events are drained before attribution (r19 ADVICE: a fixed
-  * sleep can lose or misattribute events under a slow bus). Same pattern as
+/** `SparkContext.listenerBus` is private[spark]; task-metric listeners (the
+  * benchmark's tracer) need `waitUntilEmpty` so a query's async task-end
+  * events are drained before attribution (a fixed sleep can lose or
+  * misattribute events under a slow bus). Same pattern as
   * [[org.apache.spark.sql.graftbridge.ColumnBridge]] for private[sql].
   */
 object ListenerBridge {

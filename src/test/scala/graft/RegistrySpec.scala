@@ -109,8 +109,8 @@ class RegistrySpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"queries with no per-query number in ${best.get._2}: " +
         missing.toSeq.sorted.mkString(", ") +
-        " — run the clean bench (SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 " +
-        "runMain graft.Bench) and commit the artifact")
+        " — the sweep that wrote these artifacts is retired; replace this gate " +
+        "with perfbench's bounds (ROADMAP: legacy bench artifacts)")
   }
 
   test("no unexplained >2x movers between the two newest same-order clean benches") {

@@ -494,7 +494,7 @@ class VersionedTableSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val replica = IoQueries.cdcReplicaState(spark, sf)
     val primary = VersionedTable.snapshot(spark,
-      "/root/repo/target/tmp/versioned_orders/sf0.001", version = 3)
+      graft.core.Scratch.dir("versioned_orders", sf), version = 3)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
     assert(replica.exceptAll(primary).isEmpty && primary.exceptAll(replica).isEmpty)
@@ -503,7 +503,7 @@ class VersionedTableSpec extends SparkSpec {
   test("tags: last-writer-wins refs, unknown/invalid tags are loud, listing complete") {
     val sf = "/root/testdata/sf0.001"
     IoQueries.versionedByTag(spark, sf) // builds the base and tags v1 then v2
-    val base = "/root/repo/target/tmp/versioned_orders/sf0.001"
+    val base = graft.core.Scratch.dir("versioned_orders", sf)
     assert(VersionedTable.tagVersion(base, "audited") === 2, "re-tag moved the ref")
     VersionedTable.setTag(base, "rollback-point", 0)
     assert(VersionedTable.tags(base) ===

@@ -302,6 +302,32 @@ class DedupSpec extends SparkSpec {
         s"bucket $lo recount")
     }
   }
+
+  test("a rewritten documents table misses the verified-pair memo and releases the old entry") {
+    import spark.implicits._
+    val d = datasetCopy("/root/testdata/sf0.001", "dedup-memo")
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    def persisted(id: Int): Boolean = spark.sparkContext.getPersistentRDDs.contains(id)
+    try {
+      val first = Dedup.ngramJaccard(spark, d)
+      val before = pairs(first)
+      val oldRdds = first.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }
+      assert(before.nonEmpty && oldRdds.nonEmpty && oldRdds.forall(persisted))
+      val dropped = before.head._1
+      rewriteTable(d, "documents")(
+        _.filter(org.apache.spark.sql.functions.col("doc_id") =!= dropped))
+      val m0 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("edges", 0L)
+      val after = pairs(Dedup.ngramJaccard(spark, d))
+      assert(Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("edges", 0L) > m0,
+        "the rewritten table missed the memo")
+      assert(after === pairs(Dedup.ngramJaccardCompute(spark, d)))
+      assert(after != before && after.forall(p => p._1 != dropped && p._2 != dropped))
+      assert(!oldRdds.exists(persisted), "the superseded entry's blocks were released")
+    } finally graft.core.Scratch.delete(new java.io.File(d).getParent)
+  }
 }
 
 /** Test access to the package-private shingle builder. */

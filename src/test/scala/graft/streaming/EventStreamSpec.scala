@@ -29,7 +29,7 @@ class EventStreamSpec extends SparkSpec {
     val part = new java.io.File(s"$dir/$name").listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     Files.move(part.toPath, Paths.get(dir, s"$name.parquet"))
-    graft.io.IoQueries.deleteRecursively(s"$dir/$name")
+    graft.core.Scratch.delete(s"$dir/$name")
   }
 
   private def drain(src: String, out: String, chk: String): Unit = {
@@ -106,7 +106,7 @@ class EventStreamSpec extends SparkSpec {
       val part = new java.io.File(s"$root/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
-      graft.io.IoQueries.deleteRecursively(s"$root/stage")
+      graft.core.Scratch.delete(s"$root/stage")
     }
     def drainTrend(): Unit = {
       val q = EventStream.trendingWatermarked(
@@ -162,7 +162,7 @@ class EventStreamSpec extends SparkSpec {
       val part = new java.io.File(s"$root/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
-      graft.io.IoQueries.deleteRecursively(s"$root/stage")
+      graft.core.Scratch.delete(s"$root/stage")
     }
     // time-split mid-window so the 12:00 window can span both drains
     val split = "2024-01-16 12:30:00"
@@ -236,7 +236,7 @@ class EventStreamSpec extends SparkSpec {
       val part = new java.io.File(s"$root/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
-      graft.io.IoQueries.deleteRecursively(s"$root/stage")
+      graft.core.Scratch.delete(s"$root/stage")
     }
     val split = "2024-01-16 12:30:00"
     ship("b1", ev.filter(col("ts") < lit(split).cast("timestamp_ntz")))
@@ -347,7 +347,7 @@ class EventStreamSpec extends SparkSpec {
       val part = new java.io.File(s"$root/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
-      graft.io.IoQueries.deleteRecursively(s"$root/stage")
+      graft.core.Scratch.delete(s"$root/stage")
     }
     def twin(upTo: org.apache.spark.sql.DataFrame) = upTo
       .withColumn("rn", row_number().over(
@@ -402,7 +402,7 @@ class EventStreamSpec extends SparkSpec {
       val part = new java.io.File(s"$root/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
-      graft.io.IoQueries.deleteRecursively(s"$root/stage")
+      graft.core.Scratch.delete(s"$root/stage")
     }
     val full = graft.core.Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
@@ -433,7 +433,7 @@ class EventStreamSpec extends SparkSpec {
 
     // ACK: truncating the alerts table re-arms the alarm (the documented
     // pager-ack contract); the next drifted drain fires exactly once again
-    graft.io.IoQueries.deleteRecursively(s"$store/alerts")
+    graft.core.Scratch.delete(s"$store/alerts")
     ship("b4", full.withColumn("value", col("value") * 20.0))
     EventStream.psiAlertToTable(spark, src, ref, store, chk)
     assert(alerts().length == 1, "re-armed alarm fires once on the next crossing")
@@ -469,7 +469,7 @@ class EventStreamSpec extends SparkSpec {
       val part = new java.io.File(s"$root/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
-      graft.io.IoQueries.deleteRecursively(s"$root/stage")
+      graft.core.Scratch.delete(s"$root/stage")
     }
     def alertCount(): Int = {
       val fs = new java.io.File(s"$store/alerts").listFiles()

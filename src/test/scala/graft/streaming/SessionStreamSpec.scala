@@ -86,7 +86,7 @@ class SessionStreamSpec extends SparkSpec {
       val part = new java.io.File(s"$root/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
-      graft.io.IoQueries.deleteRecursively(s"$root/stage")
+      graft.core.Scratch.delete(s"$root/stage")
     }
     def readOut(): Seq[(Long, String, String, Long)] = {
       val f = new java.io.File(out)
@@ -129,7 +129,7 @@ class SessionStreamSpec extends SparkSpec {
       val part = new java.io.File(s"$root/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
-      graft.io.IoQueries.deleteRecursively(s"$root/stage")
+      graft.core.Scratch.delete(s"$root/stage")
     }
 
     // drain 1: user 7's open session [10:00, 10:10] — checkpointed, unemitted
@@ -165,7 +165,7 @@ class SessionStreamSpec extends SparkSpec {
       val part = new java.io.File(s"$root/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
-      graft.io.IoQueries.deleteRecursively(s"$root/stage")
+      graft.core.Scratch.delete(s"$root/stage")
     }
     // batch 1: session opens at 10:10 (watermark after: 10:00)
     writeBatch("b1", Seq((7L, "2024-01-01 10:10:00", 1.0)))
