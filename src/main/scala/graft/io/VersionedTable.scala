@@ -20,29 +20,33 @@ import org.apache.spark.sql.functions._
   *     lines: `action <name>`, `add <relative group dir>`,
   *     `remove <relative group dir>`. Version N's live set is the fold of
   *     manifests 0..N (adds minus removes).
-  *   - `groups/g<version>-<k>/` — immutable parquet "file groups". Data
-  *     files are NEVER mutated or deleted by commits; old versions stay
-  *     readable (time travel) until a vacuum (not modeled) reclaims them.
+  *   - `groups/g<version>-<k>/` (single-writer commits) and
+  *     `groups/w-<writerId>[-r<attempt>]/` (optimistic ones) — immutable
+  *     parquet "file groups". Data files are NEVER mutated or deleted by
+  *     commits; old versions stay readable (time travel) until [[vacuum]]
+  *     reclaims them.
   *
   * Commit protocol: data groups are fully written BEFORE the manifest, and
   * the manifest lands by write-to-temp + atomic PUT-IF-ABSENT
   * ([[tryCommitAt]]) — a reader either sees version N complete or not at
   * all, and a crashed writer leaves only unreferenced data (cleaned by
   * vacuum), never a torn table. Multi-writer follows Delta's optimistic
-  * model: every commit conditionally claims its version number, losers of
-  * the race DETECT the conflict (never overwrite the winner), and
-  * [[appendOptimistic]]/[[deleteWhereOptimistic]] retry — an append
-  * re-submits the same manifest (blind appends conflict with nothing), a
-  * delete re-resolves its rewrite set against the new snapshot first. On an
-  * object store the conditional put is `If-None-Match`; here it is a hard
-  * link (POSIX atomic create-if-absent).
+  * model: every commit goes through one loop ([[commitLoop]]) that
+  * conditionally claims its version number; losers of the race DETECT the
+  * conflict (never overwrite the winner). The `*Optimistic` writers retry —
+  * an append re-submits the same manifest (blind appends conflict with
+  * nothing), a delete or merge re-resolves against the new snapshot first —
+  * and the single-writer ones throw. On an object store the conditional put
+  * is `If-None-Match`; here it is a hard link (POSIX atomic
+  * create-if-absent).
   *
   * Scale shape: ALL log operations are manifest-sized (file counts, not row
   * counts) — snapshot resolution reads a handful of text files driver-side,
   * the same work a Delta driver does, then hands Spark one multi-path
-  * parquet read. [[deleteWhere]] is copy-on-write at FILE-GROUP granularity:
-  * one pruning job finds the groups that actually contain matching rows
-  * (`input_file_name` aggregated to groups), only those are rewritten;
+  * parquet read. DELETE and MERGE are copy-on-write at FILE-GROUP
+  * granularity: one pruning job finds the groups that actually contain
+  * matching rows (`input_file_name` aggregated to groups), one job reads
+  * those groups together, transforms them and writes ONE replacement group;
   * untouched groups carry over by reference. A delete matching 1% of rows
   * rewrites ~1% of the data, not the table.
   */
@@ -50,12 +54,16 @@ object VersionedTable {
 
   private def logDir(base: String) = Paths.get(base, "_log")
 
-  /** Group rel-path (`groups/<dirname>`) of a data-file path, computed inside
-    * the Spark job so touched-group discovery collects group names, not file
-    * names — O(groups) driver rows and an exact hash-set probe downstream.
+  private val GroupCol = "__graft_g"
+
+  /** `df` tagged with each row's group rel-path (`groups/<dirname>`), taken
+    * from `input_file_name` inside the Spark job so touched-group discovery
+    * collects group names, not file names. The tag must bind to the scan
+    * BEFORE any join — after one the expression has two sources and
+    * analysis rejects it.
     */
-  private def groupRelOf(file: Column): Column =
-    regexp_extract(file, "/(groups/[^/]+)/", 1)
+  private def withGroup(df: DataFrame): DataFrame =
+    df.withColumn(GroupCol, regexp_extract(input_file_name(), "/(groups/[^/]+)/", 1))
 
   /** An added file group, optionally carrying min/max stats for ONE declared
     * clustering column — the manifest-level data-skipping index. Stats are
@@ -143,25 +151,43 @@ object VersionedTable {
     finally Files.deleteIfExists(tmp)
   }
 
-  /** Single-writer commit — now conflict-DETECTING: losing the version race
-    * throws instead of silently overwriting the winner (the pre-conditional
-    * rename could clobber a concurrent manifest). Snapshot-dependent callers
-    * (delete/merge/optimize) must fail loudly here; retry belongs to the
-    * optimistic variants, which re-derive their changes first.
+  /** The one commit loop. Each attempt reads the latest version `v`, lets
+    * `resolve(v, attempt)` derive the commit (action, added groups, removed
+    * rel-paths) against it, and conditionally puts it as `v + 1`. Losing
+    * the race re-resolves against the new snapshot, at most `maxRetries`
+    * times; then the loss throws. Single-writer callers pass 0: they fail
+    * loudly instead of overwriting the winner. `beforeCommit(attempt)` is a
+    * test seam between resolution and the put — the specs use it to force
+    * a deterministic interleave.
+    */
+  @annotation.tailrec
+  private def commitLoop(base: String, maxRetries: Int = 0,
+      beforeCommit: Int => Unit = _ => (), attempt: Int = 0)(
+      resolve: (Int, Int) => (String, Seq[Group], Seq[String])): Int = {
+    val v = latestVersion(base)
+    val (action, add, remove) = resolve(v, attempt)
+    beforeCommit(attempt)
+    if (tryCommitAt(base, v + 1, action, add, remove)) v + 1
+    else if (attempt < maxRetries) commitLoop(base, maxRetries, beforeCommit, attempt + 1)(resolve)
+    else throw new java.util.ConcurrentModificationException(
+      s"$action lost version ${v + 1} of $base to another writer " +
+        s"(attempt ${attempt + 1} of ${maxRetries + 1}); the *Optimistic variants " +
+        "re-derive against the new snapshot and retry")
+  }
+
+  /** Commit an append — a change that depends on no snapshot — as the next
+    * version, single-writer.
     */
   private def commit(base: String, action: String, add: Seq[Group],
-      remove: Seq[String]): Int = {
-    val v = latestVersion(base) + 1
-    if (!tryCommitAt(base, v, action, add, remove))
-      throw new java.util.ConcurrentModificationException(
-        s"version $v of $base was committed by another writer; " +
-          "re-derive against the new snapshot (see the *Optimistic variants)")
-    v
-  }
+      remove: Seq[String]): Int =
+    commitLoop(base)((_, _) => (action, add, remove))
+
+  /** Rel-path of group `k` of a single-writer commit of `version`. */
+  private def groupRel(version: Int, k: Int = 0): String = f"groups/g$version%05d-$k"
 
   private def writeGroup(df: DataFrame, base: String, version: Int, k: Int,
       statsCol: Option[String] = None): Option[Group] =
-    writeGroupNamed(df, base, f"groups/g$version%05d-$k", statsCol)
+    writeGroupNamed(df, base, groupRel(version, k), statsCol)
 
   /** Write one immutable file group under an EXPLICIT rel-path — the
     * version-named convention above for single-writer commits, writer-unique
@@ -184,6 +210,34 @@ object VersionedTable {
     }
   }
 
+  /** Rewrite `groups` as ONE group at `rel`: one multi-path read of all of
+    * them, `f` over it, one write. The read merges schemas — on an evolved
+    * history a single-footer read would silently drop the columns present
+    * in only some groups. The new group keeps a stats column only when
+    * EVERY input declared the same one (min/max re-collected by
+    * [[writeGroupNamed]]); mixed histories drop stats rather than lie.
+    */
+  private def rewrite(spark: SparkSession, base: String, groups: Seq[Group],
+      rel: String)(f: DataFrame => DataFrame): Option[Group] = {
+    val read = spark.read.option("mergeSchema", "true")
+      .parquet(groups.map(g => s"$base/${g.rel}"): _*)
+    val statsCol = groups.map(_.statsCol).distinct match {
+      case Seq(only @ Some(_)) => only
+      case _ => None
+    }
+    writeGroupNamed(f(read), base, rel, statsCol)
+  }
+
+  /** The live groups of version `v` that hold a row of `rows`, a frame
+    * [[withGroup]]-tagged at version `v`'s snapshot scan. One pruning job;
+    * the driver collects O(touched groups) names and probes a hash set —
+    * never O(files × groups) substring scans over the manifest.
+    */
+  private def touchedGroups(base: String, v: Int, rows: DataFrame): Seq[Group] = {
+    val rels = rows.select(GroupCol).distinct().collect().map(_.getString(0)).toSet
+    liveGroups(base, v).filter(g => rels.contains(g.rel))
+  }
+
   /** Append `df` as a new file group. */
   def append(df: DataFrame, base: String): Int = {
     val v = latestVersion(base) + 1
@@ -192,66 +246,18 @@ object VersionedTable {
 
   /** Multi-writer APPEND under optimistic concurrency. The data group is
     * written ONCE under a writer-unique name (`groups/w-<writerId>`, so
-    * version-number races never become data-directory races), then the
-    * manifest loop claims the next version via [[tryCommitAt]]'s conditional
-    * put; losing a round means another writer's commit landed first — a
-    * blind append conflicts with NOTHING semantically (Delta's own rule), so
-    * the loser simply re-reads the new latest version and retries the same
-    * manifest. `writerId` must be unique per in-flight commit (the Delta
-    * `txnAppId` discipline); `beforeCommit(attempt)` is a test seam invoked
-    * between version resolution and the conditional put — the spec uses it
-    * to force a deterministic interleave.
+    * version-number races never become data-directory races), then
+    * [[commitLoop]] claims the next version; losing a round means another
+    * writer's commit landed first — a blind append conflicts with NOTHING
+    * semantically (Delta's own rule), so the loser simply retries the same
+    * manifest on the new latest version. `writerId` must be unique per
+    * in-flight commit (the Delta `txnAppId` discipline); `beforeCommit` is
+    * [[commitLoop]]'s test seam.
     */
   def appendOptimistic(df: DataFrame, base: String, writerId: String,
       maxRetries: Int = 10, beforeCommit: Int => Unit = _ => ()): Int = {
     val group = writeGroupNamed(df, base, s"groups/w-$writerId").toSeq
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val v = latestVersion(base) + 1
-      beforeCommit(attempt)
-      if (tryCommitAt(base, v, "append", group, Seq.empty)) return v
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"append by $writerId lost the commit race $maxRetries times in $base")
-  }
-
-  /** Multi-writer COPY-ON-WRITE DELETE under optimistic concurrency. Unlike
-    * [[appendOptimistic]], a delete's rewrite set DEPENDS on the snapshot it
-    * read, so losing the version race forces full re-resolution: the loser
-    * re-reads the new latest snapshot, re-discovers touched groups, rewrites
-    * them afresh (attempt-unique names) and tries again. Data groups from
-    * abandoned attempts are unreferenced — vacuum's crashed-writer sweep
-    * reclaims them, exactly the Delta story. The predicate must be
-    * deterministic; `beforeCommit` is the same test seam as append's.
-    */
-  def deleteWhereOptimistic(spark: SparkSession, base: String,
-      predicate: Column, writerId: String, maxRetries: Int = 5,
-      beforeCommit: Int => Unit = _ => ()): Int = {
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val v = latestVersion(base)
-      require(v >= 0, s"no committed version in $base")
-      val live = liveGroups(base, v)
-      val touchedRels = snapshot(spark, base, v).filter(predicate)
-        .select(groupRelOf(input_file_name()).as("g")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val touched = live.filter(g => touchedRels.contains(g.rel))
-      val (action, add, remove) =
-        if (touched.isEmpty) ("delete_noop", Seq.empty[Group], Seq.empty[String])
-        else {
-          val rewritten = touched.zipWithIndex.flatMap { case (g, k) =>
-            writeGroupNamed(spark.read.parquet(s"$base/${g.rel}").filter(!predicate),
-              base, s"groups/w-$writerId-r$attempt-$k", g.statsCol)
-          }
-          ("delete", rewritten, touched.map(_.rel))
-        }
-      beforeCommit(attempt)
-      if (tryCommitAt(base, v + 1, action, add, remove)) return v + 1
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"delete by $writerId lost the commit race $maxRetries times in $base")
+    commitLoop(base, maxRetries, beforeCommit)((_, _) => ("append", group, Seq.empty))
   }
 
   /** Append `df` range-CLUSTERED on a numeric column into `nGroups` file
@@ -343,47 +349,60 @@ object VersionedTable {
   /** Copy-on-write DELETE WHERE: rewrite ONLY the file groups that contain
     * matching rows; groups the predicate never touches carry over by
     * reference (the file-pruning property VersionedTableSpec pins). One
-    * Spark job prunes (matching files → owning groups), one rewrite job per
-    * touched group, one manifest.
+    * Spark job prunes (matching files → owning groups), one job rewrites
+    * all touched groups, minus the matching rows, as ONE new group, one
+    * manifest. A delete that matches nothing commits `delete_noop`. Losing
+    * the version race to another writer throws; [[deleteWhereOptimistic]]
+    * retries instead.
     */
-  def deleteWhere(spark: SparkSession, base: String, predicate: Column): Int = {
-    val v = latestVersion(base)
+  def deleteWhere(spark: SparkSession, base: String, predicate: Column): Int =
+    commitLoop(base)((v, _) => deleteAt(spark, base, predicate, v, groupRel(v + 1)))
+
+  /** Multi-writer COPY-ON-WRITE DELETE under optimistic concurrency. Unlike
+    * [[appendOptimistic]], a delete's rewrite set DEPENDS on the snapshot it
+    * read, so losing the version race forces full re-resolution: the loser
+    * re-reads the new latest snapshot, re-discovers touched groups, rewrites
+    * them afresh (under the attempt-unique `groups/w-<writerId>-r<attempt>`)
+    * and tries again. Data groups from abandoned attempts are unreferenced —
+    * vacuum's crashed-writer sweep reclaims them, exactly the Delta story.
+    * The predicate must be deterministic; `beforeCommit` is [[commitLoop]]'s
+    * test seam.
+    */
+  def deleteWhereOptimistic(spark: SparkSession, base: String,
+      predicate: Column, writerId: String, maxRetries: Int = 5,
+      beforeCommit: Int => Unit = _ => ()): Int =
+    commitLoop(base, maxRetries, beforeCommit)((v, attempt) =>
+      deleteAt(spark, base, predicate, v, s"groups/w-$writerId-r$attempt"))
+
+  /** One delete attempt against version `v`: its touched groups rewritten,
+    * without the matching rows, as one group at `rel`.
+    */
+  private def deleteAt(spark: SparkSession, base: String, predicate: Column,
+      v: Int, rel: String): (String, Seq[Group], Seq[String]) = {
     require(v >= 0, s"no committed version in $base")
-    val live = liveGroups(base, v)
-    // group rel-paths are extracted from input_file_name IN the Spark job, so
-    // the driver collects O(touched groups) rows and probes a hash set —
-    // never O(files × groups) substring scans over the manifest
-    val touchedRels = snapshot(spark, base).filter(predicate)
-      .select(groupRelOf(input_file_name()).as("g")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val touched = live.filter(g => touchedRels.contains(g.rel))
-    if (touched.isEmpty) commit(base, "delete_noop", Seq.empty, Seq.empty)
-    else {
-      val next = v + 1
-      val rewritten = touched.zipWithIndex.flatMap { case (g, k) =>
-        // a clustered group keeps its stats column: the rewrite re-collects
-        // min/max over the kept rows so skipping stays tight after deletes
-        writeGroup(spark.read.parquet(s"$base/${g.rel}").filter(!predicate),
-          base, next, k, g.statsCol)
-      }
-      commit(base, "delete", rewritten, touched.map(_.rel))
-    }
+    val touched = touchedGroups(base, v, withGroup(snapshot(spark, base, v).filter(predicate)))
+    if (touched.isEmpty) ("delete_noop", Seq.empty, Seq.empty)
+    // a row whose predicate is NULL was not matched: it stays
+    else ("delete", rewrite(spark, base, touched, rel)(
+      _.filter(!coalesce(predicate, lit(false)))).toSeq, touched.map(_.rel))
   }
 
   /** Versioned MERGE INTO — [[graft.ops.Merge]]'s row semantics committed
-    * through the copy-on-write protocol: groups containing MATCHED target
-    * keys are rewritten through `mergeInto` (update/delete clauses, inserts
-    * suppressed — an existing group never absorbs new rows), not-matched
-    * source rows land as ONE fresh append group, untouched groups carry
-    * over by reference, and the whole thing is a single atomic commit.
-    * Each rewrite joins one group against the slice of the source matching
-    * ITS keys, so rewrite cost scales with touched data; the cardinality
+    * through the copy-on-write protocol: the groups containing a source key
+    * are read together and run through ONE `mergeInto` with the caller's
+    * full clause set, and its output — updated and carried rows of those
+    * groups plus the inserted source rows — lands as ONE new group.
+    * Inserts need no second pass over the snapshot: a source key found in
+    * no touched group is, by definition, in no live group. Untouched groups
+    * carry over by reference, and the whole thing is a single atomic
+    * commit, so rewrite cost scales with touched data. The cardinality
     * guard inside `mergeInto` rides along unchanged (an ambiguous source
-    * fails the commit before any manifest lands — data groups written by
-    * the failed attempt are unreferenced garbage for vacuum, exactly the
+    * fails the commit before any manifest lands — the group written by the
+    * failed attempt is unreferenced garbage for vacuum, exactly the
     * crashed-writer story). With `evolveSchema` on, source columns the
     * target lacks join the schema additively (Delta's mergeSchema on
-    * MERGE); read the result with [[snapshotEvolved]].
+    * MERGE); read the result with [[snapshotEvolved]]. Losing the version
+    * race to another writer throws; [[mergeOptimistic]] retries instead.
     */
   def merge(spark: SparkSession, base: String, source: DataFrame,
       keys: Seq[String],
@@ -391,31 +410,23 @@ object VersionedTable {
       updateSet: Map[String, Column] = Map.empty,
       deleteWhen: Option[Column] = None,
       insertWhen: Option[Column] = None,
-      evolveSchema: Boolean = false): Int = {
-    val (next, add, remove) = mergeResolve(spark, base, source, keys,
-      updateWhen, updateSet, deleteWhen, insertWhen, evolveSchema,
-      (nv, k) => f"groups/g$nv%05d-$k")
-    if (!tryCommitAt(base, next, "merge", add, remove))
-      throw new java.util.ConcurrentModificationException(
-        s"version $next of $base was committed by another writer; " +
-          "use mergeOptimistic to re-resolve and retry")
-    next
-  }
+      evolveSchema: Boolean = false): Int =
+    commitLoop(base)((v, _) => mergeAt(spark, base, source, keys, updateWhen,
+      updateSet, deleteWhen, insertWhen, evolveSchema, v, groupRel(v + 1)))
 
-  /** Multi-writer MERGE under optimistic concurrency — [[merge]] with the
-    * re-derive-and-retry loop [[deleteWhereOptimistic]] already has. A
-    * merge's rewrite set AND its row results depend on the snapshot it
-    * read, so losing the version race forces full re-resolution: the loser
-    * re-reads the new latest snapshot, re-discovers touched groups,
-    * re-runs the row-level merge against the NEW target rows (an update
-    * that was a no-op against the old snapshot may now apply, and vice
-    * versa — this is what blind retry of the stale manifest would corrupt),
-    * writes fresh writer-unique groups and tries the conditional put again.
-    * Abandoned attempts leave only unreferenced data for vacuum's
+  /** Multi-writer MERGE under optimistic concurrency — [[merge]] through the
+    * same re-derive-and-retry loop as [[deleteWhereOptimistic]]. A merge's
+    * rewrite set AND its row results depend on the snapshot it read, so
+    * losing the version race forces full re-resolution: the loser re-reads
+    * the new latest snapshot, re-discovers touched groups, re-runs the
+    * row-level merge against the NEW target rows (an update that was a
+    * no-op against the old snapshot may now apply, and vice versa — this is
+    * what blind retry of the stale manifest would corrupt), writes a fresh
+    * `groups/w-<writerId>-r<attempt>` group and tries the conditional put
+    * again. Abandoned attempts leave only unreferenced data for vacuum's
     * crashed-writer sweep. `writerId` must be unique per in-flight commit;
-    * `beforeCommit(attempt)` is the same test seam as the other optimistic
-    * variants — the spec uses it to force two merging writers onto the same
-    * version number.
+    * `beforeCommit` is [[commitLoop]]'s test seam — the spec uses it to
+    * force two merging writers onto the same version number.
     */
   def mergeOptimistic(spark: SparkSession, base: String, source: DataFrame,
       keys: Seq[String],
@@ -426,43 +437,29 @@ object VersionedTable {
       evolveSchema: Boolean = false,
       writerId: String,
       maxRetries: Int = 5,
-      beforeCommit: Int => Unit = _ => ()): Int = {
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val (next, add, remove) = mergeResolve(spark, base, source, keys,
-        updateWhen, updateSet, deleteWhen, insertWhen, evolveSchema,
-        (_, k) => s"groups/w-$writerId-r$attempt-$k")
-      beforeCommit(attempt)
-      if (tryCommitAt(base, next, "merge", add, remove)) return next
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"merge by $writerId lost the commit race $maxRetries times in $base")
-  }
+      beforeCommit: Int => Unit = _ => ()): Int =
+    commitLoop(base, maxRetries, beforeCommit)((v, attempt) => mergeAt(spark, base,
+      source, keys, updateWhen, updateSet, deleteWhen, insertWhen, evolveSchema,
+      v, s"groups/w-$writerId-r$attempt"))
 
-  /** One merge attempt against the CURRENT latest snapshot: resolves touched
-    * groups, runs the row-level merge per group, writes rewritten + insert
-    * groups under `relName(nextVersion, k)` and returns the commit triple
-    * (nextVersion, adds, removes) — the caller owns the conditional put.
+  /** One merge attempt against version `v`: its touched groups merged with
+    * the whole source, inserts included, as one group at `rel`.
     */
-  private def mergeResolve(spark: SparkSession, base: String, source: DataFrame,
+  private def mergeAt(spark: SparkSession, base: String, source: DataFrame,
       keys: Seq[String],
       updateWhen: Option[Column],
       updateSet: Map[String, Column],
       deleteWhen: Option[Column],
       insertWhen: Option[Column],
       evolveSchema: Boolean,
-      relName: (Int, Int) => String): (Int, Seq[Group], Seq[String]) = {
-    val v = latestVersion(base)
+      v: Int, rel: String): (String, Seq[Group], Seq[String]) = {
     require(v >= 0, s"no committed version in $base")
-    val live = liveGroups(base, v)
     // With evolution on, source columns absent from the target join the
-    // schema (Delta's mergeSchema on MERGE): each REWRITTEN or INSERTED
-    // group carries them, untouched groups keep their old schema (no
-    // history rewrite), and snapshotEvolved reads the union. The snapshot
-    // itself reads mergeSchema too, so evolving an already-evolved table
-    // composes.
-    val snap0 = snapshot(spark, base, mergeSchema = evolveSchema)
+    // schema (Delta's mergeSchema on MERGE): the REWRITTEN group carries
+    // them, untouched groups keep their old schema (no history rewrite), and
+    // snapshotEvolved reads the union. The snapshot itself reads mergeSchema
+    // too, so evolving an already-evolved table composes.
+    val snap = snapshot(spark, base, v, mergeSchema = evolveSchema)
     // new-column detection must use the SESSION's resolution rules: under the
     // default caseSensitive=false a source column differing only in case is
     // the SAME column (treating it as new would let widen's withColumn
@@ -471,49 +468,28 @@ object VersionedTable {
       spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
     def fold(n: String): String =
       if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-    val existing = snap0.columns.map(fold).toSet
+    val existing = snap.columns.map(fold).toSet
     val newCols =
       if (evolveSchema) source.schema.fields.filterNot(f => existing.contains(fold(f.name)))
       else Array.empty[org.apache.spark.sql.types.StructField]
-    def widen(df: DataFrame): DataFrame =
-      newCols.foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-    val snap = widen(snap0)
-    val keyCols = keys.map(col)
-
-    // input_file_name() must bind to the scan BEFORE the join — after it the
-    // expression has two sources and analysis rejects it. The group rel-path
-    // is extracted in-job (see [[groupRelOf]]) so the driver collects
-    // O(touched groups) and probes a set, not O(files × groups) substrings.
-    val touchedRels = snap0.withColumn("__graft_g", groupRelOf(input_file_name()))
-      .join(source.select(keyCols: _*).distinct(), keys)
-      .select(col("__graft_g")).distinct().collect().map(_.getString(0)).toSet
-    val touched = live.filter(g => touchedRels.contains(g.rel))
-
-    val next = v + 1
-    val rewritten = touched.zipWithIndex.flatMap { case (g, k) =>
-      val groupDf = widen(spark.read.parquet(s"$base/${g.rel}"))
-      val groupSource = source.join(groupDf.select(keyCols: _*).distinct(), keys, "left_semi")
-      writeGroupNamed(
-        graft.ops.Merge.mergeInto(groupDf, groupSource, keys,
-          updateWhen = updateWhen, updateSet = updateSet,
-          deleteWhen = deleteWhen, insertWhen = Some(lit(false))),
-        base, relName(next, k), g.statsCol)
+    // the merge target has every snapshot column plus the new ones, whatever
+    // subset of them the touched groups hold; the missing read typed NULL
+    def widen(df: DataFrame): DataFrame = {
+      val present = df.columns.map(fold).toSet
+      (snap.schema.fields ++ newCols).filterNot(f => present.contains(fold(f.name)))
+        .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
     }
-    // not-matched source rows, projected to the target schema, as one group;
-    // the source is aliased `s` so insertWhen can use the same `s.<col>`
-    // vocabulary as the matched-clause conditions
-    val inserts = source.as("s")
-      .join(snap.select(keyCols: _*).distinct(), keys, "left_anti")
-      .filter(insertWhen.getOrElse(lit(true)))
-    val targetCols = snap.columns.toSeq
-    val insertDf = inserts.select(targetCols.map(c =>
-      (if (inserts.columns.contains(c)) col(c)
-       else lit(null).cast(snap.schema(c).dataType)).as(c)): _*)
-    val insertGroup =
-      if (insertDf.isEmpty) None
-      else writeGroupNamed(insertDf, base, relName(next, touched.size))
-
-    (next, rewritten ++ insertGroup.toSeq, touched.map(_.rel))
+    val touched = touchedGroups(base, v,
+      withGroup(snap).join(source.select(keys.map(col): _*).distinct(), keys))
+    def merged(target: DataFrame): DataFrame =
+      graft.ops.Merge.mergeInto(widen(target), source, keys,
+        updateWhen = updateWhen, updateSet = updateSet,
+        deleteWhen = deleteWhen, insertWhen = insertWhen)
+    // nothing touched: the merge is inserts only, over an empty target
+    val add =
+      if (touched.isEmpty) writeGroupNamed(merged(snap.filter(lit(false))), base, rel)
+      else rewrite(spark, base, touched, rel)(merged)
+    ("merge", add.toSeq, touched.map(_.rel))
   }
 
   /** Append `df` hash-sliced on `keyCol` into `nGroups` file groups, each
@@ -621,35 +597,48 @@ object VersionedTable {
     * the q137 oracle both pin it). This is the versioned flavor of
     * [[graft.ops.Compaction]]: the rewrite is a new commit, so readers never
     * see a half-compacted table and time travel to the fragmented history
-    * still works. The merged group keeps a stats column only when EVERY
-    * input group declared the same one (min/max re-collected by
-    * [[writeGroup]]); mixed histories drop stats rather than lie.
+    * still works. The stats and schema rules are [[rewrite]]'s, the same
+    * as for a delete or merge rewrite.
     *
     * Scale shape: the small-group scan is one multi-path parquet read sized
     * by the data being compacted, not the table; at 100 TB you run this
     * per-partition with a size target, same log contents.
     */
-  def optimize(spark: SparkSession, base: String, smallBytes: Long = 64L << 20): Int = {
-    val v = latestVersion(base)
-    require(v >= 0, s"no committed version in $base")
-    val small = liveGroups(base, v)
-      .filter(g => dirSize(Paths.get(base, g.rel)) < smallBytes)
-    if (small.size < 2) commit(base, "optimize_noop", Seq.empty, Seq.empty)
-    else {
-      val next = v + 1
-      // mergeSchema: compacting a schema-EVOLVED history must union the
-      // group schemas — a single-footer read would silently drop columns
-      // present in only some groups, destroying them for every later read
-      val merged = spark.read.option("mergeSchema", "true")
-        .parquet(small.map(g => s"$base/${g.rel}"): _*)
-      val statsCol = small.map(_.statsCol).distinct match {
-        case Seq(only @ Some(_)) => only
-        case _ => None
-      }
-      commit(base, "optimize",
-        writeGroup(merged, base, next, 0, statsCol).toSeq, small.map(_.rel))
+  def optimize(spark: SparkSession, base: String, smallBytes: Long = 64L << 20): Int =
+    commitLoop(base) { (v, _) =>
+      require(v >= 0, s"no committed version in $base")
+      val small = liveGroups(base, v)
+        .filter(g => dirSize(Paths.get(base, g.rel)) < smallBytes)
+      if (small.size < 2) ("optimize_noop", Seq.empty, Seq.empty)
+      else ("optimize", rewrite(spark, base, small, groupRel(v + 1))(identity).toSeq,
+        small.map(_.rel))
     }
-  }
+
+  /** RESTORE the table to version `toVersion`'s live set, as a NEW commit —
+    * Delta's RESTORE semantics: history stays append-only (the restore is
+    * itself a version, so it can be time-traveled past or restored over
+    * again) and NO data is copied — the target version's groups are
+    * re-referenced and the current-only groups de-referenced in one
+    * manifest. The operational "bad deploy" undo: a wrong MERGE or DELETE
+    * is reversed in O(manifest) time at any table size. Fails loudly if
+    * [[vacuum]] already reclaimed a group the target version needs — the
+    * restore horizon IS the vacuum retention window, exactly Delta's
+    * contract.
+    */
+  def restore(base: String, toVersion: Int): Int =
+    commitLoop(base) { (v, _) =>
+      require(toVersion >= 0 && toVersion <= v,
+        s"cannot restore $base to v$toVersion (latest is v$v)")
+      val target = liveGroups(base, toVersion)
+      val missing = target.map(_.rel).filterNot(r => Files.exists(Paths.get(base, r)))
+      require(missing.isEmpty,
+        s"cannot restore $base to v$toVersion: vacuum reclaimed ${missing.mkString(", ")}")
+      val current = liveGroups(base, v)
+      val currentRels = current.map(_.rel).toSet
+      val targetRels = target.map(_.rel).toSet
+      ("restore", target.filterNot(g => currentRels.contains(g.rel)),
+        current.map(_.rel).filterNot(targetRels.contains))
+    }
 
   /** VACUUM: physically delete group directories referenced by NO retained
     * version. The newest `retainVersions` versions stay fully readable;
@@ -663,37 +652,11 @@ object VersionedTable {
     * under this table's single-writer design — an in-flight append's
     * not-yet-committed group is indistinguishable from a crashed writer's
     * orphan, so running vacuum concurrently with a writer can delete data
-    * out from under a commit about to land. A multi-writer deployment
-    * needs the conditional-put commit variant plus an age-based retention
-    * window before orphan sweeping, exactly as Delta's VACUUM does.
+    * out from under a commit about to land. The conditional put guards
+    * manifests, not in-flight groups: a multi-writer deployment also needs
+    * an age-based retention window before orphan sweeping, exactly as
+    * Delta's VACUUM does.
     */
-  /** RESTORE the table to version `toVersion`'s live set, as a NEW commit —
-    * Delta's RESTORE semantics: history stays append-only (the restore is
-    * itself a version, so it can be time-traveled past or restored over
-    * again) and NO data is copied — the target version's groups are
-    * re-referenced and the current-only groups de-referenced in one
-    * manifest. The operational "bad deploy" undo: a wrong MERGE or DELETE
-    * is reversed in O(manifest) time at any table size. Fails loudly if
-    * [[vacuum]] already reclaimed a group the target version needs — the
-    * restore horizon IS the vacuum retention window, exactly Delta's
-    * contract.
-    */
-  def restore(base: String, toVersion: Int): Int = {
-    val v = latestVersion(base)
-    require(toVersion >= 0 && toVersion <= v,
-      s"cannot restore $base to v$toVersion (latest is v$v)")
-    val target = liveGroups(base, toVersion)
-    val missing = target.map(_.rel).filterNot(r => Files.exists(Paths.get(base, r)))
-    require(missing.isEmpty,
-      s"cannot restore $base to v$toVersion: vacuum reclaimed ${missing.mkString(", ")}")
-    val current = liveGroups(base, v)
-    val currentRels = current.map(_.rel).toSet
-    val targetRels = target.map(_.rel).toSet
-    commit(base, "restore",
-      target.filterNot(g => currentRels.contains(g.rel)),
-      current.map(_.rel).filterNot(targetRels.contains))
-  }
-
   def vacuum(base: String, retainVersions: Int = 1): Int = {
     val latest = latestVersion(base)
     require(latest >= 0, s"no committed version in $base")

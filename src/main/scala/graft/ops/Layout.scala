@@ -28,42 +28,56 @@ import graft.core.{Num, Tables}
   */
 object Layout {
 
-  private def safe(sfDir: String): String =
-    java.nio.file.Paths.get(sfDir).getFileName.toString.replace('.', '_')
-
-  private[graft] def bucketedNames(sfDir: String): (String, String) =
-    (s"lineitem_bkt_${safe(sfDir)}", s"orders_bkt_${safe(sfDir)}")
-
-  /** Write lineitem + orders as managed parquet tables bucketed 8-ways on
-    * the join key (sorted within buckets). Memoized per catalog: the
-    * in-memory catalog forgets tables across JVMs, so a fresh session pays
-    * one rewrite — a deployment with a persistent metastore pays it once
-    * ever, which is the point.
+  /** `<basename>_<hash of the canonical path>` of the dataset's
+    * [[graft.core.Scratch.dir]], as a catalog identifier.
     */
-  private def ensureBucketed(spark: SparkSession, sfDir: String): Unit = synchronized {
-    val (li, ord) = bucketedNames(sfDir)
-    if (!spark.catalog.tableExists(li)) {
-      dropStaleLocation(spark, li)
-      Tables.lineitem(spark, sfDir).write
-        .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .format("parquet").mode("overwrite").saveAsTable(li)
-    }
-    if (!spark.catalog.tableExists(ord)) {
-      dropStaleLocation(spark, ord)
-      Tables.orders(spark, sfDir).write
-        .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .format("parquet").mode("overwrite").saveAsTable(ord)
-    }
+  private def datasetKey(sfDir: String): String =
+    new java.io.File(graft.core.Scratch.dir("bucketed", sfDir)).getName
+      .toLowerCase(java.util.Locale.ROOT).replaceAll("[^a-z0-9]", "_")
+
+  /** Catalog names of the dataset's bucketed copies: its [[datasetKey]] plus
+    * its content [[graft.core.Scratch.stamp]], so a same-basename dataset or
+    * a rewritten table never reads another's buckets.
+    */
+  private[graft] def bucketedNames(sfDir: String): (String, String) = {
+    val key = s"${datasetKey(sfDir)}_${graft.core.Scratch.stamp(sfDir)}"
+    (s"lineitem_bkt_$key", s"orders_bkt_$key")
   }
 
-  /** The in-memory catalog forgets managed tables across JVMs while their
-    * warehouse directories persist; saveAsTable then refuses the "orphaned"
-    * location (LOCATION_ALREADY_EXISTS). A table the catalog does not know
-    * is by definition stale here — remove its directory before rewriting.
+  /** Write lineitem + orders as managed parquet tables bucketed 8-ways on
+    * the join key (sorted within buckets) and return their names. Memoized
+    * per catalog and dataset content: the in-memory catalog forgets tables
+    * across JVMs, so a fresh session pays one rewrite — a deployment with a
+    * persistent metastore pays it once per content, which is the point.
     */
-  private def dropStaleLocation(spark: SparkSession, table: String): Unit = {
+  private def ensureBucketed(spark: SparkSession, sfDir: String): (String, String) =
+    synchronized {
+      val (li, ord) = bucketedNames(sfDir)
+      if (!(spark.catalog.tableExists(li) && spark.catalog.tableExists(ord))) {
+        dropBucketed(spark, sfDir)
+        Tables.lineitem(spark, sfDir).write
+          .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+          .format("parquet").mode("overwrite").saveAsTable(li)
+        Tables.orders(spark, sfDir).write
+          .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+          .format("parquet").mode("overwrite").saveAsTable(ord)
+      }
+      (li, ord)
+    }
+
+  /** Drop every bucketed table of the dataset, whatever its stamp, and the
+    * warehouse dirs of those an earlier JVM's in-memory catalog forgot
+    * (saveAsTable refuses such an "orphaned" location).
+    */
+  private def dropBucketed(spark: SparkSession, sfDir: String): Unit = {
+    val ours = s"(lineitem|orders)_bkt_${datasetKey(sfDir)}_[0-9a-f]+".r
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.core.Scratch.delete(s"$wh/$table")
+    val known = spark.catalog.listTables().collect().map(_.name)
+    val onDisk = Option(new java.io.File(wh).list()).getOrElse(Array.empty[String])
+    (known ++ onDisk).distinct.filter(ours.matches).foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      graft.core.Scratch.delete(s"$wh/$t")
+    }
   }
 
   /** q139: revenue per order priority over the bucketed join. Both sides are
@@ -73,8 +87,7 @@ object Layout {
     * groups, not rows onto rows.
     */
   def bucketedOrderRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureBucketed(spark, sfDir)
-    val (liName, ordName) = bucketedNames(sfDir)
+    val (liName, ordName) = ensureBucketed(spark, sfDir)
     val li = spark.table(liName)
     val ord = spark.table(ordName)
     li.join(ord, li("l_orderkey") === ord("o_orderkey"))
@@ -90,8 +103,7 @@ object Layout {
     * the wrong, dim-sized reason; at 100 TB neither side broadcasts).
     */
   private[graft] def bucketedJoinSpec(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureBucketed(spark, sfDir)
-    val (liName, ordName) = bucketedNames(sfDir)
+    val (liName, ordName) = ensureBucketed(spark, sfDir)
     val li = spark.table(liName)
     val ord = spark.table(ordName)
     li.join(ord, li("l_orderkey") === ord("o_orderkey"))

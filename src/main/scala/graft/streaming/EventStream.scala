@@ -480,8 +480,10 @@ object EventStream {
     * row compares not-newer than the row it just installed) — idempotence
     * by monotonicity, where q114 needed batch-id-keyed deletes. Each batch
     * pre-folds to its own per-user latest (one window over the micro-batch)
-    * so the MERGE source is |users-in-batch| rows, and the CoW rewrite
-    * touches only groups holding those users.
+    * so the MERGE source is |users-in-batch| rows. The CoW merge rewrites
+    * only the groups holding those users, together with the batch's new
+    * users, as ONE group: a table whose users all live in one group keeps
+    * one group however many drains it takes.
     */
   def upsertLatestToTable(spark: SparkSession, src: String, base: String,
       chk: String): Unit = {

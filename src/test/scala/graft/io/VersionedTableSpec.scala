@@ -61,6 +61,16 @@ class VersionedTableSpec extends SparkSpec {
     assert(hist.toSeq === Seq(("append", 1L, 0L), ("delete_noop", 0L, 0L)))
   }
 
+  test("delete keeps the rows of a touched group whose predicate is NULL") {
+    import spark.implicits._
+    val base = tmpDir("vt_delete_null")
+    VersionedTable.append(
+      Seq((1L, Some(5.0)), (2L, Some(500.0)), (3L, Option.empty[Double])).toDF("k", "price"), base)
+    VersionedTable.deleteWhere(spark, base, col("price") > 100.0)
+    assert(VersionedTable.snapshot(spark, base).collect().map(_.getLong(0)).sorted
+      === Array(1L, 3L), "DELETE WHERE removes rows where the predicate is TRUE, not NULL")
+  }
+
   test("change feed reports only genuine inserts/deletes, with bag semantics") {
     import spark.implicits._
     val base = tmpDir("vt_cdf")
@@ -125,7 +135,7 @@ class VersionedTableSpec extends SparkSpec {
       "rows in statless groups are still found by range reads")
   }
 
-  test("versioned merge: CoW rewrite + one insert group, untouched carries by reference") {
+  test("versioned merge: touched groups and inserts rewritten as one group, untouched carries by reference") {
     import spark.implicits._
     val base = tmpDir("vt_merge")
     VersionedTable.append(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "s", "x"), base)
@@ -156,8 +166,8 @@ class VersionedTableSpec extends SparkSpec {
       "touched group replaced by its rewrite")
     val hist = VersionedTable.history(spark, base).collect()
       .map(r => (r.getString(1), r.getLong(2), r.getLong(3))).last
-    assert(hist === (("merge", 3L, 2L)),
-      "one commit: two rewrites + one insert group added, two groups removed")
+    assert(hist === (("merge", 1L, 2L)),
+      "one commit: one group (rewrites + insert) added, two groups removed")
   }
 
   test("an ambiguous merge source fails BEFORE any manifest lands") {
@@ -432,6 +442,31 @@ class VersionedTableSpec extends SparkSpec {
     assert(untouched.columns.toSeq === Seq("k", "s"))
     // pre-merge time travel is no wider than it was
     assert(VersionedTable.snapshot(spark, base, 1).columns.toSeq === Seq("k", "s"))
+  }
+
+  test("delete and merge over groups of different schemas keep the wider column") {
+    import spark.implicits._
+    val base = tmpDir("vt_rewrite_evolved")
+    VersionedTable.append(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), base)
+    VersionedTable.append(Seq((3L, "c", 7.5), (4L, "d", 8.5)).toDF("k", "s", "score"), base)
+    def rows() = VersionedTable.snapshotEvolved(spark, base)
+      .select("k", "s", "score").collect()
+      .map(r => (r.getLong(0), r.getString(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).sortBy(_._1).toSeq
+    def lastCommit() = VersionedTable.history(spark, base).collect()
+      .map(r => (r.getString(1), r.getLong(2), r.getLong(3))).last
+    // both groups hold a match: one read of both, one rewritten group
+    VersionedTable.deleteWhere(spark, base, col("k") === 1L || col("k") === 3L)
+    assert(lastCommit() === (("delete", 1L, 2L)))
+    assert(rows() === Seq((2L, "b", None), (4L, "d", Some(8.5))),
+      "the delete's rewrite keeps the column only the wider group had")
+    VersionedTable.append(Seq((5L, "e")).toDF("k", "s"), base)
+    // a non-evolving merge touching the wide rewrite and the narrow append
+    VersionedTable.merge(spark, base, Seq((4L, "D"), (5L, "E")).toDF("k", "s"),
+      keys = Seq("k"), updateWhen = Some(lit(true)), updateSet = Map("s" -> col("s.s")))
+    assert(lastCommit() === (("merge", 1L, 2L)))
+    assert(rows() === Seq((2L, "b", None), (4L, "D", Some(8.5)), (5L, "E", None)),
+      "the merge's rewrite keeps the column only the wider group had")
   }
 
   test("bloom append keeps NULL-key rows in the snapshot") {

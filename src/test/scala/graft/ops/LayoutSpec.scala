@@ -38,6 +38,30 @@ class LayoutSpec extends SparkSpec {
     assert(bucketed.toSeq === plain.toSeq)
   }
 
+  test("a same-basename copy and a rewritten table are bucketed from their own rows") {
+    import org.apache.spark.sql.functions.{col, sum}
+    def nItems(sfDir: String): Long = Layout.bucketedOrderRevenue(spark, sfDir)
+      .agg(sum("n_items")).head.getLong(0)
+    val d = datasetCopy(sf, "layout-copy")
+    try {
+      assert(nItems(sf) === graft.core.Tables.lineitem(spark, sf).count())
+      rewriteTable(d, "lineitem")(_.filter(col("l_linenumber") === 1))
+      val filtered = graft.core.Tables.lineitem(spark, d).count()
+      assert(nItems(d) === filtered, "the copy is answered from its own lineitem")
+      val older = Layout.bucketedNames(d)
+      rewriteTable(d, "lineitem")(_.filter(col("l_linenumber") === 1 && col("l_quantity") < 25))
+      val refiltered = graft.core.Tables.lineitem(spark, d).count()
+      assert(refiltered < filtered)
+      assert(nItems(d) === refiltered, "the rewritten lineitem is re-bucketed")
+      assert(!spark.catalog.tableExists(older._1) && !spark.catalog.tableExists(older._2),
+        "re-bucketing drops the older content's tables")
+    } finally {
+      val (li, ord) = Layout.bucketedNames(d)
+      Seq(li, ord).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      graft.core.Scratch.delete(new java.io.File(d).getParent)
+    }
+  }
+
   test("hot-type scan carries a dynamic partition pruning filter") {
     val p = Layout.dppHotTypeStats(spark, sf).queryExecution.executedPlan.toString
     assert(p.toLowerCase.contains("dynamicpruning"),

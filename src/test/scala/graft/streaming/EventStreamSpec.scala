@@ -357,6 +357,9 @@ class EventStreamSpec extends SparkSpec {
       .select("user_id", "event_id", "ts", "event_type", "value", "props")
     def state() = graft.io.VersionedTable.snapshot(spark, base)
       .select("user_id", "event_id", "ts", "event_type", "value", "props")
+    // each merge rewrites its touched group and its inserts as one group
+    def liveGroups() = graft.io.VersionedTable.snapshot(spark, base)
+      .select(regexp_extract(input_file_name(), "/(groups/[^/]+)/", 1)).distinct().count()
 
     val split = "2024-01-16 12:00:00"
     val b1 = ev.filter(col("ts") < lit(split).cast("timestamp_ntz"))
@@ -365,16 +368,30 @@ class EventStreamSpec extends SparkSpec {
     ship("b1", b1)
     EventStream.upsertLatestToTable(spark, src, base, chk)
     assert(state().exceptAll(twin(b1)).isEmpty && twin(b1).exceptAll(state()).isEmpty)
+    assert(liveGroups() === 1L, "drain 1 leaves one live group")
 
     ship("b2", b2)
     EventStream.upsertLatestToTable(spark, src, base, chk)
     assert(state().exceptAll(twin(ev)).isEmpty && twin(ev).exceptAll(state()).isEmpty)
+    assert(liveGroups() === 1L, "drain 2 leaves one live group")
 
     // redeliver ALL of b1 under a new name: every row compares not-newer
     // than what the table already holds, so the merge must be a no-op
     ship("b1_redelivered", b1)
     EventStream.upsertLatestToTable(spark, src, base, chk)
     assert(state().exceptAll(twin(ev)).isEmpty && twin(ev).exceptAll(state()).isEmpty)
+    assert(liveGroups() === 1L, "drain 3 leaves one live group")
+
+    // every user of b2 is already in b1, so no drain above inserted; a batch
+    // with newer events of known users AND first events of new users still
+    // lands its rewrite and its inserts as one group
+    val b3 = b2.withColumn("ts", col("ts") + expr("INTERVAL 1 DAY"))
+      .unionByName(b2.withColumn("user_id", col("user_id") + 1000000L))
+    ship("b3", b3)
+    EventStream.upsertLatestToTable(spark, src, base, chk)
+    val all = ev.unionByName(b3)
+    assert(state().exceptAll(twin(all)).isEmpty && twin(all).exceptAll(state()).isEmpty)
+    assert(liveGroups() === 1L, "drain 4 leaves one live group")
   }
 
   /** The production alert form of the PSI monitor: three drains over one
