@@ -3,7 +3,9 @@ package graft.core
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.SparkSession
 
 /** The one scratch area: every staged copy of a dataset and every
   * rebuilt-per-call work directory lives under [[root]], in a sub-area keyed
@@ -39,20 +41,46 @@ object Scratch {
     s"$root/$sub/${new java.io.File(canon).getName}-${hex(canon).take(10)}"
   }
 
-  /** A stamp of the dataset's content without a Spark job: a hash of
-    * (relative path, size, mtime) over every file of its tables, whether a
-    * table is one parquet file or a directory of parts.
+  /** A stamp of one table's content without a Spark job: a hash of
+    * (relative path, length, modification time) over every file the Hadoop
+    * `FileSystem` of `path` lists under it, whether the table is one parquet
+    * file or a directory of parts, on any filesystem a session can read
+    * (`file:`, `hdfs:`, `s3a:`). An absent path stamps as an empty listing.
     */
-  def stamp(sfDir: String): String = {
-    val base = Paths.get(sfDir)
-    val tables = Tables.names.map(t => base.resolve(s"$t.parquet")).filter(Files.exists(_))
-    val entries = tables.flatMap { p =>
-      val walk = Files.walk(p)
-      try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
-      finally walk.close()
-    }.map(f => s"${base.relativize(f)}|${Files.size(f)}|${Files.getLastModifiedTime(f).toMillis}")
+  def tableStamp(path: String, conf: Configuration): String = {
+    val p = new HPath(path)
+    val fs = p.getFileSystem(conf)
+    val root = fs.makeQualified(p).toString
+    // listStatus walked here, not listFiles: listFiles builds a
+    // LocatedFileStatus, which reads each file's owner and permissions, and
+    // without Hadoop's native library the local filesystem forks `ls` for that
+    def files(dir: HPath): Seq[FileStatus] = fs.listStatus(dir).toSeq.flatMap { f =>
+      if (f.isDirectory) files(f.getPath) else Seq(f)
+    }
+    val listed = try files(p) catch { case _: java.io.FileNotFoundException => Nil }
+    val entries = listed.map(f =>
+      s"${f.getPath.toString.stripPrefix(root)}|${f.getLen}|${f.getModificationTime}")
     hex(entries.sorted.mkString("\n")).take(16)
   }
+
+  /** A stamp of the dataset's content: a hash of its tables' [[tableStamp]]s,
+    * so a staged copy ([[once]]) and a memo keyed by one table
+    * ([[Tables.load]]) follow content by the same rule.
+    */
+  def stamp(sfDir: String): String = {
+    val conf = hadoopConf
+    hex(Tables.names.map(t => s"$t|${tableStamp(s"$sfDir/$t.parquet", conf)}")
+      .mkString("\n")).take(16)
+  }
+
+  /** The Hadoop configuration of the running session (its `spark.hadoop.*`
+    * settings reach the filesystems), else Hadoop's defaults.
+    */
+  private def hadoopConf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(defaultConf)(_.sparkContext.hadoopConfiguration)
+
+  private lazy val defaultConf = new Configuration()
 
   /** The staged copy `sub` of `sfDir`: built by `build` into the returned dir
     * when absent or stamped for other content, else reused as is.

@@ -18,8 +18,32 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Table `name` of the dataset at `sfDir`, read with its schema declared.
+    *
+    * A bare `spark.read.parquet` starts one Spark job per call to infer the
+    * schema from the footers — in an interactive query that reads five
+    * tables, five jobs before the first row. Here the inferred schema is
+    * resolved once per (session, table content) through [[Memo.keyed]]: the
+    * key is the session reference, the table's canonical path and its
+    * [[Scratch.tableStamp]], so a rewritten table re-infers, and a session
+    * with other parquet settings (`newSession()`) infers its own. The read
+    * itself stays fresh: it lists the files on every call but starts no job.
+    *
+    * The memo holds a schema, not a plan: a `DataFrame` rebuilt from a cached
+    * `LogicalPlan` would carry the same attribute ids on every load, so a
+    * query that loads one table twice (a self-join) would make its column
+    * references ambiguous. Each declared-schema read gets fresh ids.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val schema = Memo.keyed(schemas, "schema", spark, Scratch.canonical(path),
+      Scratch.tableStamp(path, spark.sparkContext.hadoopConfiguration))(_ => ())(
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val schemas =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), StructType]
 
   def region(spark: SparkSession, d: String): DataFrame    = load(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame    = load(spark, d, "nation")

@@ -73,9 +73,9 @@ object Bpe {
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
 
   /** Trained-tokenizer memo: q117 and q118 share one training run per
-    * (session, dataset, k) through [[Dedup.memo]], counted under the `bpe`
-    * label. The cached segs frame is checkpointed, so reuse never replays
-    * the rounds.
+    * (session, dataset, k) through [[graft.core.Memo]], counted under the
+    * `bpe` label. The cached segs frame is checkpointed, so reuse never
+    * replays the rounds.
     */
   private val trainedCache =
     scala.collection.concurrent.TrieMap[(SparkSession, String),
@@ -83,7 +83,7 @@ object Bpe {
 
   private def train(spark: SparkSession, sfDir: String, k: Int)
       : (Seq[(String, String)], DataFrame) =
-    Dedup.memo(trainedCache, "bpe", spark, sfDir, s"#k=$k")(
+    graft.core.Memo(trainedCache, "bpe", spark, sfDir, s"#k=$k")(
       r => Dedup.releaseCheckpoint(r._2))(trainUncached(spark, sfDir, k))
 
   /** Candidates per batched merge round — ⌈k/BatchB⌉ driver round-trips

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 
 /** Deduplication operators over `documents`: exact, MinHash+LSH with exact
   * Jaccard verification, SimHash. The near-dup family is the canonical
@@ -163,79 +163,14 @@ object Dedup {
   private val verifiedPairsCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  /** Cache traffic counters PER CACHE LABEL ("edges" = the verified-pair
-    * table here, "clusters" = [[Graph]]'s CC label table), read by the memo
-    * specs to pin which calls PAID a materialization (miss) and which rode
-    * it for free (hit). Per label, so a call that only materialized the
-    * cluster cache is not counted as having paid "the dedup chain".
-    */
-  private[graft] val cacheMisses =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]
-  private[graft] val cacheHits =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]
-  private def bump(
-      m: java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder],
-      label: String): Unit =
-    m.computeIfAbsent(label, _ => new java.util.concurrent.atomic.LongAdder).increment()
-  private[graft] def counterSnapshot(
-      m: java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder])
-      : Map[String, Long] = {
-    val b = Map.newBuilder[String, Long]
-    m.forEach((k, v) => b += k -> v.sum())
-    b.result()
-  }
-
-  /** Memoize `body`'s eagerly-checkpointed result per (session, dataset);
-    * see [[memo]] for the key.
+  /** Memoize `body`'s eagerly-checkpointed result per (session, dataset)
+    * through [[graft.core.Memo]], counted under `label`.
     */
   private[graft] def cached(
       cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
       label: String,
       spark: SparkSession, sfDir: String)(body: => DataFrame): DataFrame =
-    memo(cache, label, spark, sfDir)(releaseCheckpoint)(body.localCheckpoint(true))
-
-  /** Memoize `body` per (session, dataset, `variant`). The key holds the
-    * session REFERENCE — `SparkSession` keeps default identity equality, so
-    * this is the intended per-instance memo without the collision risk of
-    * `identityHashCode` (hashes are not unique, and a post-GC session could
-    * alias a stale entry bound to a dead SparkContext). The dataset part is
-    * its canonical path plus its [[graft.core.Scratch.stamp]], so a rewritten
-    * table misses; the entries its old content keyed are `release`d then,
-    * since no later lookup can reach them. Entries of stopped sessions are
-    * evicted on every access: their checkpoint blocks are gone with the
-    * context, and dropping the key is what lets the session be collected.
-    */
-  private[graft] def memo[V](
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), V],
-      label: String, spark: SparkSession, sfDir: String, variant: String = "")(
-      release: V => Unit)(body: => V): V =
-    // whole lookup-or-compute under the cache's lock: TrieMap.getOrElseUpdate
-    // evaluates its default on every racing thread, which would run the
-    // expensive chain twice and strand one thread's eagerly-checkpointed
-    // blocks with no handle to unpersist them. The body is minutes of Spark
-    // jobs; serializing the sub-millisecond hit path costs nothing.
-    cache.synchronized {
-      cache.keySet.foreach { k =>
-        if (k._1.sparkContext.isStopped) cache.remove(k)
-      }
-      val dataset = graft.core.Scratch.canonical(sfDir) + "\u0000"
-      val current = dataset + graft.core.Scratch.stamp(sfDir)
-      val key = (spark, current + variant)
-      cache.get(key) match {
-        case Some(v) =>
-          bump(cacheHits, label)
-          v
-        case None =>
-          cache.keySet.foreach { k =>
-            if (k._2.startsWith(dataset) && !k._2.startsWith(current))
-              cache.remove(k).foreach(release)
-          }
-          val v = body
-          cache.put(key, v)
-          bump(cacheMisses, label)
-          v
-      }
-    }
+    Memo(cache, label, spark, sfDir)(releaseCheckpoint)(body.localCheckpoint(true))
 
   /** Drop the blocks behind a `localCheckpoint`ed frame. */
   private[graft] def releaseCheckpoint(df: DataFrame): Unit =

@@ -157,7 +157,7 @@ object Joins {
     // the count + treeAggregate are construction-time Spark jobs; memoized per
     // (session, dataset) so plan-only consumers (PlanSpec, repeated verify
     // construction) pay the two build-side jobs exactly once
-    val bytes = Dedup.memo(bloomBytesCache, "bloom_bytes", spark, sfDir)(_ => ()) {
+    val bytes = graft.core.Memo(bloomBytesCache, "bloom_bytes", spark, sfDir)(_ => ()) {
       val expected = math.max(1024L, dim.count())
       val bf = dim.stat.bloomFilter("o_orderkey", expected, 0.01)
       val bos = new java.io.ByteArrayOutputStream()

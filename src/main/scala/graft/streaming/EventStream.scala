@@ -479,11 +479,12 @@ object EventStream {
     * order, so re-applying a replayed micro-batch is a no-op (every source
     * row compares not-newer than the row it just installed) — idempotence
     * by monotonicity, where q114 needed batch-id-keyed deletes. Each batch
-    * pre-folds to its own per-user latest (one window over the micro-batch)
-    * so the MERGE source is |users-in-batch| rows. The CoW merge rewrites
-    * only the groups holding those users, together with the batch's new
-    * users, as ONE group: a table whose users all live in one group keeps
-    * one group however many drains it takes.
+    * pre-folds to its own per-user latest (one window over the micro-batch,
+    * checkpointed for the batch's lifetime) so the MERGE source is
+    * |users-in-batch| rows and the batch is scanned once. The CoW merge
+    * rewrites only the groups holding those users, together with the batch's
+    * new users, as ONE group: a table whose users all live in one group
+    * keeps one group however many drains it takes.
     */
   def upsertLatestToTable(spark: SparkSession, src: String, base: String,
       chk: String): Unit = {
@@ -497,7 +498,15 @@ object EventStream {
           val latest = batch
             .withColumn("rn", row_number().over(byUser))
             .filter(col("rn") === 1).drop("rn")
-          if (!latest.isEmpty) {
+            // read three times below (the emptiness probe, the merge's
+            // touched-group collect and the merge itself) and again by a
+            // retried optimistic merge: fold the batch once. A local
+            // checkpoint, not persist(): its job runs under AQE, which
+            // coalesces the window's shuffle to the batch's size, while a
+            // cached plan keeps every shuffle partition and the merge then
+            // writes a file per partition (measured: 1 -> 8 data files)
+            .localCheckpoint(eager = true)
+          try if (!latest.isEmpty) {
             if (graft.io.VersionedTable.latestVersion(base) < 0)
               graft.io.VersionedTable.append(latest, base)
             else {
@@ -521,7 +530,7 @@ object EventStream {
                 writerId = s"upsert-b$batchId-" +
                   java.util.UUID.randomUUID().toString.take(8))
             }
-          }
+          } finally graft.ops.Dedup.releaseCheckpoint(latest)
           ()
         }
         .option("checkpointLocation", chk)

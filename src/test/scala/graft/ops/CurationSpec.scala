@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.Memo
 
 /** Test access to the package-private gram builders. */
 object CurationTestHook {
@@ -846,12 +847,12 @@ class CurationSpec extends SparkSpec {
     // recomputed at ~19 sites; now q313/q338 (and the whole mix tier) ride
     // ONE memoized census.
     val sf = "/root/testdata/sf0.001"
-    val m0 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("doc_tokens", 0L)
+    val m0 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("doc_tokens", 0L)
     Curation.dedupSavings(spark, sf).collect()
     Curation.sourceContamination(spark, sf).collect()
     graft.ops.TrainingMix.domainMix(spark, sf).collect()
-    val m1 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("doc_tokens", 0L)
-    val h1 = Dedup.counterSnapshot(Dedup.cacheHits).getOrElse("doc_tokens", 0L)
+    val m1 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("doc_tokens", 0L)
+    val h1 = Memo.counterSnapshot(Memo.cacheHits).getOrElse("doc_tokens", 0L)
     assert(m1 - m0 <= 1L, "census materialized at most once for three consumers")
     assert(h1 >= 1L, "later consumers rode the memo")
   }
@@ -861,11 +862,11 @@ class CurationSpec extends SparkSpec {
     // passage-flag table materializes once; crafted-fixture calls (other
     // params) bypass the memo so they can never alias the session key.
     val sf = "/root/testdata/sf0.001"
-    val m0 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("passage_flags", 0L)
+    val m0 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("passage_flags", 0L)
     Curation.passageDecontaminate(spark, sf).collect()
     Curation.decontamSavings(spark, sf).collect()
-    val m1 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("passage_flags", 0L)
-    val h1 = Dedup.counterSnapshot(Dedup.cacheHits).getOrElse("passage_flags", 0L)
+    val m1 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("passage_flags", 0L)
+    val h1 = Memo.counterSnapshot(Memo.cacheHits).getOrElse("passage_flags", 0L)
     assert(m1 - m0 <= 1L, "verdict table materialized at most once for both consumers")
     assert(h1 >= 1L, "the second consumer rode the memo")
   }
@@ -874,26 +875,26 @@ class CurationSpec extends SparkSpec {
     // the two-consumer rule applied to the round's own new tier: q358's
     // islands frame materializes once; q359/q360/q361 ride it.
     val sf = "/root/testdata/sf0.001"
-    val m0 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("leak_spans", 0L)
+    val m0 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("leak_spans", 0L)
     Curation.leakSpans(spark, sf).collect()
     Curation.leakSeverityProfile(spark, sf).collect()
     Curation.graduatedPolicy(spark, sf).collect()
     Curation.leakSeverityBySource(spark, sf).collect()
-    val m1 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("leak_spans", 0L)
-    val h1 = Dedup.counterSnapshot(Dedup.cacheHits).getOrElse("leak_spans", 0L)
+    val m1 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("leak_spans", 0L)
+    val h1 = Memo.counterSnapshot(Memo.cacheHits).getOrElse("leak_spans", 0L)
     assert(m1 - m0 <= 1L, "islands frame materialized at most once for four consumers")
     assert(h1 >= 1L, "later consumers rode the memo")
   }
 
   test("semantic flags are paid once per session and shared by q354/q356/q357/q351") {
     val sf = "/root/testdata/sf0.001"
-    val m0 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("semantic_flags", 0L)
+    val m0 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("semantic_flags", 0L)
     graft.ops.Similarity.semanticDecontam(spark, sf).collect()
     graft.ops.Similarity.semanticDecontamIvf(spark, sf).collect()
     graft.ops.Similarity.semanticLeakBySource(spark, sf).collect()
     graft.ops.ReportCard.releaseReadiness(spark, sf).collect()
-    val m1 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("semantic_flags", 0L)
-    val h1 = Dedup.counterSnapshot(Dedup.cacheHits).getOrElse("semantic_flags", 0L)
+    val m1 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("semantic_flags", 0L)
+    val h1 = Memo.counterSnapshot(Memo.cacheHits).getOrElse("semantic_flags", 0L)
     assert(m1 - m0 <= 1L, "NN audit materialized at most once for four consumers")
     assert(h1 >= 1L, "later consumers rode the memo")
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.core.Memo
 
 /** Near-dup pipeline invariants that the oracle can't see: the short-text
   * shingle guard (Spark's sequence() reverses when start > stop) and the
@@ -319,9 +320,9 @@ class DedupSpec extends SparkSpec {
       val dropped = before.head._1
       rewriteTable(d, "documents")(
         _.filter(org.apache.spark.sql.functions.col("doc_id") =!= dropped))
-      val m0 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("edges", 0L)
+      val m0 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("edges", 0L)
       val after = pairs(Dedup.ngramJaccard(spark, d))
-      assert(Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("edges", 0L) > m0,
+      assert(Memo.counterSnapshot(Memo.cacheMisses).getOrElse("edges", 0L) > m0,
         "the rewritten table missed the memo")
       assert(after === pairs(Dedup.ngramJaccardCompute(spark, d)))
       assert(after != before && after.forall(p => p._1 != dropped && p._2 != dropped))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.core.Memo
 import org.apache.spark.sql.DataFrame
 
 /** Connected components: correctness on shapes the LSH dedup graph can take
@@ -222,11 +223,11 @@ class GraphSpec extends SparkSpec {
     // global triangle count must equal Σ n_tri/3 over q277's per-node rows
     // plus the deg<2 nodes the filter drops (which can hold no triangle).
     val sf = "/root/testdata/sf0.001"
-    val m0 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("triangle_census", 0L)
+    val m0 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("triangle_census", 0L)
     val stats = Graph.triangleStats(spark, sf).head
     val cc = Graph.clusteringCoefficient(spark, sf).collect()
-    val m1 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("triangle_census", 0L)
-    val h1 = Dedup.counterSnapshot(Dedup.cacheHits).getOrElse("triangle_census", 0L)
+    val m1 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("triangle_census", 0L)
+    val h1 = Memo.counterSnapshot(Memo.cacheHits).getOrElse("triangle_census", 0L)
     assert(m1 - m0 <= 1L, "census materialized at most once for both consumers")
     assert(h1 >= 1L, "the second consumer rode the memo")
     assert(stats.getAs[Long]("n_triangles") === cc.map(_.getAs[Long]("n_tri")).sum / 3,

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.core.Memo
 
 /** Hand-computed fixed-point bigram-LM scores on a corpus small enough to
   * verify every smoothed probability by hand, plus the short-document
@@ -70,11 +71,11 @@ class LanguageModelSpec extends SparkSpec {
     // lm_perdoc label shows at most one more miss and at least one hit —
     // the bigram model trained once for the pair.
     val sf = "/root/testdata/sf0.001"
-    val m0 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("lm_perdoc", 0L)
+    val m0 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("lm_perdoc", 0L)
     LanguageModel.bigramLmScores(spark, sf).collect()
     LanguageModel.perplexityFilter(spark, sf).collect()
-    val m1 = Dedup.counterSnapshot(Dedup.cacheMisses).getOrElse("lm_perdoc", 0L)
-    val h1 = Dedup.counterSnapshot(Dedup.cacheHits).getOrElse("lm_perdoc", 0L)
+    val m1 = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("lm_perdoc", 0L)
+    val h1 = Memo.counterSnapshot(Memo.cacheHits).getOrElse("lm_perdoc", 0L)
     assert(m1 - m0 <= 1L, "model trained at most once for both consumers")
     assert(h1 >= 1L, "the second consumer rode the memo")
   }

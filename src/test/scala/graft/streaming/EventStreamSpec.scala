@@ -365,13 +365,21 @@ class EventStreamSpec extends SparkSpec {
     val b1 = ev.filter(col("ts") < lit(split).cast("timestamp_ntz"))
     val b2 = ev.filter(col("ts") >= lit(split).cast("timestamp_ntz"))
 
+    // each micro-batch persists its per-user fold; none may outlive a drain
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def noBatchLeftCached() =
+      assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted),
+        "a drain left a persisted micro-batch behind")
+
     ship("b1", b1)
     EventStream.upsertLatestToTable(spark, src, base, chk)
+    noBatchLeftCached()
     assert(state().exceptAll(twin(b1)).isEmpty && twin(b1).exceptAll(state()).isEmpty)
     assert(liveGroups() === 1L, "drain 1 leaves one live group")
 
     ship("b2", b2)
     EventStream.upsertLatestToTable(spark, src, base, chk)
+    noBatchLeftCached()
     assert(state().exceptAll(twin(ev)).isEmpty && twin(ev).exceptAll(state()).isEmpty)
     assert(liveGroups() === 1L, "drain 2 leaves one live group")
 
