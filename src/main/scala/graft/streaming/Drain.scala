@@ -3,51 +3,60 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Shared AvailableNow→memory-sink drain for the bounded streaming demos.
+/** How every bounded (AvailableNow) drain starts, runs and sizes its state.
   *
-  * Two knobs that round-7 profiling showed dominate drain wall time (q60 ran
-  * 50 s solo for a 46-row result; state-store COMMIT summed to 267 s of task
-  * time):
+  *  - **State partitions are sized to the state, once.** A stateful query
+  *    keeps one state store per shuffle partition and commits each of them
+  *    every micro-batch, so each partition costs a fixed amount per batch
+  *    however few rows it holds. The count is `spark.sql.shuffle.partitions`
+  *    at the query's first start; the checkpoint's offset log pins it
+  *    (`<chk>/offsets/<n>`) and every restart restores it, so an existing
+  *    checkpoint keeps its count and a new one takes the count its drain
+  *    sets. The memory-table drain ([[toMemoryTable]]) uses
+  *    [[MemoryStatePartitions]] for the demo state volume (~10^4 rows); the
+  *    durable drains set theirs at the call site, sized by the bound on
+  *    their state (e.g. [[EventStream.hourlyRollupToJdbc]]: one).
   *
-  *  - **State partitions.** `spark.sql.shuffle.partitions` at query start
-  *    fixes the state-store count for the query's lifetime; a symmetric hash
-  *    join carries 4 stores per partition, so 32 partitions = 128 store
-  *    commits per micro-batch for drains whose whole state is ~10^4 rows.
-  *    The drain scopes the conf to `statePartitions` (default 8) around
-  *    `.start()` — right-sized to the demo state volume. This is explicitly
-  *    the per-deployment parallelism knob: a production stream holding 10^8
-  *    keys sets hundreds, and the value is pinned in the checkpoint from the
-  *    first start (repartitioning state needs offline state rewriting), so
-  *    size it for peak state up front.
+  *  - **Confs are scoped to `start()` only.** Spark clones the session when
+  *    it constructs the query, inside `start()`; the clone is where the
+  *    state-partition count and the state-store provider are read, and the
+  *    offset log pins both. [[run]] sets its confs on the caller's session
+  *    for the `start()` call alone, under the session's lock, and restores
+  *    them before the query processes a row. Drains therefore run
+  *    concurrently with each other and with other queries of the session;
+  *    only a query planned on the same session during another drain's
+  *    `start()` can see its values.
   *
-  *  - **Checkpoint medium.** These memory-sink drains are ephemeral by
-  *    construction — the checkpoint is discarded at `stop()`, so fsync
-  *    durability buys nothing — and per-store delta commits to a disk-backed
-  *    /tmp were the measured bottleneck. The drain checkpoints to a
+  *  - **Ephemeral checkpoint medium.** The memory-table drain's checkpoint is
+  *    discarded at `stop()`, so fsync durability buys nothing; it lives on a
   *    RAM-backed scratch (`/dev/shm` when writable, else java.io.tmpdir) and
-  *    deletes it after. Durable checkpoints are the contract of the
+  *    is deleted after. Durable checkpoints are the contract of the
   *    restartable forms ([[SessionStream.idleCloseDrain]], [[CsvStreamIngest]],
   *    [[EventStream.trendingToParquet]]), which take an explicit caller-owned
   *    checkpoint dir instead.
   */
 private[streaming] object Drain {
 
-  /** Set a session conf for the duration of `body`, restoring the prior
-    * value. Serialized on the session: streaming confs are read at query
-    * START, so the scope pins the value to exactly the queries started
-    * inside `body` — see [[SessionStream]]'s provider scoping for caveats.
+  /** State partitions of every memory-table drain. */
+  private val MemoryStatePartitions = 8
+
+  /** Start the query that `start` builds with `confs` set on `spark` for the
+    * `start()` call only (see the object doc), then process everything
+    * available and stop it.
     */
-  def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T =
-    spark.synchronized {
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, value)
-      try body finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
+  def run(spark: SparkSession, confs: (String, String)*)(start: => StreamingQuery): Unit = {
+    val q = spark.synchronized {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try start finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
       }
     }
+    try q.processAllAvailable() finally q.stop()
+  }
 
   /** A unique scratch checkpoint dir on the fastest ephemeral medium. */
   private def ephemeralCheckpoint(): Path = {
@@ -58,23 +67,21 @@ private[streaming] object Drain {
   }
 
   /** Drain `ds` to completion (AvailableNow) into a memory sink and return
-    * the accumulated table. The caller's post-processing runs as a plain
-    * batch query on the returned frame, OUTSIDE the scoped conf.
+    * the accumulated table; `confs` are started with the query alongside its
+    * state-partition count. The caller's post-processing runs as a plain
+    * batch query on the returned frame.
     */
   def toMemoryTable(spark: SparkSession, ds: Dataset[_], mode: String,
-      namePrefix: String, statePartitions: Int = 8): DataFrame = {
+      namePrefix: String, confs: (String, String)*): DataFrame = {
     val name = s"${namePrefix}_${System.nanoTime()}"
     val ckpt = ephemeralCheckpoint()
-    try {
-      withConf(spark, "spark.sql.shuffle.partitions", statePartitions.toString) {
-        val q = ds.writeStream
-          .format("memory").queryName(name)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    try run(spark, ("spark.sql.shuffle.partitions" -> MemoryStatePartitions.toString) +: confs: _*) {
+      ds.writeStream
+        .format("memory").queryName(name)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
     } finally graft.core.Scratch.delete(ckpt.toString)
     spark.table(name)
   }

@@ -292,15 +292,20 @@ object EventStream {
     * offsets and window state; already-emitted windows are never re-emitted.
     */
   def hourlyRollupToJdbc(spark: SparkSession, src: String, conn: graft.io.JdbcConn,
-      table: String, chk: String, watermark: String = "2 hours",
-      statePartitions: Int = 8): Unit =
-    // state-store count is pinned by the CHECKPOINT at first start (same knob
-    // as Drain): right-size to the (hour × type) state volume, not the
-    // session's shuffle width — resizing later means offline state rewrite
-    Drain.withConf(spark, "spark.sql.shuffle.partitions", statePartitions.toString) {
-      val events = spark.readStream.schema(eventsSchema).parquet(src)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val q = hourlyRollupWatermarked(events, watermark)
+      table: String, chk: String, watermark: String = "2 hours"): Unit = {
+    val events = spark.readStream.schema(eventsSchema).parquet(src)
+      .withColumn("ts", col("ts").cast("timestamp"))
+    // One state partition at any scale. An append-mode batch is evaluated
+    // under the previous batch's watermark, so it holds every window it
+    // touches until the next (watermark-advance) batch evicts them: open
+    // windows ≤ (the batch's event-time span + the watermark horizon) / 1 h,
+    // times the event types (15 rows on the benchmark; a backfill drain
+    // spanning days holds more, still small). Map-side partial aggregation
+    // bounds the state stage's input to (input tasks × open windows × types)
+    // rows per batch. A checkpoint started with more partitions keeps its
+    // count (Drain's doc).
+    Drain.run(spark, "spark.sql.shuffle.partitions" -> "1") {
+      hourlyRollupWatermarked(events, watermark)
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           graft.io.Jdbc.writeEpochIdempotent(
@@ -311,8 +316,8 @@ object EventStream {
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      try q.processAllAvailable() finally q.stop()
     }
+  }
 
   /** The q114 correctness surface: drain the full events directory through
     * [[hourlyRollupToJdbc]] into a fresh embedded-Derby table, then read the
@@ -430,8 +435,8 @@ object EventStream {
       .select(window(col("ts"), "1 day").getField("start").as("win"),
         floor(col("value") / 10.0).cast("long").as("bucket"))
       .groupBy(col("win"), col("bucket")).agg(count(lit(1)).as("n_cur"))
-    Drain.withConf(spark, "spark.sql.shuffle.partitions", "8") {
-      val q = streamCounts.writeStream
+    Drain.run(spark, "spark.sql.shuffle.partitions" -> "8") {
+      streamCounts.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (!batch.isEmpty) {
             if (graft.io.VersionedTable.latestVersion(countsBase) < 0)
@@ -466,7 +471,6 @@ object EventStream {
         .outputMode("update")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      try q.processAllAvailable() finally q.stop()
     }
   }
 
@@ -492,8 +496,8 @@ object EventStream {
       .partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)
     val stream = spark.readStream.schema(eventsSchema).parquet(src)
-    Drain.withConf(spark, "spark.sql.shuffle.partitions", "8") {
-      val q = stream.writeStream
+    Drain.run(spark, "spark.sql.shuffle.partitions" -> "8") {
+      stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val latest = batch
             .withColumn("rn", row_number().over(byUser))
@@ -537,7 +541,6 @@ object EventStream {
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      try q.processAllAvailable() finally q.stop()
     }
   }
 

@@ -4,7 +4,7 @@ import java.time.{Duration, LocalDateTime}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout,
@@ -123,35 +123,31 @@ object SessionStream {
     * bit-identical.
     */
   def sessionizeRocksDbAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
-    withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      sessionizeAvailableNow(spark, sfDir)
-    }
+    drainSessions(spark, userSessions(spark, sfDir), RocksDb)
 
-  /** Scoped session conf — see [[Drain.withConf]]. The conf is SESSION-global
-    * (Spark has no per-query provider API): serialized on the session so two
-    * scoped writers can't interleave set/restore, but a query started
-    * concurrently OUTSIDE the helper on the same session would still observe
-    * the temporary value — callers needing a different provider concurrently
-    * should use separate sessions (`spark.newSession()`).
+  /** The state-store provider conf that starts a query on RocksDB. Spark has
+    * no per-query provider API: [[Drain.run]] sets it for `start()` only.
     */
-  private def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T =
-    Drain.withConf(spark, key, value)(body)
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Run the sessionizer over the events directory to completion
     * (AvailableNow) and return the final per-session rows. With the whole
     * input in one batch this equals the batch sessionize — the oracle checks
     * exactly that.
     */
-  def sessionizeAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
+  def sessionizeAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
+    drainSessions(spark, userSessions(spark, sfDir))
+
+  /** The `flatMapGroupsWithState` sessionizer over the events directory. */
+  private def userSessions(spark: SparkSession, sfDir: String): Dataset[SessionRow] = {
     import spark.implicits._
-    val sessions = spark.readStream
+    spark.readStream
       .schema(EventStream.eventsSchema)
       .parquet(EventStream.eventsDir(spark, sfDir))
       .as[SessionEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateUser)
-    drainSessions(spark, sessions)
   }
 
   /** The sessionizer on `transformWithState` — Structured Streaming's
@@ -164,18 +160,16 @@ object SessionStream {
     * choice: v2 unlocks per-slot TTL, timers, and schema evolution on
     * off-heap state.
     */
-  def sessionizeTwsAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
-    withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      import spark.implicits._
-      val sessions = spark.readStream
-        .schema(EventStream.eventsSchema)
-        .parquet(EventStream.eventsDir(spark, sfDir))
-        .as[SessionEvent]
-        .groupByKey(_.user_id)
-        .transformWithState(new SessionizeProcessor, TimeMode.None(), OutputMode.Update())
-      drainSessions(spark, sessions)
-    }
+  def sessionizeTwsAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    val sessions = spark.readStream
+      .schema(EventStream.eventsSchema)
+      .parquet(EventStream.eventsDir(spark, sfDir))
+      .as[SessionEvent]
+      .groupByKey(_.user_id)
+      .transformWithState(new SessionizeProcessor, TimeMode.None(), OutputMode.Update())
+    drainSessions(spark, sessions, RocksDb)
+  }
 
   /** One AvailableNow drain of the timer-closed sessionizer ([[IdleCloseProcessor]])
     * over a watched directory into an append-only parquet sink. Called
@@ -184,25 +178,24 @@ object SessionStream {
     * closed either by a same-user gap event or by the watermark-driven timer.
     */
   def idleCloseDrain(spark: SparkSession, src: String, out: String, chk: String,
-      watermarkDelay: String = "10 minutes"): Unit =
-    withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      import spark.implicits._
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType)))
-      val q = spark.readStream.schema(schema).parquet(src)
-        .withWatermark("ts", watermarkDelay)
-        .as[TimedEvent]
-        .groupByKey(_.user_id)
-        .transformWithState(new IdleCloseProcessor(GapMinutes * 60 * 1000L),
-          TimeMode.EventTime(), OutputMode.Append())
-        .writeStream.format("parquet")
+      watermarkDelay: String = "10 minutes"): Unit = {
+    import spark.implicits._
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
+      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType)))
+    val closed = spark.readStream.schema(schema).parquet(src)
+      .withWatermark("ts", watermarkDelay)
+      .as[TimedEvent]
+      .groupByKey(_.user_id)
+      .transformWithState(new IdleCloseProcessor(GapMinutes * 60 * 1000L),
+        TimeMode.EventTime(), OutputMode.Append())
+    Drain.run(spark, RocksDb) {
+      closed.writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", chk)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      try q.processAllAvailable() finally q.stop()
     }
+  }
 
   /** The BUILT-IN `session_window` aggregation as a production stream: the
     * same declarative expression as the batch
@@ -361,10 +354,10 @@ object SessionStream {
         col("click_lat_us"), col("purchase_lat_us"))
   }
 
-  private def drainSessions(
-      spark: SparkSession,
-      sessions: org.apache.spark.sql.Dataset[SessionRow]): DataFrame = {
-    val drained = Drain.toMemoryTable(spark, sessions, "update", "graft_stream_sessions")
+  private def drainSessions(spark: SparkSession, sessions: Dataset[SessionRow],
+      confs: (String, String)*): DataFrame = {
+    val drained = Drain.toMemoryTable(spark, sessions, "update", "graft_stream_sessions",
+      confs: _*)
     val latest = Window
       .partitionBy(col("user_id"), col("session_seq"))
       .orderBy(col("n_events").desc, col("session_end").desc)

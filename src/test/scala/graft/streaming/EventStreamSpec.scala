@@ -262,6 +262,98 @@ class EventStreamSpec extends SparkSpec {
     assert(sunk.exceptAll(twin).isEmpty && twin.exceptAll(sunk).isEmpty)
   }
 
+  /** The smallest fixture dataset (TESTDATA.md). */
+  private val sf001 = "/root/testdata/sf0.001"
+
+  /** Move `batch` into the watched directory `src` as one file `name`. */
+  private def shipTo(src: String, name: String, batch: org.apache.spark.sql.DataFrame): Unit = {
+    val stage = s"${Paths.get(src).getParent}/stage_$name"
+    batch.coalesce(1).write.parquet(stage)
+    val part = new java.io.File(stage).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
+    graft.core.Scratch.delete(stage)
+  }
+
+  /** The rollup of `ev` as a batch query, restricted to the windows the
+    * watermark (max ts − 2 h) has finalized, in the JDBC table's columns.
+    */
+  private def finalizedRollup(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val maxTs = ev.agg(max(col("ts"))).head.getAs[java.time.LocalDateTime](0)
+    val horizon = java.sql.Timestamp.valueOf(maxTs.minusHours(2))
+    ev.groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
+      .filter(col("hour") + expr("INTERVAL 1 HOUR") <= lit(horizon).cast("timestamp_ntz"))
+  }
+
+  private def rollupTable(conn: graft.io.JdbcConn, table: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    graft.io.Jdbc.read(spark, conn, table)
+      .select(col("hour").cast("timestamp_ntz").as("hour"), col("event_type"),
+        col("n_events"), col("total_value"))
+  }
+
+  /** The state-partition count that batch `n`'s offset log entry pins. */
+  private def pinnedPartitions(chk: String, n: Long): Int = {
+    val entry = new String(Files.readAllBytes(Paths.get(chk, "offsets", n.toString)), "UTF-8")
+    "\"spark.sql.shuffle.partitions\":\"(\\d+)\"".r.findFirstMatchIn(entry)
+      .getOrElse(fail(s"no partition count in $chk/offsets/$n")).group(1).toInt
+  }
+
+  private def lastBatch(chk: String): Long =
+    new java.io.File(s"$chk/offsets").list().filter(_.forall(_.isDigit)).map(_.toLong).max
+
+  test("hourlyRollupToJdbc starts a fresh checkpoint with one state partition") {
+    val root = tmpDir("jdbcroll1")
+    val src = s"$root/src"; Files.createDirectories(Paths.get(src))
+    val conn = graft.io.JdbcConn(s"jdbc:derby:$root/db;create=true")
+    val ev = graft.core.Tables.events(spark, sf001)
+    shipTo(src, "b1", ev)
+    EventStream.hourlyRollupToJdbc(spark, src, conn, "rollup_one", s"$root/chk")
+    assert(lastBatch(s"$root/chk") === 1, "a data batch, then the watermark-advance batch")
+    assert((0L to 1L).map(pinnedPartitions(s"$root/chk", _)) === Seq(1, 1))
+    val sunk = rollupTable(conn, "rollup_one")
+    val twin = finalizedRollup(ev)
+    assert(sunk.count() > 0)
+    assert(sunk.exceptAll(twin).isEmpty && twin.exceptAll(sunk).isEmpty)
+  }
+
+  test("hourlyRollupToJdbc resumes a checkpoint pinned to 8 state partitions with 8") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    val root = tmpDir("jdbcroll8")
+    val src = s"$root/src"; Files.createDirectories(Paths.get(src))
+    val chk = s"$root/chk"
+    val conn = graft.io.JdbcConn(s"jdbc:derby:$root/db;create=true")
+    val ev = graft.core.Tables.events(spark, sf001)
+    val split = lit("2024-01-16 12:30:00").cast("timestamp_ntz")
+    shipTo(src, "b1", ev.filter(col("ts") < split))
+    // the checkpoint an 8-partition drain leaves: the same query and sink
+    Drain.run(spark, "spark.sql.shuffle.partitions" -> "8") {
+      EventStream.hourlyRollupWatermarked(spark.readStream.schema(EventStream.eventsSchema)
+          .parquet(src).withColumn("ts", col("ts").cast("timestamp")))
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          graft.io.Jdbc.writeEpochIdempotent(batch.withColumn("batch_id", lit(batchId)),
+            conn, "rollup_eight", batchId, maxConnections = Some(1))
+        }
+        .option("checkpointLocation", chk)
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    }
+    val resumedFrom = lastBatch(chk)
+    assert(pinnedPartitions(chk, resumedFrom) === 8)
+
+    shipTo(src, "b2", ev.filter(col("ts") >= split))
+    EventStream.hourlyRollupToJdbc(spark, src, conn, "rollup_eight", chk)
+    assert(lastBatch(chk) > resumedFrom)
+    assert((resumedFrom + 1 to lastBatch(chk)).map(pinnedPartitions(chk, _)).toSet === Set(8))
+    val sunk = rollupTable(conn, "rollup_eight")
+    val twin = finalizedRollup(ev)
+    assert(sunk.exceptAll(twin).isEmpty && twin.exceptAll(sunk).isEmpty)
+  }
+
   test("writeEpochIdempotent: a replayed micro-batch converges to one copy") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
