@@ -6,6 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SchemaBridge
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.core.Fold
 
 /** A versioned parquet table with snapshot isolation, time travel and a
   * change feed — the lakehouse transaction-log pattern (Delta/Iceberg-style)
@@ -18,8 +22,9 @@ import org.apache.spark.sql.functions._
   * Layout under `base/`:
   *   - `_log/v00000.txt, v00001.txt, …` — one manifest per version, text
   *     lines: `action <name>`, `add <relative group dir>`,
-  *     `remove <relative group dir>`. Version N's live set is the fold of
-  *     manifests 0..N (adds minus removes).
+  *     `schema <relative group dir> <json>`, `remove <relative group dir>`.
+  *     Version N's live set is the fold of manifests 0..N (adds minus
+  *     removes).
   *   - `groups/g<version>-<k>/` (single-writer commits) and
   *     `groups/w-<writerId>[-r<attempt>]/` (optimistic ones) — immutable
   *     parquet "file groups". Data files are NEVER mutated or deleted by
@@ -49,6 +54,16 @@ import org.apache.spark.sql.functions._
   * those groups together, transforms them and writes ONE replacement group;
   * untouched groups carry over by reference. A delete matching 1% of rows
   * rewrites ~1% of the data, not the table.
+  *
+  * Schema in the log: each `add` carries its group's schema on a `schema`
+  * line (Delta's `metaData` design), the written frame's schema with every
+  * field nullable, which is what parquet reads back. Committed groups are
+  * immutable, so the recorded schema never goes stale, and a read declares
+  * it instead of starting a Spark job to infer it from the footers: when all
+  * opened groups recorded one schema, that one; when they differ, their
+  * union under parquet's schema merging if the read merges schemas, else
+  * inference. A group with no `schema` line (a manifest written before the
+  * log carried them) makes the read infer, as before.
   */
 object VersionedTable {
 
@@ -66,16 +81,17 @@ object VersionedTable {
     df.withColumn(GroupCol, regexp_extract(input_file_name(), "/(groups/[^/]+)/", 1))
 
   /** An added file group, optionally carrying min/max stats for ONE declared
-    * clustering column — the manifest-level data-skipping index. Stats are
-    * doubles (numeric clustering keys); a group without stats is never
-    * skipped (correctness default for mixed histories).
+    * clustering column — the manifest-level data-skipping index — and the
+    * schema a read of it reports. Stats are doubles (numeric clustering
+    * keys); a group without stats is never skipped (correctness default for
+    * mixed histories), one without a schema is read by inference.
     */
   private case class Group(rel: String, statsCol: Option[String] = None,
-      min: Double = 0, max: Double = 0) {
-    def manifestLine: String = statsCol match {
+      min: Double = 0, max: Double = 0, schema: Option[StructType] = None) {
+    def manifestLines: Seq[String] = (statsCol match {
       case Some(c) => s"add $rel $c $min $max"
       case None => s"add $rel"
-    }
+    }) +: schema.map(sc => s"schema $rel ${sc.json}").toSeq
   }
 
   private case class Manifest(action: String, add: Seq[Group], remove: Seq[String])
@@ -102,10 +118,16 @@ object VersionedTable {
 
   private def readManifest(p: java.nio.file.Path): Manifest = {
     val lines = Files.readAllLines(p).asScala.toSeq
+    val schemas = lines.collect {
+      case s if s.startsWith("schema ") =>
+        val Array(rel, json) = s.drop(7).split(" ", 2)
+        rel -> DataType.fromJson(json).asInstanceOf[StructType]
+    }.toMap
     val adds = lines.collect {
       case s if s.startsWith("add ") => s.drop(4).split(" ") match {
-        case Array(rel) => Group(rel)
-        case Array(rel, c, mn, mx) => Group(rel, Some(c), mn.toDouble, mx.toDouble)
+        case Array(rel) => Group(rel, schema = schemas.get(rel))
+        case Array(rel, c, mn, mx) =>
+          Group(rel, Some(c), mn.toDouble, mx.toDouble, schemas.get(rel))
       }
     }
     Manifest(
@@ -142,7 +164,7 @@ object VersionedTable {
   private def tryCommitAt(base: String, v: Int, action: String,
       add: Seq[Group], remove: Seq[String]): Boolean = {
     Files.createDirectories(logDir(base))
-    val body = (s"action $action" +: (add.map(_.manifestLine) ++ remove.map("remove " + _)))
+    val body = (s"action $action" +: (add.flatMap(_.manifestLines) ++ remove.map("remove " + _)))
       .mkString("", "\n", "\n")
     val tmp = logDir(base).resolve(f".v$v%05d.txt.tmp")
     Files.write(tmp, body.getBytes("UTF-8"))
@@ -195,18 +217,55 @@ object VersionedTable {
     * version number must never race on a data directory).
     */
   private def writeGroupNamed(df: DataFrame, base: String, rel: String,
-      statsCol: Option[String] = None): Option[Group] = {
-    df.write.mode("overwrite").parquet(s"$base/$rel")
-    statsCol match {
-      case None => Some(Group(rel))
-      case Some(c) =>
-        // stats ride the commit: one tiny agg over the group just written
-        // (a production writer folds this into the write task's footer scan)
-        val r = df.sparkSession.read.parquet(s"$base/$rel")
-          .agg(count(lit(1)), min(col(c).cast("double")), max(col(c).cast("double"))).head
-        if (r.getLong(0) == 0L) None   // empty rewrite: nothing to track
-        else if (r.isNullAt(1)) Some(Group(rel))  // only null keys: statless, never skipped
-        else Some(Group(rel, Some(c), r.getDouble(1), r.getDouble(2)))
+      statsCol: Option[String] = None): Option[Group] =
+    writeCounted(df, base, rel, statsCol)._1
+
+  /** [[writeGroupNamed]], with the group's row count. The count and the
+    * stats are observed on the group's own parquet write, so they cost no
+    * Spark job; the group records the schema the write reads back as.
+    */
+  private def writeCounted(df: DataFrame, base: String, rel: String,
+      statsCol: Option[String]): (Option[Group], Long) = {
+    val key = statsCol.map(col(_).cast("double"))
+    val (_, m) = Fold.observed(df, count(lit(1)).as("rows") +:
+        key.toSeq.flatMap(k => Seq(min(k).as("lo"), max(k).as("hi"))): _*)(
+      _.write.mode("overwrite").parquet(s"$base/$rel"))
+    val rows = m("rows").asInstanceOf[Long]
+    val group = Group(rel, schema = Some(SchemaBridge.asNullable(df.schema)))
+    val added = statsCol match {
+      case None => Some(group)
+      case Some(_) if rows == 0L => None // empty rewrite: nothing to track
+      case Some(_) if m("lo") == null => Some(group) // only null keys: statless, never skipped
+      case Some(c) => Some(group.copy(statsCol = Some(c),
+        min = m("lo").asInstanceOf[Double], max = m("hi").asInstanceOf[Double]))
+    }
+    (added, rows)
+  }
+
+  /** The schema a read of `groups` declares, when the log recorded one for
+    * every group: their one schema, or with `mergeSchema` the union parquet
+    * schema merging would infer (in the groups' order). None means infer.
+    */
+  private def declaredSchema(spark: SparkSession, groups: Seq[Group],
+      mergeSchema: Boolean): Option[StructType] =
+    if (groups.exists(_.schema.isEmpty)) None
+    else groups.flatMap(_.schema).distinct match {
+      case Seq(one) => Some(one)
+      case many if mergeSchema =>
+        val caseSensitive = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+        Some(many.reduceLeft(SchemaBridge.merge(_, _, caseSensitive)))
+      case _ => None
+    }
+
+  /** One multi-path parquet read of `groups`, the schema declared when the
+    * log has it ([[declaredSchema]]) so the read starts no Spark job.
+    */
+  private def read(spark: SparkSession, base: String, groups: Seq[Group],
+      mergeSchema: Boolean = false): DataFrame = {
+    val paths = groups.map(g => s"$base/${g.rel}")
+    declaredSchema(spark, groups, mergeSchema) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", mergeSchema.toString).parquet(paths: _*)
     }
   }
 
@@ -219,13 +278,11 @@ object VersionedTable {
     */
   private def rewrite(spark: SparkSession, base: String, groups: Seq[Group],
       rel: String)(f: DataFrame => DataFrame): Option[Group] = {
-    val read = spark.read.option("mergeSchema", "true")
-      .parquet(groups.map(g => s"$base/${g.rel}"): _*)
     val statsCol = groups.map(_.statsCol).distinct match {
       case Seq(only @ Some(_)) => only
       case _ => None
     }
-    writeGroupNamed(f(read), base, rel, statsCol)
+    writeGroupNamed(f(read(spark, base, groups, mergeSchema = true)), base, rel, statsCol)
   }
 
   /** The live groups of version `v` that hold a row of `rows`, a frame
@@ -291,15 +348,16 @@ object VersionedTable {
 
   /** Table state at `version` (defaults to latest). An empty live set needs a
     * schema to stand on, so callers pass the table schema source for that
-    * edge; normal reads are a plain multi-path parquet scan.
+    * edge; normal reads are a plain multi-path parquet scan, with the
+    * schema the log recorded declared.
     */
   def snapshot(spark: SparkSession, base: String, version: Int = Int.MaxValue,
       mergeSchema: Boolean = false): DataFrame = {
     val v = math.min(version, latestVersion(base))
     require(v >= 0, s"no committed version in $base")
-    val paths = liveGroups(base, v).map(g => s"$base/${g.rel}")
-    require(paths.nonEmpty, s"version $v of $base has no live data groups")
-    spark.read.option("mergeSchema", mergeSchema.toString).parquet(paths: _*)
+    val live = liveGroups(base, v)
+    require(live.nonEmpty, s"version $v of $base has no live data groups")
+    read(spark, base, live, mergeSchema)
   }
 
   /** Schema-evolved read: file groups appended with DIFFERENT (compatible)
@@ -324,10 +382,10 @@ object VersionedTable {
   def snapshotRange(spark: SparkSession, base: String, statsCol: String,
       lo: Double, hi: Double, version: Int = Int.MaxValue): DataFrame = {
     val c = col(statsCol).cast("double")
-    prunedPaths(base, statsCol, lo, hi, version) match {
+    prunedGroups(base, statsCol, lo, hi, version) match {
       case Seq() => // every live group skipped: empty result, schema from v
         snapshot(spark, base, version).filter(lit(false))
-      case paths => spark.read.parquet(paths: _*).filter(c >= lo && c <= hi)
+      case groups => read(spark, base, groups).filter(c >= lo && c <= hi)
     }
   }
 
@@ -335,7 +393,11 @@ object VersionedTable {
     * pin the skip count without reaching into private state.
     */
   private[io] def prunedPaths(base: String, statsCol: String, lo: Double,
-      hi: Double, version: Int = Int.MaxValue): Seq[String] = {
+      hi: Double, version: Int = Int.MaxValue): Seq[String] =
+    prunedGroups(base, statsCol, lo, hi, version).map(g => s"$base/${g.rel}")
+
+  private def prunedGroups(base: String, statsCol: String, lo: Double,
+      hi: Double, version: Int): Seq[Group] = {
     val v = math.min(version, latestVersion(base))
     require(v >= 0, s"no committed version in $base")
     liveGroups(base, v).filter { g =>
@@ -343,7 +405,7 @@ object VersionedTable {
         case Some(c) if c == statsCol => g.max >= lo && g.min <= hi
         case _ => true   // no stats for this column: cannot skip safely
       }
-    }.map(g => s"$base/${g.rel}")
+    }
   }
 
   /** Copy-on-write DELETE WHERE: rewrite ONLY the file groups that contain
@@ -479,8 +541,9 @@ object VersionedTable {
       (snap.schema.fields ++ newCols).filterNot(f => present.contains(fold(f.name)))
         .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
     }
-    val touched = touchedGroups(base, v,
-      withGroup(snap).join(source.select(keys.map(col): _*).distinct(), keys))
+    // a semi join: the snapshot rows with a source key, whatever the
+    // source's duplicates, with no shuffle to make the source's keys distinct
+    val touched = touchedGroups(base, v, withGroup(snap).join(source, keys, "left_semi"))
     def merged(target: DataFrame): DataFrame =
       graft.ops.Merge.mergeInto(widen(target), source, keys,
         updateWhen = updateWhen, updateSet = updateSet,
@@ -510,17 +573,16 @@ object VersionedTable {
       // point lookup never wants them: k = value is NULL-false anyway)
       val slice0 = pmod(col(keyCol), lit(nGroups)) === k
       val slice = df.filter(if (k == 0) slice0 || col(keyCol).isNull else slice0)
-      writeGroup(slice, base, v, k).map { g =>
-        // one materialized read of the written group yields both the bloom
-        // sizing count and the bloom itself
-        val back = df.sparkSession.read.parquet(s"$base/${g.rel}").cache()
-        try {
-          val bloom = back.stat.bloomFilter(keyCol, math.max(1L, back.count()), fpp)
-          val bos = new java.io.ByteArrayOutputStream()
-          bloom.writeTo(bos)
-          Files.write(Paths.get(base, g.rel, s"_bloom_$keyCol.b64"),
-            java.util.Base64.getEncoder.encode(bos.toByteArray))
-        } finally back.unpersist()
+      val (group, rows) = writeCounted(slice, base, groupRel(v, k), None)
+      group.map { g =>
+        // the write observed the bloom's sizing count; one pass over the
+        // written group builds the bloom itself
+        val bloom = read(df.sparkSession, base, Seq(g))
+          .stat.bloomFilter(keyCol, math.max(1L, rows), fpp)
+        val bos = new java.io.ByteArrayOutputStream()
+        bloom.writeTo(bos)
+        Files.write(Paths.get(base, g.rel, s"_bloom_$keyCol.b64"),
+          java.util.Base64.getEncoder.encode(bos.toByteArray))
         g
       }
     }
@@ -537,20 +599,24 @@ object VersionedTable {
     */
   def snapshotPoint(spark: SparkSession, base: String, keyCol: String,
       keys: Seq[Long], version: Int = Int.MaxValue): DataFrame = {
-    pointPaths(base, keyCol, keys, version) match {
+    pointGroups(base, keyCol, keys, version) match {
       case Seq() =>
         // every group skipped: the empty frame still needs the FULL (merged)
         // table schema — building it from one group would narrow the result
         // on a schema-evolved table, and .head would throw bare on an empty
         // live set. snapshotEvolved covers both (clear require inside).
         snapshotEvolved(spark, base, version).filter(lit(false))
-      case paths => spark.read.parquet(paths: _*).filter(col(keyCol).isin(keys: _*))
+      case groups => read(spark, base, groups).filter(col(keyCol).isin(keys: _*))
     }
   }
 
   /** The group paths [[snapshotPoint]] would open — exposed for the spec. */
   private[io] def pointPaths(base: String, keyCol: String, keys: Seq[Long],
-      version: Int = Int.MaxValue): Seq[String] = {
+      version: Int = Int.MaxValue): Seq[String] =
+    pointGroups(base, keyCol, keys, version).map(g => s"$base/${g.rel}")
+
+  private def pointGroups(base: String, keyCol: String, keys: Seq[Long],
+      version: Int): Seq[Group] = {
     val v = math.min(version, latestVersion(base))
     require(v >= 0, s"no committed version in $base")
     liveGroups(base, v).filter { g =>
@@ -562,8 +628,17 @@ object VersionedTable {
           .readFrom(new java.io.ByteArrayInputStream(bytes))
         keys.exists(bloom.mightContainLong)
       }
-    }.map(g => s"$base/${g.rel}")
+    }
   }
+
+  /** Each live group's path at `version` with the schema the log recorded
+    * for it (None: a group committed before the log carried schemas) —
+    * exposed for the spec.
+    */
+  private[io] def recordedSchemas(base: String,
+      version: Int = Int.MaxValue): Seq[(String, Option[StructType])] =
+    liveGroups(base, math.min(version, latestVersion(base)))
+      .map(g => s"$base/${g.rel}" -> g.schema)
 
   /** Write a checkpoint of the CURRENT version's folded live set
     * (`_log/c<v>.txt`, atomic like any commit). Subsequent snapshot
@@ -577,7 +652,7 @@ object VersionedTable {
     val v = latestVersion(base)
     require(v >= 0, s"no committed version in $base")
     val live = liveGroups(base, v)
-    val body = ("action checkpoint" +: live.map(_.manifestLine)).mkString("", "\n", "\n")
+    val body = ("action checkpoint" +: live.flatMap(_.manifestLines)).mkString("", "\n", "\n")
     val tmp = logDir(base).resolve(f".c$v%05d.txt.tmp")
     Files.write(tmp, body.getBytes("UTF-8"))
     Files.move(tmp, logDir(base).resolve(f"c$v%05d.txt"),

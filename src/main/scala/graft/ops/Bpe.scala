@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fold, Tables}
 
 /** Byte-pair-encoding subword tokenization (Sennrich et al. 2016, public
   * arXiv 1508.07909) — REAL subword token accounting for the corpus, beside
@@ -84,7 +84,7 @@ object Bpe {
   private def train(spark: SparkSession, sfDir: String, k: Int)
       : (Seq[(String, String)], DataFrame) =
     graft.core.Memo(trainedCache, "bpe", spark, sfDir, s"#k=$k")(
-      r => Dedup.releaseCheckpoint(r._2))(trainUncached(spark, sfDir, k))
+      r => Fold.release(r._2))(trainUncached(spark, sfDir, k))
 
   /** Candidates per batched merge round — ⌈k/BatchB⌉ driver round-trips
     * total. Mirrored EXACTLY by the oracle's per-round candidate/selection

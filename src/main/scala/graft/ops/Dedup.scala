@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Memo, Tables}
+import graft.core.{Fold, Memo, Tables}
 
 /** Deduplication operators over `documents`: exact, MinHash+LSH with exact
   * Jaccard verification, SimHash. The near-dup family is the canonical
@@ -170,14 +170,7 @@ object Dedup {
       cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
       label: String,
       spark: SparkSession, sfDir: String)(body: => DataFrame): DataFrame =
-    Memo(cache, label, spark, sfDir)(releaseCheckpoint)(body.localCheckpoint(true))
-
-  /** Drop the blocks behind a `localCheckpoint`ed frame. */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+    Memo(cache, label, spark, sfDir)(Fold.release)(body.localCheckpoint(true))
 
   private[graft] def ngramJaccardCompute(spark: SparkSession, sfDir: String): DataFrame = {
     // scan-parallelism floor (r19): normText runs in-scan, and when AQE

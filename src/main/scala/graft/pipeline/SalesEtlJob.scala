@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.Tables
+import graft.core.{Fold, Tables}
 import graft.etl.{Enrich, Marts, Metrics}
 import graft.ingest.CsvBatchReader
 import graft.io.{ArchiveService, ParquetSink}
@@ -61,6 +61,12 @@ object SalesEtlJob {
     * split per sequential stage (default no-op) — the benchmark's span
     * hook; the job is inherently sequential, so in-place timing attributes
     * exactly without re-running a prefix of the job.
+    *
+    * Each metric frame is folded once ([[graft.core.Fold]]) into a local
+    * checkpoint that the sink reads; the report's row counts come from the
+    * folds' own jobs, not from a count after the write. The counts exist
+    * before the archive step, and a lost checkpoint block fails the metric
+    * write, so the run fails before C7/C6 and leaves START rows for C1.
     */
   def run(
       spark: SparkSession,
@@ -131,45 +137,35 @@ object SalesEtlJob {
       val salesMartPath = staged("mart_sales_partitioned_write")(ParquetSink.writePartitioned(
         salesMart, s"${cfg.martBase}/sales_mart", cfg.runId, Seq("sales_month", "store_id")))
 
-      // persisted: each metric is consumed twice (sink + report count) and
-      // must not re-aggregate the enriched frame both times
-      val customerMetric = Metrics.customerMonthlyFrom(enriched)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val incentive = Metrics.salesIncentiveFrom(enriched)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        staged("metrics_jdbc_write") {
-          writeMetrics(customerMetric, "customer_monthly_purchase")
-          writeMetrics(incentive, "sales_team_incentive")
-        }
-
-        // counts BEFORE the archive step: if a cached partition is lost the
-        // recompute still finds its source files; after moveInto the lineage's
-        // CSV paths no longer exist
-        val customerMetricRows = customerMetric.count()
-        val incentiveRows = incentive.count()
-
-        // C7 then C6: archive first, finalize last — a crash between the two
-        // leaves START rows, which C1 catches next run (reference order,
-        // `main_1.py:620-676`).
-        staged("c7_archive")(
-          archive.moveInto(load.validFiles, s"${cfg.stagingBase}/processed/${cfg.runId}"))
-        staged("c6_ledger_complete")(ledger.markCompleted(load.validFiles.map(baseName)))
-
-        RunReport(
-          validFiles = load.validFiles,
-          wrongTypeFiles = wrongType,
-          badSchemaFiles = load.badSchemaFiles,
-          emptyFiles = load.emptyFiles,
-          skippedAlreadyProcessed = skip,
-          customerMartPath = customerMartPath,
-          salesMartPath = salesMartPath,
-          customerMetricRows = customerMetricRows,
-          incentiveRows = incentiveRows)
-      } finally {
-        customerMetric.unpersist()
-        incentive.unpersist()
+      // The count is observed on the fold, never on the frame handed to the
+      // sink: Spark's JDBC writer runs its rows as a separate execution, so
+      // an observation there completes with 0, not the row count.
+      def foldAndWrite(metric: DataFrame, table: String): Long = {
+        val (folded, rows) = Fold(metric)
+        try writeMetrics(folded, table) finally Fold.release(folded)
+        rows
       }
+      val (customerMetricRows, incentiveRows) = staged("metrics_jdbc_write")((
+        foldAndWrite(Metrics.customerMonthlyFrom(enriched), "customer_monthly_purchase"),
+        foldAndWrite(Metrics.salesIncentiveFrom(enriched), "sales_team_incentive")))
+
+      // C7 then C6: archive first, finalize last — a crash between the two
+      // leaves START rows, which C1 catches next run (reference order,
+      // `main_1.py:620-676`).
+      staged("c7_archive")(
+        archive.moveInto(load.validFiles, s"${cfg.stagingBase}/processed/${cfg.runId}"))
+      staged("c6_ledger_complete")(ledger.markCompleted(load.validFiles.map(baseName)))
+
+      RunReport(
+        validFiles = load.validFiles,
+        wrongTypeFiles = wrongType,
+        badSchemaFiles = load.badSchemaFiles,
+        emptyFiles = load.emptyFiles,
+        skippedAlreadyProcessed = skip,
+        customerMartPath = customerMartPath,
+        salesMartPath = salesMartPath,
+        customerMetricRows = customerMetricRows,
+        incentiveRows = incentiveRows)
     } finally enriched.unpersist()
   }
 }

@@ -499,18 +499,17 @@ object EventStream {
     Drain.run(spark, "spark.sql.shuffle.partitions" -> "8") {
       stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val latest = batch
+          // read twice below (the merge's touched-group probe and the merge
+          // itself) and again by a retried optimistic merge: fold the batch
+          // once, its row count riding the fold's own job. A local
+          // checkpoint, not persist(): its job runs under AQE, which
+          // coalesces the window's shuffle to the batch's size, while a
+          // cached plan keeps every shuffle partition and the merge then
+          // writes a file per partition (measured: 1 -> 8 data files)
+          val (latest, rows) = graft.core.Fold(batch
             .withColumn("rn", row_number().over(byUser))
-            .filter(col("rn") === 1).drop("rn")
-            // read three times below (the emptiness probe, the merge's
-            // touched-group collect and the merge itself) and again by a
-            // retried optimistic merge: fold the batch once. A local
-            // checkpoint, not persist(): its job runs under AQE, which
-            // coalesces the window's shuffle to the batch's size, while a
-            // cached plan keeps every shuffle partition and the merge then
-            // writes a file per partition (measured: 1 -> 8 data files)
-            .localCheckpoint(eager = true)
-          try if (!latest.isEmpty) {
+            .filter(col("rn") === 1).drop("rn"))
+          try if (rows > 0) {
             if (graft.io.VersionedTable.latestVersion(base) < 0)
               graft.io.VersionedTable.append(latest, base)
             else {
@@ -534,7 +533,7 @@ object EventStream {
                 writerId = s"upsert-b$batchId-" +
                   java.util.UUID.randomUUID().toString.take(8))
             }
-          } finally graft.ops.Dedup.releaseCheckpoint(latest)
+          } finally graft.core.Fold.release(latest)
           ()
         }
         .option("checkpointLocation", chk)

@@ -371,9 +371,9 @@ object ScoreStream {
       // q367/q371 ran first decided whether graft_stream_severity or
       // graft_stream_widened existed, which misleads debugging. The
       // caller's name still applies on the non-default (own-stream) path.
-      graft.ops.Dedup.cached(severityDrainCache, "severity_drain", spark, sfDir)(
-        spineHitsDrainCompute(spark, sfDir, 5, 200, "eval_v1",
-          "graft_stream_severity_spine"))
+      graft.core.Memo(severityDrainCache, "severity_drain", spark, sfDir)(
+        graft.core.Fold.release)(spineHitsDrainCompute(spark, sfDir, 5, 200,
+        "eval_v1", "graft_stream_severity_spine").localCheckpoint(true))
     else spineHitsDrainCompute(spark, sfDir, n, evalPermille, salt, name)
       .localCheckpoint(true)
 
@@ -397,7 +397,7 @@ object ScoreStream {
       .join(evalGrams, Seq("gram"))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         lit(0L).as("n_toks"))
-    // checkpointing happens at the caller (Dedup.cached on the memo path,
+    // checkpointing happens at the caller (memoized on the memo path,
     // an explicit localCheckpoint on the non-default path) — exactly once
     Drain.toMemoryTable(spark, spineRows.unionByName(hitRows), "append", name)
   }

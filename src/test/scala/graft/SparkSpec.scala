@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +23,37 @@ abstract class SparkSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     d.toFile.deleteOnExit()
     d.toString
+  }
+
+  /** Spark jobs that `body` starts on this thread. Jobs carry the starting
+    * thread's local properties, so a tag set here picks out exactly these;
+    * a tagged marker job, delivered after them, says they were all seen.
+    */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val marked = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.tag") == tag) {
+          if (e.properties.getProperty("graft.test.marker") == "1") marked.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try {
+      body
+      sc.setLocalProperty("graft.test.marker", "1")
+      spark.range(1).count()
+      assert(marked.await(60, TimeUnit.SECONDS), "marker job not seen")
+      jobs.get
+    } finally {
+      sc.setLocalProperty("graft.test.marker", null)
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   /** A writable copy of the dataset at `sfDir`: same basename, fresh parent. */

@@ -1,10 +1,5 @@
 package graft.core
 
-import java.util.concurrent.CountDownLatch
-import java.util.concurrent.TimeUnit
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, lit, sum}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -20,37 +15,6 @@ class TablesSpec extends SparkSpec {
 
   private def misses: Long = Memo.counterSnapshot(Memo.cacheMisses).getOrElse("schema", 0L)
   private def hits: Long = Memo.counterSnapshot(Memo.cacheHits).getOrElse("schema", 0L)
-
-  /** Spark jobs that `body` starts on this thread. Jobs carry the starting
-    * thread's local properties, so a tag set here picks out exactly these;
-    * a tagged marker job, delivered after them, says they were all seen.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val marked = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.test.tag") == tag) {
-          if (e.properties.getProperty("graft.test.marker") == "1") marked.countDown()
-          else jobs.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.tag", tag)
-    try {
-      body
-      sc.setLocalProperty("graft.test.marker", "1")
-      spark.range(1).count()
-      assert(marked.await(60, TimeUnit.SECONDS), "marker job not seen")
-      jobs.get
-    } finally {
-      sc.setLocalProperty("graft.test.marker", null)
-      sc.setLocalProperty("graft.test.tag", null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("a repeat load in a session starts no Spark job") {
     val session = spark.newSession()

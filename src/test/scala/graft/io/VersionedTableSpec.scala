@@ -551,4 +551,133 @@ class VersionedTableSpec extends SparkSpec {
     intercept[IllegalArgumentException](VersionedTable.setTag(base, "future", 99))
     intercept[IllegalArgumentException](VersionedTable.setTag(base, "../evil", 0))
   }
+
+  // ---- the schema in the log ----------------------------------------------
+
+  /** Rows of a table with a struct, a map, an array and a TimestampNTZ
+    * column, some of them non-nullable in the frame, which parquet relaxes.
+    */
+  private def nestedRows(from: Long, until: Long) = spark.range(from, until).select(
+    col("id").as("k"), (col("id") * 1.5).as("price"),
+    struct(col("id").as("a"), lit("x").as("b")).as("st"),
+    map(lit("m"), col("id")).as("mp"),
+    array(col("id"), lit(7L)).as("arr"),
+    timestamp_seconds(col("id") * 3600L).cast("timestamp_ntz").as("ts"))
+
+  /** Every live group's recorded schema equals a parquet read's inference. */
+  private def assertRecorded(base: String, step: String): Unit = {
+    val groups = VersionedTable.recordedSchemas(base)
+    assert(groups.nonEmpty)
+    groups.foreach { case (path, recorded) =>
+      assert(recorded === Some(spark.read.parquet(path).schema), s"$step: $path")
+    }
+  }
+
+  test("every writer records the schema a parquet read of its group infers") {
+    val base = tmpDir("vt_schema_writers")
+    VersionedTable.append(nestedRows(0, 10), base)
+    assertRecorded(base, "append")
+    VersionedTable.appendOptimistic(nestedRows(10, 20), base, writerId = "w0")
+    assertRecorded(base, "appendOptimistic")
+    VersionedTable.appendClustered(nestedRows(20, 40), base, "price", nGroups = 2)
+    assertRecorded(base, "appendClustered")
+    VersionedTable.appendBloomIndexed(nestedRows(40, 60), base, "k", nGroups = 2)
+    assertRecorded(base, "appendBloomIndexed")
+    VersionedTable.merge(spark, base, nestedRows(5, 15).withColumn("price", lit(0.5)),
+      keys = Seq("k"), updateWhen = Some(lit(true)), updateSet = Map("price" -> col("s.price")))
+    assertRecorded(base, "merge")
+    VersionedTable.merge(spark, base,
+      nestedRows(55, 65).withColumn("extra", struct(col("k").as("e"))),
+      keys = Seq("k"), updateWhen = Some(lit(true)),
+      updateSet = Map("extra" -> col("s.extra")), evolveSchema = true)
+    assertRecorded(base, "merge evolveSchema")
+    val paths = VersionedTable.recordedSchemas(base).map(_._1)
+    assert(VersionedTable.snapshotEvolved(spark, base).schema ===
+      spark.read.option("mergeSchema", "true").parquet(paths: _*).schema,
+      "the declared union is parquet schema merging's")
+    VersionedTable.deleteWhere(spark, base, col("k") === 3L)
+    assertRecorded(base, "deleteWhere")
+    VersionedTable.optimize(spark, base)
+    assertRecorded(base, "optimize")
+    VersionedTable.restore(base, 3)
+    assertRecorded(base, "restore")
+    VersionedTable.checkpoint(base)
+    assertRecorded(base, "checkpoint")
+    assert(VersionedTable.snapshot(spark, base).count() === 60L)
+  }
+
+  test("a snapshot of a table whose log records its schemas starts no Spark job") {
+    val base = tmpDir("vt_schema_jobs")
+    VersionedTable.appendClustered(nestedRows(0, 40), base, "price", nGroups = 2)
+    VersionedTable.appendBloomIndexed(nestedRows(40, 80), base, "k", nGroups = 2)
+    VersionedTable.append(nestedRows(80, 90).withColumn("extra", lit("e")), base)
+    assert(jobsOf(VersionedTable.snapshot(spark, base, 1)) === 0)
+    assert(jobsOf(VersionedTable.snapshotEvolved(spark, base)) === 0)
+    assert(jobsOf(VersionedTable.snapshotRange(spark, base, "price", 3.0, 9.0, 1)) === 0)
+    assert(jobsOf(VersionedTable.snapshotPoint(spark, base, "k", Seq(42L), 1)) === 0)
+    assert(VersionedTable.snapshotEvolved(spark, base).count() === 90L)
+  }
+
+  test("a log without schema lines reads row-for-row as plain parquet reads of its groups") {
+    import spark.implicits._
+    val base = tmpDir("vt_schema_legacy")
+    // two groups of different schemas, committed by hand in the format
+    // written before the log carried schemas
+    Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.parquet(s"$base/groups/g00000-0")
+    Seq((3L, "c", 1.5)).toDF("k", "s", "x").write.parquet(s"$base/groups/g00001-0")
+    Files.createDirectories(Paths.get(base, "_log"))
+    Files.write(Paths.get(base, "_log", "v00000.txt"),
+      "action append\nadd groups/g00000-0\n".getBytes("UTF-8"))
+    Files.write(Paths.get(base, "_log", "v00001.txt"),
+      "action append\nadd groups/g00001-0\n".getBytes("UTF-8"))
+    assert(VersionedTable.recordedSchemas(base).forall(_._2.isEmpty))
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.schema === b.schema)
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    }
+    val g0 = s"$base/groups/g00000-0"
+    val g1 = s"$base/groups/g00001-0"
+    same(VersionedTable.snapshot(spark, base, 0), spark.read.parquet(g0))
+    same(VersionedTable.snapshotEvolved(spark, base),
+      spark.read.option("mergeSchema", "true").parquet(g0, g1))
+    assert(jobsOf(VersionedTable.snapshot(spark, base, 0)) > 0, "no recorded schema: inferred")
+    // a rewrite over an unrecorded group infers its read, and records its own
+    VersionedTable.deleteWhere(spark, base, col("k") === 1L)
+    val Seq((untouched, none), (rewritten, recorded)) = VersionedTable.recordedSchemas(base)
+    assert(untouched === g1 && none.isEmpty)
+    assert(recorded === Some(spark.read.parquet(rewritten).schema))
+    assert(VersionedTable.snapshotEvolved(spark, base).select("k", "s", "x").collect()
+      .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)))).sortBy(_._1).toSeq ===
+      Seq((2L, "b", None), (3L, "c", Some(1.5))))
+  }
+
+  test("a mixed-schema history read by the non-evolved snapshot still infers") {
+    import spark.implicits._
+    val base = tmpDir("vt_schema_mixed")
+    VersionedTable.append(Seq((1L, "a")).toDF("k", "s"), base)
+    VersionedTable.append(Seq((2L, "b", 7.5)).toDF("k", "s", "score"), base)
+    val paths = VersionedTable.recordedSchemas(base).map(_._1)
+    assert(jobsOf(VersionedTable.snapshot(spark, base)) > 0, "differing schemas: inferred")
+    val snap = VersionedTable.snapshot(spark, base)
+    val plain = spark.read.parquet(paths: _*)
+    assert(snap.schema === plain.schema)
+    assert(snap.exceptAll(plain).isEmpty && plain.exceptAll(snap).isEmpty)
+  }
+
+  test("clustered append: the stats ride the group writes and cost no Spark job") {
+    import spark.implicits._
+    val df = (1 to 400).map(i => (i.toLong, i.toDouble)).toDF("k", "price")
+    val clustered = jobsOf(
+      VersionedTable.appendClustered(df, tmpDir("vt_stats_jobs"), "price", nGroups = 4))
+    // the same quantile pass and four range writes, with no stats at all
+    val out = tmpDir("vt_stats_plain")
+    val plain = jobsOf {
+      val cuts = df.stat.approxQuantile("price", Array(0.25, 0.5, 0.75), 0.001)
+      val bounds = (Double.NegativeInfinity +: cuts.toSeq) :+ Double.PositiveInfinity
+      bounds.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), k) =>
+        df.filter(col("price") >= lo && col("price") < hi).write.parquet(s"$out/g$k")
+      }
+    }
+    assert(clustered === plain)
+  }
 }

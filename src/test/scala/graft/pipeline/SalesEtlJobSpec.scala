@@ -104,4 +104,22 @@ class SalesEtlJobSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("START"))
   }
+
+  test("with a real JDBC sink, each report count equals the rows its table holds") {
+    val (root, cfg, ledger, _) = setup()
+    val conn = graft.io.JdbcConn(s"jdbc:derby:$root/metrics_db;create=true")
+    val report = SalesEtlJob.run(spark, cfg, ledger,
+      (df, table) => graft.io.Jdbc.write(df, conn, table, maxConnections = Some(1)))
+    def rowsIn(table: String): Long = {
+      val c = java.sql.DriverManager.getConnection(conn.url)
+      try {
+        val rs = c.createStatement().executeQuery(s"SELECT COUNT(*) FROM $table")
+        rs.next()
+        rs.getLong(1)
+      } finally c.close()
+    }
+    assert(report.customerMetricRows > 0 && report.incentiveRows > 0)
+    assert(report.customerMetricRows === rowsIn("customer_monthly_purchase"))
+    assert(report.incentiveRows === rowsIn("sales_team_incentive"))
+  }
 }
