@@ -355,16 +355,17 @@ object IoQueries {
     * version races are FORCED deterministically via the `beforeCommit` seam,
     * one per conflict class:
     *
-    *   v0  append  F orders                       (plain single-writer)
-    *   v1  append  P orders — writer `b0` steals the version writer `a0`
-    *       resolved; a0's conditional put fails, it RETRIES the same
-    *       manifest (blind appends conflict with nothing) →
-    *   v2  append  O orders (a0's retried commit)
-    *   v3  append  o_totalprice ≥ 400000 duplicates — writer `c0` steals
-    *       the version writer `d0`'s DELETE resolved against; d0 must
-    *       RE-RESOLVE (its rewrite set depends on the snapshot), so the
-    *       retry re-discovers touched groups against v3 — including none of
-    *       c0's (all ≥ 400000) — and lands
+    *   v0  append  F orders                       (no race)
+    *   v1  append  P orders — a second append steals the version the O
+    *       orders' append resolved; that append's conditional put fails,
+    *       and it RETRIES the same manifest (blind appends conflict with
+    *       nothing) →
+    *   v2  append  O orders (the retried commit)
+    *   v3  append  o_totalprice ≥ 400000 duplicates — an append steals the
+    *       version the DELETE resolved against; the delete must RE-RESOLVE
+    *       (its rewrite set depends on the snapshot), so the retry
+    *       re-discovers touched groups against v3 — including none of the
+    *       duplicates (all ≥ 400000) — and lands
     *   v4  delete  o_totalprice < 50000
     *
     * Final state: every order ≥ 50000 plus the ≥ 400000 duplicates — the
@@ -375,17 +376,15 @@ object IoQueries {
     Scratch.once("concurrent_orders", sfDir) { base =>
       val orders = Tables.orders(spark, sfDir)
       VersionedTable.append(orders.filter(col("o_orderstatus") === "F"), base)
-      VersionedTable.appendOptimistic(
-        orders.filter(col("o_orderstatus") === "O"), base, writerId = "a0",
+      VersionedTable.append(orders.filter(col("o_orderstatus") === "O"), base,
         beforeCommit = { attempt =>
-          if (attempt == 0) VersionedTable.appendOptimistic(
-            orders.filter(col("o_orderstatus") === "P"), base, "b0")
+          if (attempt == 0)
+            VersionedTable.append(orders.filter(col("o_orderstatus") === "P"), base)
         })
-      VersionedTable.deleteWhereOptimistic(spark, base,
-        col("o_totalprice") < 50000.0, writerId = "d0",
+      VersionedTable.deleteWhere(spark, base, col("o_totalprice") < 50000.0,
         beforeCommit = { attempt =>
-          if (attempt == 0) VersionedTable.appendOptimistic(
-            orders.filter(col("o_totalprice") >= 400000.0), base, "c0")
+          if (attempt == 0)
+            VersionedTable.append(orders.filter(col("o_totalprice") >= 400000.0), base)
         })
     }
 

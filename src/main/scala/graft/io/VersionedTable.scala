@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -25,24 +25,26 @@ import graft.core.Fold
   *     `schema <relative group dir> <json>`, `remove <relative group dir>`.
   *     Version N's live set is the fold of manifests 0..N (adds minus
   *     removes).
-  *   - `groups/g<version>-<k>/` (single-writer commits) and
-  *     `groups/w-<writerId>[-r<attempt>]/` (optimistic ones) — immutable
-  *     parquet "file groups". Data files are NEVER mutated or deleted by
-  *     commits; old versions stay readable (time travel) until [[vacuum]]
-  *     reclaims them.
+  *   - `groups/<random UUID>/` — immutable parquet "file groups", named
+  *     afresh for every write, so two writers never share a data directory
+  *     whatever versions they race for. Data files are NEVER mutated or
+  *     deleted by commits; old versions stay readable (time travel) until
+  *     [[vacuum]] reclaims them. A group name is an opaque relative path:
+  *     logs written with other naming rules (`g<version>-<k>`,
+  *     `w-<id>`) read unchanged.
   *
   * Commit protocol: data groups are fully written BEFORE the manifest, and
   * the manifest lands by write-to-temp + atomic PUT-IF-ABSENT
   * ([[tryCommitAt]]) — a reader either sees version N complete or not at
   * all, and a crashed writer leaves only unreferenced data (cleaned by
-  * vacuum), never a torn table. Multi-writer follows Delta's optimistic
-  * model: every commit goes through one loop ([[commitLoop]]) that
-  * conditionally claims its version number; losers of the race DETECT the
-  * conflict (never overwrite the winner). The `*Optimistic` writers retry —
-  * an append re-submits the same manifest (blind appends conflict with
-  * nothing), a delete or merge re-resolves against the new snapshot first —
-  * and the single-writer ones throw. On an object store the conditional put
-  * is `If-None-Match`; here it is a hard link (POSIX atomic
+  * vacuum), never a torn table. Every writer follows Delta's optimistic
+  * model through one loop ([[commitLoop]]) that conditionally claims its
+  * version number; the loser of a race DETECTS the conflict (never
+  * overwrites the winner) and retries, up to [[MaxRetries]] times. An
+  * append re-submits the same manifest (blind appends conflict with
+  * nothing); a delete, merge, optimize or restore re-resolves against the
+  * new snapshot first. On an object store the conditional put is
+  * `If-None-Match`; here it is a hard link (POSIX atomic
   * create-if-absent).
   *
   * Scale shape: ALL log operations are manifest-sized (file counts, not row
@@ -173,63 +175,42 @@ object VersionedTable {
     finally Files.deleteIfExists(tmp)
   }
 
+  /** Retries of a commit that lost its version race, before the loss throws. */
+  private val MaxRetries = 10
+
   /** The one commit loop. Each attempt reads the latest version `v`, lets
-    * `resolve(v, attempt)` derive the commit (action, added groups, removed
+    * `resolve(v)` derive the commit (action, added groups, removed
     * rel-paths) against it, and conditionally puts it as `v + 1`. Losing
-    * the race re-resolves against the new snapshot, at most `maxRetries`
-    * times; then the loss throws. Single-writer callers pass 0: they fail
-    * loudly instead of overwriting the winner. `beforeCommit(attempt)` is a
-    * test seam between resolution and the put — the specs use it to force
-    * a deterministic interleave.
+    * the race re-resolves against the new snapshot, at most [[MaxRetries]]
+    * times; then the loss throws. `beforeCommit(attempt)` is a test seam
+    * between resolution and the put — the specs use it to force a
+    * deterministic interleave.
     */
   @annotation.tailrec
-  private def commitLoop(base: String, maxRetries: Int = 0,
-      beforeCommit: Int => Unit = _ => (), attempt: Int = 0)(
-      resolve: (Int, Int) => (String, Seq[Group], Seq[String])): Int = {
+  private def commitLoop(base: String, beforeCommit: Int => Unit = _ => (),
+      attempt: Int = 0)(resolve: Int => (String, Seq[Group], Seq[String])): Int = {
     val v = latestVersion(base)
-    val (action, add, remove) = resolve(v, attempt)
+    val (action, add, remove) = resolve(v)
     beforeCommit(attempt)
     if (tryCommitAt(base, v + 1, action, add, remove)) v + 1
-    else if (attempt < maxRetries) commitLoop(base, maxRetries, beforeCommit, attempt + 1)(resolve)
+    else if (attempt < MaxRetries) commitLoop(base, beforeCommit, attempt + 1)(resolve)
     else throw new java.util.ConcurrentModificationException(
-      s"$action lost version ${v + 1} of $base to another writer " +
-        s"(attempt ${attempt + 1} of ${maxRetries + 1}); the *Optimistic variants " +
-        "re-derive against the new snapshot and retry")
+      s"$action lost version ${v + 1} of $base to another writer on each of " +
+        s"its ${MaxRetries + 1} attempts")
   }
 
-  /** Commit an append — a change that depends on no snapshot — as the next
-    * version, single-writer.
+  /** Write one immutable file group under a fresh `groups/<random UUID>`
+    * and return it with its row count. The count and the stats are observed
+    * on the group's own parquet write, so they cost no Spark job; the group
+    * records the schema the write reads back as.
     */
-  private def commit(base: String, action: String, add: Seq[Group],
-      remove: Seq[String]): Int =
-    commitLoop(base)((_, _) => (action, add, remove))
-
-  /** Rel-path of group `k` of a single-writer commit of `version`. */
-  private def groupRel(version: Int, k: Int = 0): String = f"groups/g$version%05d-$k"
-
-  private def writeGroup(df: DataFrame, base: String, version: Int, k: Int,
-      statsCol: Option[String] = None): Option[Group] =
-    writeGroupNamed(df, base, groupRel(version, k), statsCol)
-
-  /** Write one immutable file group under an EXPLICIT rel-path — the
-    * version-named convention above for single-writer commits, writer-unique
-    * names for the optimistic protocol (two writers racing on the same
-    * version number must never race on a data directory).
-    */
-  private def writeGroupNamed(df: DataFrame, base: String, rel: String,
-      statsCol: Option[String] = None): Option[Group] =
-    writeCounted(df, base, rel, statsCol)._1
-
-  /** [[writeGroupNamed]], with the group's row count. The count and the
-    * stats are observed on the group's own parquet write, so they cost no
-    * Spark job; the group records the schema the write reads back as.
-    */
-  private def writeCounted(df: DataFrame, base: String, rel: String,
-      statsCol: Option[String]): (Option[Group], Long) = {
+  private def writeCounted(df: DataFrame, base: String,
+      statsCol: Option[String] = None): (Option[Group], Long) = {
+    val rel = s"groups/${java.util.UUID.randomUUID()}"
     val key = statsCol.map(col(_).cast("double"))
     val (_, m) = Fold.observed(df, count(lit(1)).as("rows") +:
         key.toSeq.flatMap(k => Seq(min(k).as("lo"), max(k).as("hi"))): _*)(
-      _.write.mode("overwrite").parquet(s"$base/$rel"))
+      _.write.parquet(s"$base/$rel"))
     val rows = m("rows").asInstanceOf[Long]
     val group = Group(rel, schema = Some(SchemaBridge.asNullable(df.schema)))
     val added = statsCol match {
@@ -269,20 +250,20 @@ object VersionedTable {
     }
   }
 
-  /** Rewrite `groups` as ONE group at `rel`: one multi-path read of all of
+  /** Rewrite `groups` as ONE new group: one multi-path read of all of
     * them, `f` over it, one write. The read merges schemas — on an evolved
     * history a single-footer read would silently drop the columns present
     * in only some groups. The new group keeps a stats column only when
     * EVERY input declared the same one (min/max re-collected by
-    * [[writeGroupNamed]]); mixed histories drop stats rather than lie.
+    * [[writeCounted]]); mixed histories drop stats rather than lie.
     */
-  private def rewrite(spark: SparkSession, base: String, groups: Seq[Group],
-      rel: String)(f: DataFrame => DataFrame): Option[Group] = {
+  private def rewrite(spark: SparkSession, base: String, groups: Seq[Group])(
+      f: DataFrame => DataFrame): Option[Group] = {
     val statsCol = groups.map(_.statsCol).distinct match {
       case Seq(only @ Some(_)) => only
       case _ => None
     }
-    writeGroupNamed(f(read(spark, base, groups, mergeSchema = true)), base, rel, statsCol)
+    writeCounted(f(read(spark, base, groups, mergeSchema = true)), base, statsCol)._1
   }
 
   /** The live groups of version `v` that hold a row of `rows`, a frame
@@ -295,26 +276,16 @@ object VersionedTable {
     liveGroups(base, v).filter(g => rels.contains(g.rel))
   }
 
-  /** Append `df` as a new file group. */
-  def append(df: DataFrame, base: String): Int = {
-    val v = latestVersion(base) + 1
-    commit(base, "append", writeGroup(df, base, v, 0).toSeq, Seq.empty)
-  }
-
-  /** Multi-writer APPEND under optimistic concurrency. The data group is
-    * written ONCE under a writer-unique name (`groups/w-<writerId>`, so
-    * version-number races never become data-directory races), then
+  /** APPEND `df` as a new file group. The group is written ONCE, then
     * [[commitLoop]] claims the next version; losing a round means another
     * writer's commit landed first — a blind append conflicts with NOTHING
     * semantically (Delta's own rule), so the loser simply retries the same
-    * manifest on the new latest version. `writerId` must be unique per
-    * in-flight commit (the Delta `txnAppId` discipline); `beforeCommit` is
-    * [[commitLoop]]'s test seam.
+    * manifest on the new latest version. `beforeCommit` is [[commitLoop]]'s
+    * test seam.
     */
-  def appendOptimistic(df: DataFrame, base: String, writerId: String,
-      maxRetries: Int = 10, beforeCommit: Int => Unit = _ => ()): Int = {
-    val group = writeGroupNamed(df, base, s"groups/w-$writerId").toSeq
-    commitLoop(base, maxRetries, beforeCommit)((_, _) => ("append", group, Seq.empty))
+  def append(df: DataFrame, base: String, beforeCommit: Int => Unit = _ => ()): Int = {
+    val group = writeCounted(df, base)._1.toSeq
+    commitLoop(base, beforeCommit)(_ => ("append", group, Seq.empty))
   }
 
   /** Append `df` range-CLUSTERED on a numeric column into `nGroups` file
@@ -328,7 +299,6 @@ object VersionedTable {
     */
   def appendClustered(df: DataFrame, base: String, statsCol: String,
       nGroups: Int): Int = {
-    val v = latestVersion(base) + 1
     val cuts = df.stat.approxQuantile(statsCol,
       (1 until nGroups).map(_.toDouble / nGroups).toArray, 0.001)
     val bounds = (None +: cuts.map(Option(_)).toSeq) :+ None
@@ -341,9 +311,9 @@ object VersionedTable {
         // group 0 so the full snapshot keeps them (a range read never wants
         // them: NULL fails the residual filter whatever groups are opened)
         val pred = if (k == 0) range || c.isNull else range
-        writeGroup(df.filter(pred), base, v, k, Some(statsCol))
+        writeCounted(df.filter(pred), base, Some(statsCol))._1
     }.toSeq
-    commit(base, "append_clustered", groups, Seq.empty)
+    commitLoop(base)(_ => ("append_clustered", groups, Seq.empty))
   }
 
   /** Table state at `version` (defaults to latest). An empty live set needs a
@@ -413,39 +383,30 @@ object VersionedTable {
     * reference (the file-pruning property VersionedTableSpec pins). One
     * Spark job prunes (matching files → owning groups), one job rewrites
     * all touched groups, minus the matching rows, as ONE new group, one
-    * manifest. A delete that matches nothing commits `delete_noop`. Losing
-    * the version race to another writer throws; [[deleteWhereOptimistic]]
-    * retries instead.
-    */
-  def deleteWhere(spark: SparkSession, base: String, predicate: Column): Int =
-    commitLoop(base)((v, _) => deleteAt(spark, base, predicate, v, groupRel(v + 1)))
-
-  /** Multi-writer COPY-ON-WRITE DELETE under optimistic concurrency. Unlike
-    * [[appendOptimistic]], a delete's rewrite set DEPENDS on the snapshot it
+    * manifest. A delete that matches nothing commits `delete_noop`.
+    *
+    * Unlike an [[append]], a delete's rewrite set DEPENDS on the snapshot it
     * read, so losing the version race forces full re-resolution: the loser
     * re-reads the new latest snapshot, re-discovers touched groups, rewrites
-    * them afresh (under the attempt-unique `groups/w-<writerId>-r<attempt>`)
-    * and tries again. Data groups from abandoned attempts are unreferenced —
-    * vacuum's crashed-writer sweep reclaims them, exactly the Delta story.
-    * The predicate must be deterministic; `beforeCommit` is [[commitLoop]]'s
-    * test seam.
+    * them afresh and tries again. Data groups from abandoned attempts are
+    * unreferenced — vacuum's crashed-writer sweep reclaims them, exactly the
+    * Delta story. The predicate must be deterministic; `beforeCommit` is
+    * [[commitLoop]]'s test seam.
     */
-  def deleteWhereOptimistic(spark: SparkSession, base: String,
-      predicate: Column, writerId: String, maxRetries: Int = 5,
+  def deleteWhere(spark: SparkSession, base: String, predicate: Column,
       beforeCommit: Int => Unit = _ => ()): Int =
-    commitLoop(base, maxRetries, beforeCommit)((v, attempt) =>
-      deleteAt(spark, base, predicate, v, s"groups/w-$writerId-r$attempt"))
+    commitLoop(base, beforeCommit)(v => deleteAt(spark, base, predicate, v))
 
   /** One delete attempt against version `v`: its touched groups rewritten,
-    * without the matching rows, as one group at `rel`.
+    * without the matching rows, as one new group.
     */
   private def deleteAt(spark: SparkSession, base: String, predicate: Column,
-      v: Int, rel: String): (String, Seq[Group], Seq[String]) = {
+      v: Int): (String, Seq[Group], Seq[String]) = {
     require(v >= 0, s"no committed version in $base")
     val touched = touchedGroups(base, v, withGroup(snapshot(spark, base, v).filter(predicate)))
     if (touched.isEmpty) ("delete_noop", Seq.empty, Seq.empty)
     // a row whose predicate is NULL was not matched: it stays
-    else ("delete", rewrite(spark, base, touched, rel)(
+    else ("delete", rewrite(spark, base, touched)(
       _.filter(!coalesce(predicate, lit(false)))).toSeq, touched.map(_.rel))
   }
 
@@ -463,8 +424,20 @@ object VersionedTable {
     * failed attempt is unreferenced garbage for vacuum, exactly the
     * crashed-writer story). With `evolveSchema` on, source columns the
     * target lacks join the schema additively (Delta's mergeSchema on
-    * MERGE); read the result with [[snapshotEvolved]]. Losing the version
-    * race to another writer throws; [[mergeOptimistic]] retries instead.
+    * MERGE); read the result with [[snapshotEvolved]]. A merge into a table
+    * with no committed version merges over an empty target of the source's
+    * schema: it inserts the source rows its insert clause admits.
+    *
+    * A merge's rewrite set AND its row results depend on the snapshot it
+    * read, so losing the version race forces full re-resolution: the loser
+    * re-reads the new latest snapshot, re-discovers touched groups, re-runs
+    * the row-level merge against the NEW target rows (an update that was a
+    * no-op against the old snapshot may now apply, and vice versa — this is
+    * what blind retry of the stale manifest would corrupt), writes a fresh
+    * group and tries the conditional put again. Abandoned attempts leave
+    * only unreferenced data for vacuum's crashed-writer sweep.
+    * `beforeCommit` is [[commitLoop]]'s test seam — the spec uses it to
+    * force two merging writers onto the same version number.
     */
   def merge(spark: SparkSession, base: String, source: DataFrame,
       keys: Seq[String],
@@ -472,40 +445,14 @@ object VersionedTable {
       updateSet: Map[String, Column] = Map.empty,
       deleteWhen: Option[Column] = None,
       insertWhen: Option[Column] = None,
-      evolveSchema: Boolean = false): Int =
-    commitLoop(base)((v, _) => mergeAt(spark, base, source, keys, updateWhen,
-      updateSet, deleteWhen, insertWhen, evolveSchema, v, groupRel(v + 1)))
-
-  /** Multi-writer MERGE under optimistic concurrency — [[merge]] through the
-    * same re-derive-and-retry loop as [[deleteWhereOptimistic]]. A merge's
-    * rewrite set AND its row results depend on the snapshot it read, so
-    * losing the version race forces full re-resolution: the loser re-reads
-    * the new latest snapshot, re-discovers touched groups, re-runs the
-    * row-level merge against the NEW target rows (an update that was a
-    * no-op against the old snapshot may now apply, and vice versa — this is
-    * what blind retry of the stale manifest would corrupt), writes a fresh
-    * `groups/w-<writerId>-r<attempt>` group and tries the conditional put
-    * again. Abandoned attempts leave only unreferenced data for vacuum's
-    * crashed-writer sweep. `writerId` must be unique per in-flight commit;
-    * `beforeCommit` is [[commitLoop]]'s test seam — the spec uses it to
-    * force two merging writers onto the same version number.
-    */
-  def mergeOptimistic(spark: SparkSession, base: String, source: DataFrame,
-      keys: Seq[String],
-      updateWhen: Option[Column] = None,
-      updateSet: Map[String, Column] = Map.empty,
-      deleteWhen: Option[Column] = None,
-      insertWhen: Option[Column] = None,
       evolveSchema: Boolean = false,
-      writerId: String,
-      maxRetries: Int = 5,
       beforeCommit: Int => Unit = _ => ()): Int =
-    commitLoop(base, maxRetries, beforeCommit)((v, attempt) => mergeAt(spark, base,
-      source, keys, updateWhen, updateSet, deleteWhen, insertWhen, evolveSchema,
-      v, s"groups/w-$writerId-r$attempt"))
+    commitLoop(base, beforeCommit)(v => mergeAt(spark, base, source, keys,
+      updateWhen, updateSet, deleteWhen, insertWhen, evolveSchema, v))
 
-  /** One merge attempt against version `v`: its touched groups merged with
-    * the whole source, inserts included, as one group at `rel`.
+  /** One merge attempt against version `v` (-1: no committed version): its
+    * touched groups merged with the whole source, inserts included, as one
+    * new group.
     */
   private def mergeAt(spark: SparkSession, base: String, source: DataFrame,
       keys: Seq[String],
@@ -514,14 +461,15 @@ object VersionedTable {
       deleteWhen: Option[Column],
       insertWhen: Option[Column],
       evolveSchema: Boolean,
-      v: Int, rel: String): (String, Seq[Group], Seq[String]) = {
-    require(v >= 0, s"no committed version in $base")
+      v: Int): (String, Seq[Group], Seq[String]) = {
     // With evolution on, source columns absent from the target join the
     // schema (Delta's mergeSchema on MERGE): the REWRITTEN group carries
     // them, untouched groups keep their old schema (no history rewrite), and
     // snapshotEvolved reads the union. The snapshot itself reads mergeSchema
     // too, so evolving an already-evolved table composes.
-    val snap = snapshot(spark, base, v, mergeSchema = evolveSchema)
+    val snap =
+      if (v < 0) spark.createDataFrame(java.util.List.of[Row](), source.schema)
+      else snapshot(spark, base, v, mergeSchema = evolveSchema)
     // new-column detection must use the SESSION's resolution rules: under the
     // default caseSensitive=false a source column differing only in case is
     // the SAME column (treating it as new would let widen's withColumn
@@ -543,15 +491,17 @@ object VersionedTable {
     }
     // a semi join: the snapshot rows with a source key, whatever the
     // source's duplicates, with no shuffle to make the source's keys distinct
-    val touched = touchedGroups(base, v, withGroup(snap).join(source, keys, "left_semi"))
+    val touched =
+      if (v < 0) Seq.empty
+      else touchedGroups(base, v, withGroup(snap).join(source, keys, "left_semi"))
     def merged(target: DataFrame): DataFrame =
       graft.ops.Merge.mergeInto(widen(target), source, keys,
         updateWhen = updateWhen, updateSet = updateSet,
         deleteWhen = deleteWhen, insertWhen = insertWhen)
     // nothing touched: the merge is inserts only, over an empty target
     val add =
-      if (touched.isEmpty) writeGroupNamed(merged(snap.filter(lit(false))), base, rel)
-      else rewrite(spark, base, touched, rel)(merged)
+      if (touched.isEmpty) writeCounted(merged(snap.filter(lit(false))), base)._1
+      else rewrite(spark, base, touched)(merged)
     ("merge", add.toSeq, touched.map(_.rel))
   }
 
@@ -566,14 +516,13 @@ object VersionedTable {
     */
   def appendBloomIndexed(df: DataFrame, base: String, keyCol: String,
       nGroups: Int, fpp: Double = 0.01): Int = {
-    val v = latestVersion(base) + 1
     val groups = (0 until nGroups).flatMap { k =>
       // NULL keys satisfy no pmod slice — route them into group 0 so the
       // full snapshot keeps them (same invariant as appendClustered; a
       // point lookup never wants them: k = value is NULL-false anyway)
       val slice0 = pmod(col(keyCol), lit(nGroups)) === k
       val slice = df.filter(if (k == 0) slice0 || col(keyCol).isNull else slice0)
-      val (group, rows) = writeCounted(slice, base, groupRel(v, k), None)
+      val (group, rows) = writeCounted(slice, base)
       group.map { g =>
         // the write observed the bloom's sizing count; one pass over the
         // written group builds the bloom itself
@@ -586,7 +535,7 @@ object VersionedTable {
         g
       }
     }
-    commit(base, "append_bloom", groups, Seq.empty)
+    commitLoop(base)(_ => ("append_bloom", groups, Seq.empty))
   }
 
   /** Point-lookup read: open only the file groups whose bloom sidecar might
@@ -680,12 +629,12 @@ object VersionedTable {
     * per-partition with a size target, same log contents.
     */
   def optimize(spark: SparkSession, base: String, smallBytes: Long = 64L << 20): Int =
-    commitLoop(base) { (v, _) =>
+    commitLoop(base) { v =>
       require(v >= 0, s"no committed version in $base")
       val small = liveGroups(base, v)
         .filter(g => dirSize(Paths.get(base, g.rel)) < smallBytes)
       if (small.size < 2) ("optimize_noop", Seq.empty, Seq.empty)
-      else ("optimize", rewrite(spark, base, small, groupRel(v + 1))(identity).toSeq,
+      else ("optimize", rewrite(spark, base, small)(identity).toSeq,
         small.map(_.rel))
     }
 
@@ -701,7 +650,7 @@ object VersionedTable {
     * contract.
     */
   def restore(base: String, toVersion: Int): Int =
-    commitLoop(base) { (v, _) =>
+    commitLoop(base) { v =>
       require(toVersion >= 0 && toVersion <= v,
         s"cannot restore $base to v$toVersion (latest is v$v)")
       val target = liveGroups(base, toVersion)
@@ -723,14 +672,13 @@ object VersionedTable {
     * number of directories reclaimed. Driver-side and manifest-sized, like
     * the rest of the log.
     *
-    * Concurrency contract: vacuum is a WRITER-side maintenance operation
-    * under this table's single-writer design — an in-flight append's
-    * not-yet-committed group is indistinguishable from a crashed writer's
-    * orphan, so running vacuum concurrently with a writer can delete data
-    * out from under a commit about to land. The conditional put guards
-    * manifests, not in-flight groups: a multi-writer deployment also needs
-    * an age-based retention window before orphan sweeping, exactly as
-    * Delta's VACUUM does.
+    * Concurrency contract: vacuum must not run while another writer is in
+    * flight — an in-flight commit's not-yet-committed group is
+    * indistinguishable from a crashed writer's orphan, so running vacuum
+    * concurrently with a writer can delete data out from under a commit
+    * about to land. The conditional put guards manifests, not in-flight
+    * groups: concurrent writers also need an age-based retention window
+    * before orphan sweeping, exactly as Delta's VACUUM does.
     */
   def vacuum(base: String, retainVersions: Int = 1): Int = {
     val latest = latestVersion(base)

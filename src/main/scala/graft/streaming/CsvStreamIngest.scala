@@ -22,20 +22,20 @@ object CsvStreamIngest {
     * processes ONLY the new files.
     */
   def drain(spark: SparkSession, srcDir: String, outDir: String,
-      checkpointDir: String, schema: StructType): Unit = {
-    val q = spark.readStream
-      .schema(schema)
-      .option("header", "true")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-      .csv(srcDir)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      checkpointDir: String, schema: StructType): Unit =
+    Drain.run(spark) {
+      spark.readStream
+        .schema(schema)
+        .option("header", "true")
+        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        .csv(srcDir)
+        .writeStream
+        .format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", checkpointDir)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
 
   /** Oracle-checkable wrapper: fresh scratch, one drain of the lineitem CSV
     * drop, read the sink back — must equal the source table exactly.

@@ -272,13 +272,14 @@ object EventStream {
     // NTZ is wall-clock identity and the window boundaries are unchanged
     val events = spark.readStream.schema(eventsSchema).parquet(src)
       .withColumn("ts", col("ts").cast("timestamp"))
-    val q = trendingWatermarked(events, watermark, k)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", chk)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    Drain.run(spark) {
+      trendingWatermarked(events, watermark, k)
+        .writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", chk)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    }
   }
 
   /** PRODUCTION wiring of [[hourlyRollupWatermarked]] into a TRANSACTIONAL
@@ -439,13 +440,11 @@ object EventStream {
       streamCounts.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (!batch.isEmpty) {
-            if (graft.io.VersionedTable.latestVersion(countsBase) < 0)
-              graft.io.VersionedTable.append(batch, countsBase)
-            else
-              graft.io.VersionedTable.merge(spark, countsBase, batch,
-                keys = Seq("win", "bucket"),
-                updateWhen = Some(lit(true)),
-                updateSet = Map("n_cur" -> col("s.n_cur")))
+            // the first batch merges into the absent table: inserts only
+            graft.io.VersionedTable.merge(spark, countsBase, batch,
+              keys = Seq("win", "bucket"),
+              updateWhen = Some(lit(true)),
+              updateSet = Map("n_cur" -> col("s.n_cur")))
             val store = graft.io.VersionedTable.snapshot(spark, countsBase)
             // trailing-horizon slice: a one-row max-day frame broadcast
             // back onto the store (never a driver-side date compute)
@@ -500,7 +499,7 @@ object EventStream {
       stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // read twice below (the merge's touched-group probe and the merge
-          // itself) and again by a retried optimistic merge: fold the batch
+          // itself) and again by a retried merge: fold the batch
           // once, its row count riding the fold's own job. A local
           // checkpoint, not persist(): its job runs under AQE, which
           // coalesces the window's shuffle to the batch's size, while a
@@ -510,29 +509,22 @@ object EventStream {
             .withColumn("rn", row_number().over(byUser))
             .filter(col("rn") === 1).drop("rn"))
           try if (rows > 0) {
-            if (graft.io.VersionedTable.latestVersion(base) < 0)
-              graft.io.VersionedTable.append(latest, base)
-            else {
-              val newer = col("s.ts") > col("t.ts") ||
-                (col("s.ts") === col("t.ts") && col("s.event_id") > col("t.event_id"))
-              // mergeOptimistic, not merge: a concurrent writer on the same
-              // table (another stream, a batch backfill) must trigger
-              // re-resolution against the new snapshot, not abort the
-              // micro-batch. The monotone merge condition makes the retried
-              // merge land the same final state regardless of interleaving.
-              // writerId is unique per IN-FLIGHT commit (uuid suffix); a
-              // replayed micro-batch gets a fresh one, so it never clobbers
-              // data groups a crashed run already committed.
-              graft.io.VersionedTable.mergeOptimistic(spark, base, latest,
-                keys = Seq("user_id"),
-                updateWhen = Some(newer),
-                updateSet = Map(
-                  "event_id" -> col("s.event_id"), "ts" -> col("s.ts"),
-                  "event_type" -> col("s.event_type"), "value" -> col("s.value"),
-                  "props" -> col("s.props")),
-                writerId = s"upsert-b$batchId-" +
-                  java.util.UUID.randomUUID().toString.take(8))
-            }
+            val newer = col("s.ts") > col("t.ts") ||
+              (col("s.ts") === col("t.ts") && col("s.event_id") > col("t.event_id"))
+            // a concurrent writer on the same table (another stream, a batch
+            // backfill) makes the merge re-resolve against the new snapshot,
+            // not abort the micro-batch; the monotone merge condition lands
+            // the same final state whatever the interleaving, the first batch
+            // (a merge over the absent table) included. Every attempt writes
+            // a freshly named group, so a replayed micro-batch never clobbers
+            // data groups a crashed run already committed.
+            graft.io.VersionedTable.merge(spark, base, latest,
+              keys = Seq("user_id"),
+              updateWhen = Some(newer),
+              updateSet = Map(
+                "event_id" -> col("s.event_id"), "ts" -> col("s.ts"),
+                "event_type" -> col("s.event_type"), "value" -> col("s.value"),
+                "props" -> col("s.props")))
           } finally graft.core.Fold.release(latest)
           ()
         }

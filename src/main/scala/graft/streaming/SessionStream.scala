@@ -215,7 +215,7 @@ object SessionStream {
       org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
       org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType)))
-    val q = spark.readStream.schema(schema).parquet(src)
+    val sessions = spark.readStream.schema(schema).parquet(src)
       .withWatermark("ts", watermarkDelay)
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(
@@ -226,10 +226,11 @@ object SessionStream {
           .cast("double").as("session_value"))
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), col("session_value"))
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", chk)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    try q.processAllAvailable() finally q.stop()
+    Drain.run(spark) {
+      sessions.writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", chk)
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    }
   }
 
   /** Drain an update-mode session stream to completion (AvailableNow) and keep

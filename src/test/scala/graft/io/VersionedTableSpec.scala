@@ -12,6 +12,20 @@ import graft.SparkSpec
   */
 class VersionedTableSpec extends SparkSpec {
 
+  /** The group rel-path (`groups/<dir>`) a group or data-file path lies in. */
+  private def groupOf(path: String): String =
+    "/(groups/[^/]+)".r.findFirstMatchIn(path).map(_.group(1))
+      .getOrElse(fail(s"not under groups/: $path"))
+
+  /** The live groups the log lists at `version`, in log order. */
+  private def loggedGroups(base: String, version: Int = Int.MaxValue): Seq[String] =
+    VersionedTable.recordedSchemas(base, version).map(g => groupOf(g._1))
+
+  /** The groups a read of `base`'s latest snapshot opens. */
+  private def readGroups(base: String): Set[String] =
+    VersionedTable.snapshot(spark, base).select(input_file_name()).distinct()
+      .collect().map(r => groupOf(r.getString(0))).toSet
+
   test("append/snapshot round-trips and versions are immutable under later commits") {
     import spark.implicits._
     val base = tmpDir("vt_basic")
@@ -33,8 +47,9 @@ class VersionedTableSpec extends SparkSpec {
   test("copy-on-write delete rewrites ONLY groups containing matches") {
     import spark.implicits._
     val base = tmpDir("vt_cow")
-    VersionedTable.append(Seq((1L, "x"), (2L, "x")).toDF("k", "s"), base)   // g00000-0
-    VersionedTable.append(Seq((10L, "y"), (11L, "y")).toDF("k", "s"), base) // g00001-0
+    VersionedTable.append(Seq((1L, "x"), (2L, "x")).toDF("k", "s"), base)
+    VersionedTable.append(Seq((10L, "y"), (11L, "y")).toDF("k", "s"), base)
+    val Seq(first, second) = loggedGroups(base, 1)
     VersionedTable.deleteWhere(spark, base, col("k") === 10L)
     val hist = VersionedTable.history(spark, base).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
@@ -43,11 +58,10 @@ class VersionedTableSpec extends SparkSpec {
       (1L, "append", 1L, 0L),
       (2L, "delete", 1L, 1L)), "exactly one group rewritten, one removed")
     // the untouched first group is still live by its ORIGINAL identity
-    val live = VersionedTable.snapshot(spark, base)
-      .select(input_file_name()).distinct().collect().map(_.getString(0))
-    assert(live.exists(_.contains("/groups/g00000-0/")),
+    val live = readGroups(base)
+    assert(live.contains(first),
       "group untouched by the predicate carries over by reference")
-    assert(!live.exists(_.contains("/groups/g00001-0/")),
+    assert(!live.contains(second),
       "touched group is replaced by its rewrite")
   }
 
@@ -141,6 +155,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.append(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "s", "x"), base)
     VersionedTable.append(Seq((10L, "j", 100.0)).toDF("k", "s", "x"), base)
     VersionedTable.append(Seq((20L, "z", 7.0)).toDF("k", "s", "x"), base)
+    val Seq(g0, _, g2) = loggedGroups(base, 2)
     val source = Seq(
       (2L, "B", 5.0),     // matched in g0 → update (x += 5)
       (10L, "del", 0.0),  // matched in g1 → delete
@@ -158,11 +173,10 @@ class VersionedTableSpec extends SparkSpec {
     // time travel: the pre-merge version still reads the old state
     assert(VersionedTable.snapshot(spark, base, 2).count() === 4L)
     // group untouched by any source key carries over by its ORIGINAL identity
-    val live = VersionedTable.snapshot(spark, base)
-      .select(input_file_name()).distinct().collect().map(_.getString(0))
-    assert(live.exists(_.contains("/groups/g00002-0/")),
+    val live = readGroups(base)
+    assert(live.contains(g2),
       "untouched group carried by reference")
-    assert(!live.exists(_.contains("/groups/g00000-0/")),
+    assert(!live.contains(g0),
       "touched group replaced by its rewrite")
     val hist = VersionedTable.history(spark, base).collect()
       .map(r => (r.getString(1), r.getLong(2), r.getLong(3))).last
@@ -195,12 +209,12 @@ class VersionedTableSpec extends SparkSpec {
     // deterministically. A's first put must FAIL (conflict detected, not
     // clobbered), and the retry must land as v2.
     var attempts = List.empty[Int]
-    val vA = VersionedTable.appendOptimistic(
-      Seq((2L, "a")).toDF("k", "s"), base, writerId = "a0",
+    val vA = VersionedTable.append(
+      Seq((2L, "a")).toDF("k", "s"), base,
       beforeCommit = { attempt =>
         attempts :+= attempt
         if (attempt == 0)
-          VersionedTable.appendOptimistic(Seq((3L, "b")).toDF("k", "s"), base, "b0")
+          VersionedTable.append(Seq((3L, "b")).toDF("k", "s"), base)
       })
     assert(attempts === List(0, 1), "loser retried exactly once")
     assert(vA === 2, "loser re-resolved and landed AFTER the winner")
@@ -220,11 +234,10 @@ class VersionedTableSpec extends SparkSpec {
     // Writer A prepares DELETE k<=2 against v0; before its put, writer B
     // appends (3,"z") — A must re-derive: the retry reads the post-append
     // snapshot, so the delete lands on the new latest without losing B's row.
-    val vA = VersionedTable.deleteWhereOptimistic(spark, base, col("k") <= 2L,
-      writerId = "a1",
+    val vA = VersionedTable.deleteWhere(spark, base, col("k") <= 2L,
       beforeCommit = { attempt =>
         if (attempt == 0)
-          VersionedTable.appendOptimistic(Seq((3L, "z")).toDF("k", "s"), base, "b1")
+          VersionedTable.append(Seq((3L, "z")).toDF("k", "s"), base)
       })
     assert(vA === 2)
     assert(VersionedTable.snapshot(spark, base).collect().map(_.getLong(0)).sorted
@@ -247,19 +260,17 @@ class VersionedTableSpec extends SparkSpec {
     // committed state — a blind retry of A's stale manifest would land
     // "b+A", silently dropping B's update.
     var attempts = List.empty[Int]
-    val vA = VersionedTable.mergeOptimistic(spark, base,
+    val vA = VersionedTable.merge(spark, base,
       Seq((2L, "srcA"), (4L, "d")).toDF("k", "s"), keys = Seq("k"),
       updateWhen = Some(lit(true)),
       updateSet = Map("s" -> concat(col("t.s"), lit("+A"))),
-      writerId = "ma",
       beforeCommit = { attempt =>
         attempts :+= attempt
         if (attempt == 0)
-          VersionedTable.mergeOptimistic(spark, base,
+          VersionedTable.merge(spark, base,
             Seq((2L, "srcB"), (3L, "c")).toDF("k", "s"), keys = Seq("k"),
             updateWhen = Some(lit(true)),
-            updateSet = Map("s" -> concat(col("t.s"), lit("+B"))),
-            writerId = "mb")
+            updateSet = Map("s" -> concat(col("t.s"), lit("+B"))))
       })
     assert(attempts === List(0, 1), "loser retried exactly once")
     assert(vA === 2, "loser re-resolved and landed AFTER the winner")
@@ -278,26 +289,102 @@ class VersionedTableSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap === snap)
   }
 
-  test("single-writer commit DETECTS a stolen version instead of overwriting it") {
+  test("every writer lands after losing the version race; old versions read as before") {
+    import spark.implicits._
+    val base = tmpDir("vt_race_all")
+    def rowsAt(v: Int) = VersionedTable.snapshot(spark, base, v).collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    def allVersions() = (0 to VersionedTable.latestVersion(base)).map(rowsAt)
+    def append(k: Long, s: String) = VersionedTable.append(Seq((k, s)).toDF("k", "s"), base)
+    VersionedTable.append(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), base) // v0
+    /** Runs `write` with a seam that commits `concurrent` before its first
+      * put; checks that the write lost that version and landed on the next,
+      * with every earlier version reading as before.
+      */
+    def losesOnce(concurrent: => Unit)(write: (Int => Unit) => Int): Unit = {
+      val before = allVersions()
+      var attempts = List.empty[Int]
+      val v = write { attempt =>
+        attempts :+= attempt
+        if (attempt == 0) concurrent
+      }
+      assert(attempts === List(0, 1), "lost once, then landed")
+      assert(v === before.size + 1, "landed after the concurrent commit")
+      assert(allVersions().take(before.size) === before, "earlier versions unchanged")
+    }
+    // two appends resolved against the same version, v0
+    losesOnce(append(4L, "d"))(seam =>
+      VersionedTable.append(Seq((3L, "c")).toDF("k", "s"), base, beforeCommit = seam))
+    assert(rowsAt(1) === Seq((1L, "a"), (2L, "b"), (4L, "d")))
+    assert(rowsAt(2) === Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+    val Seq(_, concurrentGroup, retriedGroup) = loggedGroups(base, 2)
+    assert(concurrentGroup !== retriedGroup, "each append wrote its own group")
+    losesOnce(append(5L, "e"))(seam =>
+      VersionedTable.deleteWhere(spark, base, col("k") === 1L, beforeCommit = seam))
+    assert(rowsAt(4) === Seq((2L, "b"), (3L, "c"), (4L, "d"), (5L, "e")))
+    losesOnce(append(7L, "g"))(seam =>
+      VersionedTable.merge(spark, base, Seq((2L, "B"), (6L, "f")).toDF("k", "s"),
+        keys = Seq("k"), updateWhen = Some(lit(true)), updateSet = Map("s" -> col("s.s")),
+        beforeCommit = seam))
+    assert(rowsAt(6) ===
+      Seq((2L, "B"), (3L, "c"), (4L, "d"), (5L, "e"), (6L, "f"), (7L, "g")))
+  }
+
+  test("merge into a table with no version inserts, even after losing v0") {
+    import spark.implicits._
+    // no race: the admitted source rows become version 0
+    val fresh = tmpDir("vt_merge_absent")
+    assert(VersionedTable.merge(spark, fresh, Seq((1L, "a"), (2L, "skip")).toDF("k", "s"),
+      keys = Seq("k"), insertWhen = Some(col("s.s") =!= "skip")) === 0)
+    assert(VersionedTable.snapshot(spark, fresh).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((1L, "a")))
+    // the merge resolves against the absent table; before its put another
+    // writer appends v0, holding an older row of key 1 and a newer one of 2
+    val base = tmpDir("vt_merge_absent_race")
+    val source = Seq((1L, 10L, "merge"), (2L, 10L, "merge"), (3L, 10L, "merge"))
+      .toDF("k", "ts", "s")
+    var attempts = List.empty[Int]
+    val v = VersionedTable.merge(spark, base, source, keys = Seq("k"),
+      updateWhen = Some(col("s.ts") > col("t.ts")),
+      updateSet = Map("ts" -> col("s.ts"), "s" -> col("s.s")),
+      beforeCommit = { attempt =>
+        attempts :+= attempt
+        if (attempt == 0) VersionedTable.append(
+          Seq((1L, 5L, "append"), (2L, 20L, "append"), (4L, 5L, "append"))
+            .toDF("k", "ts", "s"), base)
+      })
+    assert(attempts === List(0, 1) && v === 1)
+    val rows = VersionedTable.snapshot(spark, base).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sortBy(_._1).toSeq
+    assert(rows === Seq((1L, 10L, "merge"), (2L, 20L, "append"), (3L, 10L, "merge"),
+      (4L, 5L, "append")), "one row per key, the newer one")
+  }
+
+  test("a commit that loses every version race throws at the retry bound") {
     import spark.implicits._
     val base = tmpDir("vt_conflict_detect")
     VersionedTable.append(Seq((1L, "a")).toDF("k", "s"), base) // v0
-    // steal v1 by writing its manifest directly (what another process does)
-    Files.write(Paths.get(base, "_log", "v00001.txt"),
-      "action append\n".getBytes("UTF-8"))
-    intercept[java.util.ConcurrentModificationException] {
-      // append resolves v1 = taken? No: latestVersion now 1, so append goes
-      // to v2 cleanly — force the race at the manifest layer instead
-      VersionedTable.deleteWhereOptimistic(spark, base, col("k") === 1L,
-        writerId = "c0", maxRetries = 0,
+    def manifest(v: Int) = Paths.get(base, "_log", f"v$v%05d.txt")
+    def stolen(v: Int) = s"action stolen $v\n"
+    // before every put, another process claims the version the attempt
+    // resolved, by writing its manifest directly
+    var attempts = 0
+    val err = intercept[java.util.ConcurrentModificationException] {
+      VersionedTable.deleteWhere(spark, base, col("k") === 1L,
         beforeCommit = { _ =>
-          Files.write(Paths.get(base, "_log", "v00002.txt"),
-            "action append\n".getBytes("UTF-8"))
+          attempts += 1
+          Files.write(manifest(attempts), stolen(attempts).getBytes("UTF-8"))
         })
     }
+    assert(attempts > 1, "the loser retried before giving up")
+    assert(err.getMessage.contains(s"each of its $attempts attempts"), err.getMessage)
     // the stolen manifests were never overwritten
-    assert(new String(Files.readAllBytes(Paths.get(base, "_log", "v00002.txt")), "UTF-8")
-      === "action append\n")
+    assert(VersionedTable.latestVersion(base) === attempts)
+    (1 to attempts).foreach { v =>
+      assert(new String(Files.readAllBytes(manifest(v)), "UTF-8") === stolen(v), s"v$v")
+    }
+    assert(VersionedTable.snapshot(spark, base).collect().map(_.getLong(0)).toSeq
+      === Seq(1L), "the delete never landed")
   }
 
   test("a torn manifest write is invisible: only atomically moved manifests count") {
@@ -324,9 +411,8 @@ class VersionedTableSpec extends SparkSpec {
     val after = VersionedTable.snapshot(spark, base)
     assert(after.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
       === before.toSeq, "optimize never changes table contents")
-    val liveDirs = after.select(input_file_name()).distinct().collect().map(_.getString(0))
-      .flatMap(f => "groups/(g[0-9]+-[0-9]+)".r.findFirstMatchIn(f).map(_.group(1))).distinct
-    assert(liveDirs.length === 1, s"three small groups packed into one, got $liveDirs")
+    val liveDirs = readGroups(base)
+    assert(liveDirs.size === 1, s"three small groups packed into one, got $liveDirs")
     // time travel to the fragmented history still works
     assert(VersionedTable.snapshot(spark, base, 1).count() === 3L)
     val hist = VersionedTable.history(spark, base).collect()
@@ -421,6 +507,7 @@ class VersionedTableSpec extends SparkSpec {
     val base = tmpDir("vt_merge_evolve")
     VersionedTable.append(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), base)  // touched
     VersionedTable.append(Seq((10L, "x")).toDF("k", "s"), base)           // untouched
+    val untouchedGroup = loggedGroups(base, 1).last
     VersionedTable.merge(spark, base,
       Seq((2L, "b2", 9.5), (3L, "c", 1.5)).toDF("k", "s", "score"),
       keys = Seq("k"),
@@ -438,7 +525,8 @@ class VersionedTableSpec extends SparkSpec {
       (10L, "x", None)),        // untouched group, old schema on disk
       "additive evolution composes with CoW merge")
     // the untouched group's files genuinely keep the OLD schema
-    val untouched = spark.read.parquet(s"$base/groups/g00001-0")
+    assert(loggedGroups(base).contains(untouchedGroup), "untouched group still live")
+    val untouched = spark.read.parquet(s"$base/$untouchedGroup")
     assert(untouched.columns.toSeq === Seq("k", "s"))
     // pre-merge time travel is no wider than it was
     assert(VersionedTable.snapshot(spark, base, 1).columns.toSeq === Seq("k", "s"))
@@ -577,8 +665,8 @@ class VersionedTableSpec extends SparkSpec {
     val base = tmpDir("vt_schema_writers")
     VersionedTable.append(nestedRows(0, 10), base)
     assertRecorded(base, "append")
-    VersionedTable.appendOptimistic(nestedRows(10, 20), base, writerId = "w0")
-    assertRecorded(base, "appendOptimistic")
+    VersionedTable.append(nestedRows(10, 20), base)
+    assertRecorded(base, "second append")
     VersionedTable.appendClustered(nestedRows(20, 40), base, "price", nGroups = 2)
     assertRecorded(base, "appendClustered")
     VersionedTable.appendBloomIndexed(nestedRows(40, 60), base, "k", nGroups = 2)
