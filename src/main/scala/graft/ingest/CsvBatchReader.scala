@@ -93,16 +93,19 @@ object CsvBatchReader {
     * extras arrive as strings, field order follows the file's header (CSV
     * schema application is positional).
     */
-  private def groupSchema(header: Seq[String], declared: Option[StructType]): StructType = {
-    val byName = declared.map(s => s.fields.map(f => f.name -> f).toMap).getOrElse(Map.empty)
+  private def groupSchema(header: Seq[String], declared: StructType): StructType = {
+    val byName = declared.fields.map(f => f.name -> f).toMap
     StructType(header.map(c => byName.getOrElse(c, StructField(c, StringType))))
   }
 
+  /** Validate and load `files` against `schema`: its fields are the
+    * mandatory columns, in canonical order, with their declared types.
+    */
   def validateAndLoad(
       spark: SparkSession,
       files: Seq[String],
-      mandatory: Seq[String],
-      schema: Option[StructType] = None): LoadResult = {
+      schema: StructType): LoadResult = {
+    val mandatory = schema.fieldNames.toSeq
 
     // driver-side metadata pass: header + emptiness, no Spark jobs.
     // Duplicate header names are rejected up front — they would make the
@@ -123,19 +126,18 @@ object CsvBatchReader {
       case (f, scala.util.Success(pr)) if headerOk(pr) && pr.hasData => (f, pr.header)
     }.toVector
 
-    // one multi-path scan per distinct header layout. If a GROUP scan fails
-    // (possible eagerly in inference mode, where inferSchema runs a job), fall
-    // back to per-file construction so one bad file quarantines itself — the
-    // reference's broad except is per file (`transform.py:66-68`), and a whole
-    // day's batch usually shares one header layout.
+    // one multi-path scan per distinct header layout. Building a scan lists
+    // its paths, so a file that vanished between the header probe and here
+    // fails its whole GROUP; fall back to per-file construction so that file
+    // quarantines itself alone — the reference's broad except is per file
+    // (`transform.py:66-68`), and a whole day's batch usually shares one
+    // header layout.
     def build(header: Seq[String], paths: Seq[String]): DataFrame = {
-      val base = spark.read
+      val df = spark.read
         .option("header", "true")
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-      val df = schema match {
-        case Some(_) => base.schema(groupSchema(header, schema)).csv(paths: _*)
-        case None    => base.option("inferSchema", "true").csv(paths: _*)
-      }
+        .schema(groupSchema(header, schema))
+        .csv(paths: _*)
       val extras = header.filterNot(mandatory.contains)
       val withExtra =
         if (extras.isEmpty) df.withColumn(AdditionalColumn, lit(null).cast("string"))
@@ -161,11 +163,7 @@ object CsvBatchReader {
         }
     }
 
-    val data =
-      try frames.reduceOption(_ unionByName _)
-      catch { case NonFatal(_) => None } // incompatible group schemas (inference mode)
-
-    LoadResult(data, valid.map(_._1), bad, empty)
+    LoadResult(frames.reduceOption(_ unionByName _), valid.map(_._1), bad, empty)
   }
 
   /** File-type gate (C3, `/root/reference/src/main_1.py:157-181`): split a listing

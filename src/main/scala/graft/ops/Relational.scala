@@ -42,8 +42,7 @@ object Relational {
     val dir = csvCopyOfLineitem(spark, sfDir)
     val files = new java.io.File(dir).listFiles()
       .filter(f => f.getName.endsWith(".csv")).map(_.getAbsolutePath).sorted.toSeq
-    val result = CsvBatchReader.validateAndLoad(
-      spark, files, Tables.lineitemSchema.fieldNames.toSeq, Some(Tables.lineitemSchema))
+    val result = CsvBatchReader.validateAndLoad(spark, files, Tables.lineitemSchema)
     result.data.getOrElse(spark.emptyDataFrame)
       .drop(CsvBatchReader.AdditionalColumn)
   }

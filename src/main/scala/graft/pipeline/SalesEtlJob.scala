@@ -111,7 +111,7 @@ object SalesEtlJob {
 
     // Ingest + validate (P1-P3, U1); bad/empty files quarantined.
     val load = staged("ingest_validate")(CsvBatchReader.validateAndLoad(
-      spark, todo, Tables.lineitemSchema.fieldNames.toSeq, Some(Tables.lineitemSchema)))
+      spark, todo, Tables.lineitemSchema))
     archive.moveInto(load.badSchemaFiles, s"${cfg.stagingBase}/wrong_files/${cfg.runId}")
     archive.moveInto(load.emptyFiles, s"${cfg.stagingBase}/wrong_files/${cfg.runId}")
     val fact = load.data.getOrElse(

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.core.Tables
@@ -23,7 +22,7 @@ object CsvStreamIngest {
     */
   def drain(spark: SparkSession, srcDir: String, outDir: String,
       checkpointDir: String, schema: StructType): Unit =
-    Drain.run(spark) {
+    Drain.run(spark, checkpointDir) {
       spark.readStream
         .schema(schema)
         .option("header", "true")
@@ -32,9 +31,6 @@ object CsvStreamIngest {
         .writeStream
         .format("parquet")
         .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
     }
 
   /** Oracle-checkable wrapper: fresh scratch, one drain of the lineitem CSV

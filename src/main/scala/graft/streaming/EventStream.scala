@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,13 +34,11 @@ object EventStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** FileStreamSource needs a *directory* (and can't apply the nanos-as-long
-    * conversion), so materialize a scratch directory of micro-timestamped
-    * events once per scale factor. Deterministic: content derives only from the
-    * source parquet.
-    */
-  private[streaming] def eventsDir(spark: SparkSession, sfDir: String): String =
-    graft.core.Scratch.once("events", sfDir)(Tables.events(spark, sfDir).write.parquet(_))
+  /** The per-group event totals of every event rollup. */
+  private def totals(g: RelationalGroupedDataset): DataFrame =
+    g.agg(
+      count(lit(1)).as("n_events"),
+      sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
 
   /** The PRODUCTION shape of the hourly rollup: event-time watermark + append
     * output. Only windows the watermark has passed are emitted (exactly once,
@@ -51,12 +47,10 @@ object EventStream {
     * transform: plug between `readStream` and any append-mode sink.
     */
   def hourlyRollupWatermarked(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
+    hourlyRollup(events.withWatermark("ts", watermark))
+
+  private def hourlyRollup(events: DataFrame): DataFrame =
+    totals(events.groupBy(window(col("ts"), "1 hour"), col("event_type")))
       .select(col("window.start").as("hour"),
         col("event_type"), col("n_events"), col("total_value"))
 
@@ -65,18 +59,9 @@ object EventStream {
     * [[graft.ops.Events.hourlyRollup]] — the batch query is the oracle contract
     * for this streaming one.
     */
-  def hourlyRollupAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val stream = spark.readStream
-      .schema(eventsSchema)
-      .parquet(eventsDir(spark, sfDir))
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
-    Drain.toMemoryTable(spark, stream, "complete", "graft_stream_hourly").select(
-      col("window.start").as("hour"),
-      col("event_type"), col("n_events"), col("total_value"))
-  }
+  def hourlyRollupAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
+    Drain.toMemoryTable(spark, hourlyRollup(Staged.stream(spark, sfDir, "events")),
+      "complete", "graft_stream_hourly")
 
   /** Streaming hopping (sliding) windows — the third member of the streaming
     * window family beside tumbling (above) and session (q105's
@@ -88,13 +73,8 @@ object EventStream {
     * watermark + append, exactly as [[hourlyRollupWatermarked]].
     */
   def hoppingRollupAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val stream = spark.readStream
-      .schema(eventsSchema)
-      .parquet(eventsDir(spark, sfDir))
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
+    val stream = totals(Staged.stream(spark, sfDir, "events")
+      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type")))
     Drain.toMemoryTable(spark, stream, "complete", "graft_stream_hopping").select(
       col("w.start").as("window_start"), col("w.end").as("window_end"),
       col("event_type"), col("n_events"), col("total_value"))
@@ -113,12 +93,18 @@ object EventStream {
     * deterministic pair set (an OUTER stream-stream join would additionally
     * need the watermark to pass to finalize null-padded rows).
     */
-  def purchaseClickJoinAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = eventsDir(spark, sfDir)
-    def side(eventType: String): DataFrame = spark.readStream
-      .schema(eventsSchema)
-      .parquet(dir)
-      .filter(col("event_type") === eventType)
+  def purchaseClickJoinAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
+    Drain.toMemoryTable(spark, purchaseClicks(spark, sfDir, "inner"), "append",
+      "graft_stream_join")
+      .select(col("purchase_id"), col("user_id"), col("click_id"))
+
+  /** The purchase stream joined to the same user's clicks in the 10 minutes
+    * up to each purchase, both sides under a one-hour watermark.
+    */
+  private def purchaseClicks(spark: SparkSession, sfDir: String,
+      joinType: String): DataFrame = {
+    def side(eventType: String): DataFrame =
+      Staged.stream(spark, sfDir, "events").filter(col("event_type") === eventType)
     // watermarks require TimestampType (not NTZ); under the UTC session the
     // cast is wall-clock identity, and neither ts reaches the output
     val purchases = side("purchase")
@@ -129,12 +115,11 @@ object EventStream {
       .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
         col("ts").cast("timestamp").as("click_ts"))
       .withWatermark("click_ts", "1 hour")
-    val joined = purchases.join(clicks,
+    purchases.join(clicks,
       col("click_user") === col("user_id") &&
         col("click_ts") >= col("purchase_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("click_ts") <= col("purchase_ts"))
-    Drain.toMemoryTable(spark, joined, "append", "graft_stream_join")
-      .select(col("purchase_id"), col("user_id"), col("click_id"))
+        col("click_ts") <= col("purchase_ts"),
+      joinType)
   }
 
   /** LEFT OUTER stream-stream join — the attribution join that also keeps
@@ -149,24 +134,7 @@ object EventStream {
     * horizon scalar rides a broadcast one-row aggregate, not a collect.
     */
   def purchaseClickLeftJoinAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = eventsDir(spark, sfDir)
-    def side(eventType: String): DataFrame = spark.readStream
-      .schema(eventsSchema)
-      .parquet(dir)
-      .filter(col("event_type") === eventType)
-    val purchases = side("purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").cast("timestamp").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    val clicks = side("click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-        col("ts").cast("timestamp").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val joined = purchases.join(clicks,
-      col("click_user") === col("user_id") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("click_ts") <= col("purchase_ts"),
-      "leftOuter")
+    val joined = purchaseClicks(spark, sfDir, "leftOuter")
     val horizon = Tables.events(spark, sfDir)
       .agg((max(col("ts")) - expr("INTERVAL 2 HOURS")).as("h_ts"))
     Drain.toMemoryTable(spark, joined, "append", "graft_stream_ljoin")
@@ -189,14 +157,9 @@ object EventStream {
     val customers = broadcast(
       Tables.customer(spark, sfDir)
         .select(col("c_custkey"), col("c_mktsegment")))
-    val rollup = spark.readStream
-      .schema(eventsSchema)
-      .parquet(eventsDir(spark, sfDir))
+    val rollup = totals(Staged.stream(spark, sfDir, "events")
       .join(customers, col("user_id") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
+      .groupBy(col("c_mktsegment"), col("event_type")))
     Drain.toMemoryTable(spark, rollup, "complete", "graft_stream_segment")
       .select(col("c_mktsegment"), col("event_type"), col("n_events"), col("total_value"))
   }
@@ -218,12 +181,8 @@ object EventStream {
     */
   def trendingPropsAvailableNow(spark: SparkSession, sfDir: String,
       k: Int = 128): DataFrame = {
-    val trending = spark.readStream
-      .schema(eventsSchema)
-      .parquet(eventsDir(spark, sfDir))
-      .select(col("event_type"),
-        from_json(col("props"), "k BIGINT", Map.empty[String, String])
-          .getField("k").cast("string").as("term"))
+    val trending = Staged.stream(spark, sfDir, "events")
+      .select(col("event_type"), term)
       .filter(col("term").isNotNull)
       .groupBy(col("event_type"))
       .agg(graft.functions.HeavyHittersAgg(col("term"), k).as("hh"))
@@ -247,13 +206,16 @@ object EventStream {
       k: Int = 128): DataFrame =
     events
       .withWatermark("ts", watermark)
-      .select(col("ts"), col("event_type"),
-        from_json(col("props"), "k BIGINT", Map.empty[String, String])
-          .getField("k").cast("string").as("term"))
+      .select(col("ts"), col("event_type"), term)
       .filter(col("term").isNotNull)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(graft.functions.HeavyHittersAgg(col("term"), k).as("hh"))
       .select(col("window.start").as("hour"), col("event_type"), col("hh"))
+
+  /** The trending term of an event: its props' `k`, as a string. */
+  private def term: Column =
+    from_json(col("props"), "k BIGINT", Map.empty[String, String])
+      .getField("k").cast("string").as("term")
 
   /** PRODUCTION wiring of [[trendingWatermarked]]: watched source directory →
     * append-only parquet sink with a CALLER-OWNED durable checkpoint (unlike
@@ -272,13 +234,9 @@ object EventStream {
     // NTZ is wall-clock identity and the window boundaries are unchanged
     val events = spark.readStream.schema(eventsSchema).parquet(src)
       .withColumn("ts", col("ts").cast("timestamp"))
-    Drain.run(spark) {
+    Drain.run(spark, chk) {
       trendingWatermarked(events, watermark, k)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+        .writeStream.format("parquet").option("path", out).outputMode("append")
     }
   }
 
@@ -305,7 +263,7 @@ object EventStream {
     // bounds the state stage's input to (input tasks × open windows × types)
     // rows per batch. A checkpoint started with more partitions keeps its
     // count (Drain's doc).
-    Drain.run(spark, "spark.sql.shuffle.partitions" -> "1") {
+    Drain.run(spark, chk, "spark.sql.shuffle.partitions" -> "1") {
       hourlyRollupWatermarked(events, watermark)
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -313,10 +271,7 @@ object EventStream {
             batch.withColumn("batch_id", lit(batchId)), conn, table, batchId,
             maxConnections = Some(1))
         }
-        .option("checkpointLocation", chk)
         .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
   }
 
@@ -333,10 +288,28 @@ object EventStream {
     graft.ledger.JdbcLedger.shutdownDerby(s"$root/db")
     graft.core.Scratch.delete(root)
     val conn = graft.io.JdbcConn(s"jdbc:derby:$root/db;create=true")
-    hourlyRollupToJdbc(spark, eventsDir(spark, sfDir), conn, "hourly_rollup", s"$root/chk")
+    hourlyRollupToJdbc(spark, Staged.dir(spark, sfDir, "events"), conn, "hourly_rollup",
+      s"$root/chk")
     graft.io.Jdbc.read(spark, conn, "hourly_rollup")
       .select(col("hour").cast("timestamp_ntz").as("hour"), col("event_type"),
         col("n_events"), col("total_value"))
+  }
+
+  /** STREAMING EXPERIMENT MONITOR: the per-user purchase counts accumulate
+    * in a stateful streaming aggregate (complete mode — the per-user state
+    * an experiment dashboard keeps live), and the drained counts feed the
+    * EXACT batch readout ([[graft.ops.Experiment.abReadout]]): arms, rates,
+    * pooled z, CI. Gated against the SAME oracle SQL as the batch q224 —
+    * batch/stream parity of the entire statistical readout, not just the
+    * counts. Production swap: `foreachBatch` the readout into a dashboard
+    * table on a durable checkpoint; the aggregate state is |users|-bounded.
+    */
+  def abMonitorAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
+    val counts = Staged.stream(spark, sfDir, "events")
+      .groupBy(col("user_id"))
+      .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purch"))
+    val users = Drain.toMemoryTable(spark, counts, "complete", "graft_ab_users")
+    graft.ops.Experiment.abReadout(users)
   }
 
   /** Streaming drift monitor: the live stream's value distribution scored as
@@ -355,36 +328,15 @@ object EventStream {
     * [[psiAlertToTable]] keys the store by event-time day and scores only
     * the trailing horizon, alerting once when the score crosses threshold.
     */
-  /** STREAMING EXPERIMENT MONITOR: the per-user purchase counts accumulate
-    * in a stateful streaming aggregate (complete mode — the per-user state
-    * an experiment dashboard keeps live), and the drained counts feed the
-    * EXACT batch readout ([[graft.ops.Experiment.abReadout]]): arms, rates,
-    * pooled z, CI. Gated against the SAME oracle SQL as the batch q224 —
-    * batch/stream parity of the entire statistical readout, not just the
-    * counts. Production swap: `foreachBatch` the readout into a dashboard
-    * table on a durable checkpoint; the aggregate state is |users|-bounded.
-    */
-  def abMonitorAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val counts = spark.readStream
-      .schema(eventsSchema)
-      .parquet(eventsDir(spark, sfDir))
-      .groupBy(col("user_id"))
-      .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purch"))
-    val users = Drain.toMemoryTable(spark, counts, "complete", "graft_ab_users")
-    graft.ops.Experiment.abReadout(users)
-  }
-
   def psiMonitorAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     val cut = lit("2024-01-16 00:00:00").cast("timestamp_ntz")
-    val ref = graft.core.Tables.events(spark, sfDir)
+    val ref = Tables.events(spark, sfDir)
       .filter(col("ts") < cut)
-      .select(floor(col("value") / 10.0).cast("long").as("bucket"))
+      .select(psiBucket)
       .groupBy(col("bucket")).agg(count(lit(1)).as("n_ref"))
-    val streamCounts = spark.readStream
-      .schema(eventsSchema)
-      .parquet(eventsDir(spark, sfDir))
+    val streamCounts = Staged.stream(spark, sfDir, "events")
       .filter(col("ts") >= cut)
-      .select(floor(col("value") / 10.0).cast("long").as("bucket"))
+      .select(psiBucket)
       .groupBy(col("bucket")).agg(count(lit(1)).as("n_cur"))
     val cur = Drain.toMemoryTable(spark, streamCounts, "complete", "graft_psi_counts")
     val counts = ref.join(cur, Seq("bucket"), "full_outer")
@@ -393,6 +345,9 @@ object EventStream {
         coalesce(col("n_cur"), lit(0L)).as("n_cur"))
     graft.ops.Statistics.psiFromCounts(counts)
   }
+
+  /** The PSI histogram bucket of an event's value: tens. */
+  private def psiBucket: Column = floor(col("value") / 10.0).cast("long").as("bucket")
 
   /** PRODUCTION wiring of the PSI drift monitor: watched source directory →
     * per-(event-time-day, bucket) counts in UPDATE mode → `foreachBatch`
@@ -433,10 +388,9 @@ object EventStream {
       fs != null && fs.exists(_.getName.endsWith(".parquet"))
     }
     val streamCounts = spark.readStream.schema(eventsSchema).parquet(src)
-      .select(window(col("ts"), "1 day").getField("start").as("win"),
-        floor(col("value") / 10.0).cast("long").as("bucket"))
+      .select(window(col("ts"), "1 day").getField("start").as("win"), psiBucket)
       .groupBy(col("win"), col("bucket")).agg(count(lit(1)).as("n_cur"))
-    Drain.run(spark, "spark.sql.shuffle.partitions" -> "8") {
+    Drain.run(spark, chk, "spark.sql.shuffle.partitions" -> "8") {
       streamCounts.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (!batch.isEmpty) {
@@ -466,10 +420,7 @@ object EventStream {
             }
           }
         }
-        .option("checkpointLocation", chk)
         .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
   }
 
@@ -495,7 +446,7 @@ object EventStream {
       .partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)
     val stream = spark.readStream.schema(eventsSchema).parquet(src)
-    Drain.run(spark, "spark.sql.shuffle.partitions" -> "8") {
+    Drain.run(spark, chk, "spark.sql.shuffle.partitions" -> "8") {
       stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // read twice below (the merge's touched-group probe and the merge
@@ -528,10 +479,7 @@ object EventStream {
           } finally graft.core.Fold.release(latest)
           ()
         }
-        .option("checkpointLocation", chk)
         .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
   }
 
@@ -544,7 +492,7 @@ object EventStream {
     */
   def latestEventsUpsertState(spark: SparkSession, sfDir: String): DataFrame = synchronized {
     val root = graft.core.Scratch.fresh("upsert_latest", sfDir)
-    upsertLatestToTable(spark, eventsDir(spark, sfDir), s"$root/table", s"$root/chk")
+    upsertLatestToTable(spark, Staged.dir(spark, sfDir, "events"), s"$root/table", s"$root/chk")
     graft.io.VersionedTable.snapshot(spark, s"$root/table")
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
         col("value"))
@@ -561,10 +509,7 @@ object EventStream {
     * exactly: every duplicate eliminated, no original lost.
     */
   def dedupRedeliveredAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = eventsDir(spark, sfDir)
-    def src: DataFrame = spark.readStream
-      .schema(eventsSchema)
-      .parquet(dir)
+    def src: DataFrame = Staged.stream(spark, sfDir, "events")
       .withColumn("ts_wm", col("ts").cast("timestamp"))
     val redelivered = src.union(src) // two source instances: every event twice
       .withWatermark("ts_wm", "24 hours")

@@ -2,27 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming document scoring — the q242 threshold sweep maintained as
   * streaming state (the q241/q246 batch/stream parity pattern, third
   * instance).
   */
 object ScoreStream {
-
-  private val docsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  /** The streaming file source needs a DIRECTORY; the testdata table is a
-    * single parquet file — stage a stable per-SF copy once (the
-    * [[EventStream.eventsDir]] pattern).
-    */
-  private[streaming] def docsDir(spark: SparkSession, sfDir: String): String =
-    graft.core.Scratch.once("docs", sfDir)(graft.core.Tables.documents(spark, sfDir).write.parquet(_))
 
   /** STREAMING THRESHOLD SWEEP: documents arrive as a stream, the quality
     * score is the SAME per-row expression tree as the batch classifier
@@ -34,23 +19,16 @@ object ScoreStream {
     * sweep then runs batch-side on the drained counts through
     * [[graft.ops.Evaluation.sweepFromCounts]] — the identical arithmetic,
     * so the query is hash-gated against q242's oracle SHARED VERBATIM.
-    *
-    * Update-mode re-emissions only ever GROW a score's counts (counts are
-    * monotone under accumulation), so the per-score max over the drained
-    * memory sink is the final state — the q246 dedup argument, element-wise.
     */
   def thresholdSweepAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.readStream.schema(docsSchema)
-      .parquet(docsDir(spark, sfDir))
+    val docs = Staged.stream(spark, sfDir, "documents")
     val counts = graft.ops.Curation
       .qualityScored(docs,
         extra = Seq(when(col("lang") === "en", 1L).otherwise(0L).as("y")))
       .groupBy(col("score").as("x"))
       .agg(sum(col("y")).as("c1"), sum(lit(1L) - col("y")).as("c2"))
-    val drained = Drain.toMemoryTable(spark, counts, "update", "graft_stream_sweep")
-    val finalCounts = drained.groupBy(col("x"))
-      .agg(max(col("c1")).as("c1"), max(col("c2")).as("c2"))
-    graft.ops.Evaluation.sweepFromCounts(spark, finalCounts)
+    graft.ops.Evaluation.sweepFromCounts(spark,
+      Drain.toMemoryTable(spark, counts, "complete", "graft_stream_sweep"))
   }
 
   /** STREAMING CONTAMINATION MONITOR — q75's eval-set decontamination as an
@@ -67,9 +45,7 @@ object ScoreStream {
     *
     * State: all of one document's grams arrive in its single input row, so
     * every per-doc aggregate FINALIZES within the micro-batch that carries
-    * the document — update-mode re-emissions cannot shrink counts (the
-    * q246/q255 monotonicity argument; the drain-side max is belt and
-    * braces). The state store still retains one small row per doc_id seen;
+    * the document. The state store still retains one small row per doc_id seen;
     * a production monitor bounds that with an arrival-time watermark —
     * documented as the deployment knob rather than simulated, because
     * AvailableNow over a finite corpus never evicts anyway.
@@ -82,8 +58,7 @@ object ScoreStream {
       .select(explode(graft.ops.Curation.wordGrams(col("text"), n)).as("gram"))
       .distinct()
       .withColumn("hit", lit(1L))
-    val docs = spark.readStream.schema(docsSchema)
-      .parquet(docsDir(spark, sfDir))
+    val docs = Staged.stream(spark, sfDir, "documents")
     val scored = docs.filter(!isEval)
       .select(col("doc_id"),
         explode_outer(graft.ops.Curation.wordGrams(col("text"), n)).as("gram"))
@@ -91,9 +66,7 @@ object ScoreStream {
       .groupBy(col("doc_id"))
       .agg(count(col("gram")).as("n_grams"),
         coalesce(sum(col("hit")), lit(0L)).as("n_hits"))
-    val drained = Drain.toMemoryTable(spark, scored, "update", "graft_stream_decontam")
-    drained.groupBy(col("doc_id"))
-      .agg(max(col("n_grams")).as("n_grams"), max(col("n_hits")).as("n_hits"))
+    Drain.toMemoryTable(spark, scored, "complete", "graft_stream_decontam")
       .withColumn("is_contaminated", col("n_hits") > 0)
   }
 
@@ -105,9 +78,7 @@ object ScoreStream {
     * state kept is the (source, term, batch) occurrence counts — bounded by
     * vocabulary × batches, never the corpus. All of one document's terms
     * arrive in its single input row, so every cell a document touches
-    * finalizes within the micro-batch that carries the document; update-mode
-    * re-emissions only ever GROW a cell's count (the q246/q255 monotonicity
-    * argument), so the drain-side per-cell max is the final count. The
+    * finalizes within the micro-batch that carries the document. The
     * growth arithmetic (first-seen = min batch, cumulative vocabulary,
     * new-term rate) then runs batch-side on the drained cells through
     * [[graft.ops.TermStats.growthFromCells]] — identical code — so the query
@@ -118,17 +89,14 @@ object ScoreStream {
     */
   def vocabGrowthAvailableNow(spark: SparkSession, sfDir: String,
       nBatches: Int = 8, salt: String = "crawl_v1"): DataFrame = {
-    val docs = spark.readStream.schema(docsSchema)
-      .parquet(docsDir(spark, sfDir))
+    val docs = Staged.stream(spark, sfDir, "documents")
     val cells = graft.ops.TermStats.vocabCells(docs, nBatches, salt)
-    val drained = Drain.toMemoryTable(spark, cells, "update", "graft_stream_vocab")
     // materialized before the finisher: growthFromCells branches the cell
     // frame (per-batch totals vs first-seen news) into a self-join, and the
     // analyzer cannot dedup conflicting references through a memory-sink
     // view — a checkpointed frame self-joins fine (and pays the drained
     // state exactly once for both branches)
-    val finalCells = drained.groupBy(col("source"), col("term"), col("batch"))
-      .agg(max(col("n")).as("n"))
+    val finalCells = Drain.toMemoryTable(spark, cells, "complete", "graft_stream_vocab")
       .localCheckpoint(true)
     graft.ops.TermStats.growthFromCells(finalCells)
   }
@@ -141,9 +109,7 @@ object ScoreStream {
     * WordGramsExpr, and the stream emits one verdict row per document —
     * (doc_id, source, n_toks, n_hits) — which finalizes within its arrival
     * micro-batch (all of a document's grams travel in its single input
-    * row; hit counts are monotone under update-mode re-emission, so the
-    * drain-side per-doc max is the final verdict — the q246/q316 argument).
-    * The feed-grain rollup then runs batch-side on the drained verdicts
+    * row). The feed-grain rollup then runs batch-side on the drained verdicts
     * through the SAME [[graft.ops.Curation.sourceContamRollup]] expression
     * tree as q338, so the query is hash-gated against q338's oracle SHARED
     * VERBATIM (one SQL val, the q268 convention). This is the crawl
@@ -163,8 +129,7 @@ object ScoreStream {
       .select(explode(graft.ops.Curation.wordGrams(col("text"), n)).as("gram"))
       .distinct()
       .withColumn("hit", lit(1L))
-    val docs = spark.readStream.schema(docsSchema)
-      .parquet(docsDir(spark, sfDir))
+    val docs = Staged.stream(spark, sfDir, "documents")
     val scored = docs.filter(!isEval)
       .select(col("doc_id"), col("source"),
         size(graft.ops.TextAnalysis.alphaTokens(col("text"))).cast("long")
@@ -173,9 +138,7 @@ object ScoreStream {
       .join(evalGrams, Seq("gram"), "left")
       .groupBy(col("doc_id"), col("source"), col("n_toks"))
       .agg(coalesce(sum(col("hit")), lit(0L)).as("n_hits"))
-    val drained = Drain.toMemoryTable(spark, scored, "update", "graft_stream_srccontam")
-    val verdicts = drained.groupBy(col("doc_id"), col("source"), col("n_toks"))
-      .agg(max(col("n_hits")).as("n_hits"))
+    val verdicts = Drain.toMemoryTable(spark, scored, "complete", "graft_stream_srccontam")
       .withColumn("is_contaminated", col("n_hits") > 0)
     graft.ops.Curation.sourceContamRollup(verdicts)
   }
@@ -189,9 +152,7 @@ object ScoreStream {
     * scan exists precisely so both sides share it — a stream cannot run a
     * relation-level DISTINCT before its one aggregation). Every (doc,
     * passage) verdict finalizes within its arrival micro-batch (a
-    * document's pairs travel in its single input row; counts are monotone
-    * under update-mode re-emission — the q246/q316 argument), so the
-    * drain-side per-(doc, passage) max is the final verdict, hash-gated
+    * document's pairs travel in its single input row), hash-gated
     * against q331's oracle SHARED VERBATIM. The live form of the passage
     * remedy: excision lists stream out as documents land, instead of a
     * post-hoc sweep over the finished crawl.
@@ -209,8 +170,7 @@ object ScoreStream {
       .select(explode(graft.ops.Curation.wordGrams(col("text"), n)).as("gram"))
       .distinct()
       .withColumn("hit", lit(1L))
-    val docs = spark.readStream.schema(docsSchema)
-      .parquet(docsDir(spark, sfDir))
+    val docs = Staged.stream(spark, sfDir, "documents")
     val scored = docs.filter(!isEval)
       .select(col("doc_id"),
         explode(graft.ops.Curation.passagePairs(col("text"), n, w)).as("pg"))
@@ -220,9 +180,7 @@ object ScoreStream {
       .groupBy(col("doc_id"), col("passage"))
       .agg(count(col("gram")).as("n_grams"),
         coalesce(sum(col("hit")), lit(0L)).as("n_hits"))
-    val drained = Drain.toMemoryTable(spark, scored, "update", "graft_stream_passage")
-    drained.groupBy(col("doc_id"), col("passage"))
-      .agg(max(col("n_grams")).as("n_grams"), max(col("n_hits")).as("n_hits"))
+    Drain.toMemoryTable(spark, scored, "complete", "graft_stream_passage")
       .withColumn("is_flagged", col("n_hits") > 0)
   }
 
@@ -233,10 +191,8 @@ object ScoreStream {
     * relation, each arriving training document's grams inner-join it, and
     * the only state kept is the leaked-pair counts — bounded by the SUITE's
     * own gram mass, never by the corpus streaming past (a 100 TB crawl
-    * monitors against a megabyte of benchmark state). Pair counts are
-    * monotone under update-mode re-emission (the q246 argument), so the
-    * drain-side distinct pairs are the final leak set; the per-item
-    * arithmetic (n_leaked, leak_share, is_burned) runs batch-side against
+    * monitors against a megabyte of benchmark state). The drained pairs
+    * are the final leak set; the per-item arithmetic (n_leaked, leak_share, is_burned) runs batch-side against
     * the static per-item gram-count spine — zero-gram items keep their row
     * (the q349 shape) — and the query is hash-gated against q349's oracle
     * SHARED VERBATIM. This is the benchmark owner's live readout: an eval
@@ -252,17 +208,14 @@ object ScoreStream {
         explode(graft.ops.Curation.wordGrams(col("text"), n)).as("gram"))
     val spine = statics.select(col("doc_id"),
       size(graft.ops.Curation.wordGrams(col("text"), n)).cast("long").as("n_grams"))
-    val docs = spark.readStream.schema(docsSchema)
-      .parquet(docsDir(spark, sfDir))
+    val docs = Staged.stream(spark, sfDir, "documents")
     val leaked = docs.filter(!isEval)
       .select(explode(graft.ops.Curation.wordGrams(col("text"), n)).as("gram"))
       .join(evalPairs, Seq("gram"))
       .groupBy(col("eval_doc"), col("gram"))
       .agg(count(lit(1)).as("cnt"))
-    val drained = Drain.toMemoryTable(spark, leaked, "update", "graft_stream_burn")
-    val perItem = drained.select(col("eval_doc").as("doc_id"), col("gram"))
-      .distinct()
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_leaked"))
+    val perItem = Drain.toMemoryTable(spark, leaked, "complete", "graft_stream_burn")
+      .groupBy(col("eval_doc").as("doc_id")).agg(count(lit(1)).as("n_leaked"))
     spine.join(perItem, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
         coalesce(col("n_leaked"), lit(0L)).as("n_leaked"),
@@ -277,9 +230,8 @@ object ScoreStream {
     * arriving corpus (the EIGHTH batch/stream parity instance): the only
     * state is the (source, lang) cell counts — |sources|·|langs| rows, built
     * by the SAME `domainCells` expression tree as the batch solver — and
-    * every cell a document touches finalizes within its arrival micro-batch
-    * (doc and token counts are monotone under accumulation; the drain-side
-    * per-cell max is the final census — the q246 argument). The solver
+    * every cell a document touches finalizes within its arrival
+    * micro-batch. The solver
     * arithmetic (independence target, weights, feasibility) runs batch-side
     * on the drained cells through the SAME `domainMixFromCells`, so the
     * query is hash-gated against q332's oracle SHARED VERBATIM. This is the
@@ -287,16 +239,12 @@ object ScoreStream {
     * if the crawl stopped now, updating as feeds land.
     */
   def domainMixAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.readStream.schema(docsSchema)
-      .parquet(docsDir(spark, sfDir))
+    val docs = Staged.stream(spark, sfDir, "documents")
     val cells = graft.ops.TrainingMix.domainCells(docs)
-    val drained = Drain.toMemoryTable(spark, cells, "update", "graft_stream_mix")
     // checkpointed before the finisher: domainMixFromCells branches the cell
     // frame four ways (marginals, total, shares) and a memory-sink view
     // cannot dedup conflicting references (the q330 lesson)
-    val finalCells = drained.groupBy(col("source"), col("lang"))
-      .agg(max(col("n_docs")).as("n_docs"),
-        max(col("avail_tokens")).as("avail_tokens"))
+    val finalCells = Drain.toMemoryTable(spark, cells, "complete", "graft_stream_mix")
       .localCheckpoint(true)
     graft.ops.TrainingMix.domainMixFromCells(finalCells)
   }
@@ -384,8 +332,7 @@ object ScoreStream {
       .filter(isEval)
       .select(explode(graft.ops.Curation.wordGrams(col("text"), n)).as("gram"))
       .distinct()
-    val docs = spark.readStream.schema(docsSchema)
-      .parquet(docsDir(spark, sfDir))
+    val docs = Staged.stream(spark, sfDir, "documents")
     val train = docs.filter(!isEval)
     val spineRows = train.select(col("doc_id"), lit(-1L).as("pos"),
       size(graft.ops.TextAnalysis.alphaTokens(col("text"))).cast("long")
@@ -425,18 +372,6 @@ object ScoreStream {
       n, w)
   }
 
-  private val embsSchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding",
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)),
-    StructField("label", org.apache.spark.sql.types.IntegerType)))
-
-  /** Stable per-SF directory copy of the embeddings table for the streaming
-    * file source (the [[docsDir]] pattern).
-    */
-  private[streaming] def embsDir(spark: SparkSession, sfDir: String): String =
-    graft.core.Scratch.once("embs", sfDir)(graft.core.Tables.embeddings(spark, sfDir).write.parquet(_))
-
   /** STREAMING SEMANTIC-DECONTAMINATION MONITOR — q354's embedding-channel
     * leak audit live over an arriving TRAINING corpus (the TWELFTH
     * batch/stream parity instance): the eval items' scaled vectors are a
@@ -448,10 +383,8 @@ object ScoreStream {
     * |eval| rows of (best cosine, best neighbor), the tightest possible
     * bound: a 100 TB crawl monitors against kilobytes of benchmark state.
     *
-    * The running top-1 is `max(struct(cosine, -vec_id))` — a MONOTONE
-    * accumulator (a struct max only ever grows under update-mode
-    * re-emission, the q246 argument), whose field order encodes exactly the
-    * batch window's tie-break (`ORDER BY cosine DESC, vec_id ASC`): highest
+    * The running top-1 is `max(struct(cosine, -vec_id))`, whose field order
+    * encodes exactly the batch window's tie-break (`ORDER BY cosine DESC, vec_id ASC`): highest
     * cosine first, then highest −id = lowest id. The τ-match / gram-flag /
     * paraphrase-leak arithmetic runs batch-side on the drained winners
     * through [[graft.ops.Similarity.semanticFlagsFromNN]] — the identical
@@ -469,8 +402,7 @@ object ScoreStream {
       .select(col("vec_id").as("eval_id"), col("svec").as("qvec"),
         lit(1).as("one"))
     val train = graft.ops.Similarity.withScaled(
-        spark.readStream.schema(embsSchema).parquet(embsDir(spark, sfDir))
-          .filter(!isEval))
+        Staged.stream(spark, sfDir, "embeddings").filter(!isEval))
       .withColumn("one", lit(1))
     val best = train.join(broadcast(evalSide), Seq("one"))
       .select(col("eval_id"),
@@ -479,9 +411,7 @@ object ScoreStream {
           (-col("vec_id")).as("nid")).as("cand"))
       .groupBy(col("eval_id"))
       .agg(max(col("cand")).as("best"))
-    val drained = Drain.toMemoryTable(spark, best, "update", "graft_stream_semdecon")
-    val nn = drained.groupBy(col("eval_id"))
-      .agg(max(col("best")).as("best"))
+    val nn = Drain.toMemoryTable(spark, best, "complete", "graft_stream_semdecon")
       .select(col("eval_id").as("doc_id"),
         (-col("best.nid")).as("nn_train_id"),
         col("best.c").as("cosine"))

@@ -8,7 +8,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructField, StructType,
+  TimestampType}
 
 /** Event coming off the stream (ts is microsecond TIMESTAMP_NTZ). */
 final case class SessionEvent(
@@ -142,9 +144,7 @@ object SessionStream {
   /** The `flatMapGroupsWithState` sessionizer over the events directory. */
   private def userSessions(spark: SparkSession, sfDir: String): Dataset[SessionRow] = {
     import spark.implicits._
-    spark.readStream
-      .schema(EventStream.eventsSchema)
-      .parquet(EventStream.eventsDir(spark, sfDir))
+    Staged.stream(spark, sfDir, "events")
       .as[SessionEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateUser)
@@ -162,9 +162,7 @@ object SessionStream {
     */
   def sessionizeTwsAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sessions = spark.readStream
-      .schema(EventStream.eventsSchema)
-      .parquet(EventStream.eventsDir(spark, sfDir))
+    val sessions = Staged.stream(spark, sfDir, "events")
       .as[SessionEvent]
       .groupByKey(_.user_id)
       .transformWithState(new SessionizeProcessor, TimeMode.None(), OutputMode.Update())
@@ -180,22 +178,24 @@ object SessionStream {
   def idleCloseDrain(spark: SparkSession, src: String, out: String, chk: String,
       watermarkDelay: String = "10 minutes"): Unit = {
     import spark.implicits._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType)))
-    val closed = spark.readStream.schema(schema).parquet(src)
+    val closed = spark.readStream.schema(timedSchema).parquet(src)
       .withWatermark("ts", watermarkDelay)
       .as[TimedEvent]
       .groupByKey(_.user_id)
       .transformWithState(new IdleCloseProcessor(GapMinutes * 60 * 1000L),
         TimeMode.EventTime(), OutputMode.Append())
-    Drain.run(spark, RocksDb) {
-      closed.writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", chk)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    Drain.run(spark, chk, RocksDb) {
+      closed.writeStream.format("parquet").option("path", out).outputMode("append")
     }
   }
+
+  /** The (user_id, ts, value) events the timer-closed and the built-in
+    * session-window drains read (ts zoned: event-time watermarks require it).
+    */
+  private val timedSchema = StructType(Seq(
+    StructField("user_id", LongType),
+    StructField("ts", TimestampType),
+    StructField("value", DoubleType)))
 
   /** The BUILT-IN `session_window` aggregation as a production stream: the
     * same declarative expression as the batch
@@ -211,36 +211,22 @@ object SessionStream {
   def sessionizeNativeToParquet(spark: SparkSession, src: String, out: String,
       chk: String, watermarkDelay: String = "10 minutes",
       gap: String = "30 minutes"): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType)))
-    val sessions = spark.readStream.schema(schema).parquet(src)
+    val sessions = spark.readStream.schema(timedSchema).parquet(src)
       .withWatermark("ts", watermarkDelay)
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(
         min(col("ts")).as("session_start"),
         max(col("ts")).as("session_end"),
         count(lit(1)).as("n_events"),
-        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
+        sum(col("value").cast(DecimalType(18, 2)))
           .cast("double").as("session_value"))
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), col("session_value"))
-    Drain.run(spark) {
-      sessions.writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", chk)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    Drain.run(spark, chk) {
+      sessions.writeStream.format("parquet").option("path", out).outputMode("append")
     }
   }
 
-  /** Drain an update-mode session stream to completion (AvailableNow) and keep
-    * each session's FINAL emission. The update-mode memory sink APPENDS each
-    * batch's emissions; if AvailableNow split the input across micro-batches,
-    * a session appears once per batch that touched it. n_events strictly
-    * grows with each re-emission (a closing emission duplicates the last open
-    * one exactly), so the max row is the final state and the dedup is
-    * deterministic.
-    */
   /** STREAMING SESSIONIZED FUNNEL — q241's semantics as per-user streaming
     * state, the q226 pattern (batch/stream parity against the SAME oracle
     * SQL): the state per user is ONE open funnel (session extent + the three
@@ -335,9 +321,7 @@ object SessionStream {
   def funnelAvailableNow(spark: SparkSession, sfDir: String,
       clickWindowMin: Int = 10, purchaseWindowMin: Int = 30): DataFrame = {
     import spark.implicits._
-    val rows = spark.readStream
-      .schema(EventStream.eventsSchema)
-      .parquet(EventStream.eventsDir(spark, sfDir))
+    val rows = Staged.stream(spark, sfDir, "events")
       .as[SessionEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
@@ -355,6 +339,14 @@ object SessionStream {
         col("click_lat_us"), col("purchase_lat_us"))
   }
 
+  /** Drain an update-mode session stream to completion (AvailableNow) and keep
+    * each session's FINAL emission. The update-mode memory sink APPENDS each
+    * batch's emissions; if AvailableNow split the input across micro-batches,
+    * a session appears once per batch that touched it. n_events strictly
+    * grows with each re-emission (a closing emission duplicates the last open
+    * one exactly), so the max row is the final state and the dedup is
+    * deterministic.
+    */
   private def drainSessions(spark: SparkSession, sessions: Dataset[SessionRow],
       confs: (String, String)*): DataFrame = {
     val drained = Drain.toMemoryTable(spark, sessions, "update", "graft_stream_sessions",

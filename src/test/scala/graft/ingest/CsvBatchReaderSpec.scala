@@ -12,7 +12,9 @@ import graft.SparkSpec
   */
 class CsvBatchReaderSpec extends SparkSpec {
 
-  private val mandatory = Seq("customer_id", "price", "quantity")
+  private val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    "customer_id LONG, price DOUBLE, quantity LONG")
+  private val mandatory = schema.fieldNames.toSeq
 
   private def write(dir: String, name: String, lines: String*): String = {
     val p = Paths.get(dir, name)
@@ -21,7 +23,7 @@ class CsvBatchReaderSpec extends SparkSpec {
   }
 
   private def load(files: Seq[String]) =
-    CsvBatchReader.validateAndLoad(spark, files, mandatory)
+    CsvBatchReader.validateAndLoad(spark, files, schema)
 
   test("valid file loads with canonical column order and null additional_column") {
     val d = tmpDir("csv")

@@ -265,6 +265,18 @@ class EventStreamSpec extends SparkSpec {
   /** The smallest fixture dataset (TESTDATA.md). */
   private val sf001 = "/root/testdata/sf0.001"
 
+  test("a staged table streams with the batch table's schema and rows") {
+    for (name <- Seq("events", "documents", "embeddings", "orders")) {
+      val batch =
+        if (name == "events") graft.core.Tables.events(spark, sf001)
+        else graft.core.Tables.load(spark, sf001, name)
+      val stream = Staged.stream(spark, sf001, name)
+      assert(stream.schema === batch.schema, name)
+      val drained = Drain.toMemoryTable(spark, stream, "append", s"staged_$name")
+      assert(drained.exceptAll(batch).isEmpty && batch.exceptAll(drained).isEmpty, name)
+    }
+  }
+
   /** Move `batch` into the watched directory `src` as one file `name`. */
   private def shipTo(src: String, name: String, batch: org.apache.spark.sql.DataFrame): Unit = {
     val stage = s"${Paths.get(src).getParent}/stage_$name"
@@ -331,7 +343,7 @@ class EventStreamSpec extends SparkSpec {
     val split = lit("2024-01-16 12:30:00").cast("timestamp_ntz")
     shipTo(src, "b1", ev.filter(col("ts") < split))
     // the checkpoint an 8-partition drain leaves: the same query and sink
-    Drain.run(spark, "spark.sql.shuffle.partitions" -> "8") {
+    Drain.run(spark, chk, "spark.sql.shuffle.partitions" -> "8") {
       EventStream.hourlyRollupWatermarked(spark.readStream.schema(EventStream.eventsSchema)
           .parquet(src).withColumn("ts", col("ts").cast("timestamp")))
         .writeStream
@@ -339,8 +351,7 @@ class EventStreamSpec extends SparkSpec {
           graft.io.Jdbc.writeEpochIdempotent(batch.withColumn("batch_id", lit(batchId)),
             conn, "rollup_eight", batchId, maxConnections = Some(1))
         }
-        .option("checkpointLocation", chk)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        .outputMode("append")
     }
     val resumedFrom = lastBatch(chk)
     assert(pinnedPartitions(chk, resumedFrom) === 8)
