@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -48,9 +48,12 @@ import graft.core.Fold
   * create-if-absent).
   *
   * Scale shape: ALL log operations are manifest-sized (file counts, not row
-  * counts) — snapshot resolution reads a handful of text files driver-side,
-  * the same work a Delta driver does, then hands Spark one multi-path
-  * parquet read. DELETE and MERGE are copy-on-write at FILE-GROUP
+  * counts) — snapshot resolution ([[resolve]]) is one closed listing of
+  * `_log/` and a handful of text files read driver-side, the same work a
+  * Delta driver does, then hands Spark one multi-path parquet read. Each
+  * operation resolves once: a read resolves its version, and every commit
+  * attempt resolves the latest snapshot and commits against exactly that
+  * snapshot's version. DELETE and MERGE are copy-on-write at FILE-GROUP
   * granularity: one pruning job finds the groups that actually contain
   * matching rows (`input_file_name` aggregated to groups), one job reads
   * those groups together, transforms them and writes ONE replacement group;
@@ -98,24 +101,74 @@ object VersionedTable {
 
   private case class Manifest(action: String, add: Seq[Group], remove: Seq[String])
 
-  private def manifestFiles(base: String): Seq[java.nio.file.Path] = {
-    val d = logDir(base)
+  /** The entries of directory `d`, none when it is absent. A directory
+    * listing's stream holds an open handle until it is closed — the GC never
+    * closes it — so this is the one place the code lists a directory, and
+    * the listing is closed before it returns.
+    */
+  private def listed(d: Path): Seq[Path] =
     if (!Files.exists(d)) Seq.empty
-    else Files.list(d).iterator().asScala.toSeq
-      .filter(_.getFileName.toString.matches("v\\d+\\.txt")).sortBy(_.getFileName.toString)
+    else {
+      val entries = Files.list(d)
+      try entries.iterator().asScala.toVector finally entries.close()
+    }
+
+  /** The log as one listing of `_log/`: the manifests oldest first (the
+    * i-th is version i) and the checkpoints (`c<version>.txt`) with the
+    * version each one folds up to. Checkpoints are pure ACCELERATORS: they
+    * never replace manifests, so any version stays resolvable from scratch.
+    */
+  private case class Log(manifests: Seq[Path], checkpoints: Seq[(Int, Path)]) {
+    def latest: Int = manifests.size - 1
+
+    /** Live set at `v`: fold from the newest checkpoint ≤ v (its add lines
+      * ARE the folded live set) plus only the manifests after it.
+      */
+    def liveAt(v: Int): Seq[Group] = {
+      val (start, init) = checkpoints.filter(_._1 <= v).lastOption match {
+        case Some((cv, p)) => (cv + 1, readManifest(p).add.toVector)
+        case None => (0, Vector.empty[Group])
+      }
+      manifests.slice(start, v + 1).map(readManifest)
+        .foldLeft(init)((live, m) => live.filterNot(g => m.remove.contains(g.rel)) ++ m.add)
+    }
   }
 
-  /** Checkpoint files (`c<version>.txt`), oldest first, with the version each
-    * one folds up to. Checkpoints are pure ACCELERATORS: they never replace
-    * manifests, so any version stays resolvable from scratch.
+  private val LogFile = "([vc])(\\d+)\\.txt".r
+
+  private def log(base: String): Log = {
+    val files = listed(logDir(base)).flatMap(p => p.getFileName.toString match {
+      case LogFile(kind, v) => Some((kind, v.toInt, p))
+      case _ => None
+    }).sortBy(_._2)
+    Log(files.collect { case ("v", _, p) => p }, files.collect { case ("c", v, p) => v -> p })
+  }
+
+  /** The table at one version: the version (-1 when none is committed) and
+    * its live groups.
     */
-  private def checkpointFiles(base: String): Seq[(Int, java.nio.file.Path)] = {
-    val d = logDir(base)
-    if (!Files.exists(d)) Seq.empty
-    else Files.list(d).iterator().asScala.toSeq
-      .filter(_.getFileName.toString.matches("c\\d+\\.txt"))
-      .map(p => (p.getFileName.toString.drop(1).takeWhile(_.isDigit).toInt, p))
-      .sortBy(_._1)
+  private case class Snapshot(version: Int, groups: Seq[Group]) {
+    def committed(base: String): Snapshot = {
+      require(version >= 0, s"no committed version in $base")
+      this
+    }
+  }
+
+  /** The snapshot at `asOf`, clamped to the latest version, from ONE
+    * listing of the log: the newest checkpoint ≤ asOf and the manifests
+    * after it. Every read resolves once; every commit attempt resolves once
+    * and commits against what it resolved ([[commitLoop]]).
+    *
+    * The cost grows with the versions committed since the newest
+    * checkpoint. Only [[checkpoint]] writes one, and nothing calls it
+    * automatically: a table no caller checkpoints — the streaming upsert's
+    * (`EventStream.upsertLatestToTable`) is one — reads every manifest since
+    * v0 on each resolution.
+    */
+  private def resolve(base: String, asOf: Int = Int.MaxValue): Snapshot = {
+    val l = log(base)
+    val v = math.min(asOf, l.latest)
+    Snapshot(v, l.liveAt(v))
   }
 
   private def readManifest(p: java.nio.file.Path): Manifest = {
@@ -139,21 +192,7 @@ object VersionedTable {
   }
 
   /** Latest committed version, or -1 for an empty/absent table. */
-  def latestVersion(base: String): Int = manifestFiles(base).size - 1
-
-  /** Live set at `asOf`: fold from the newest checkpoint ≤ asOf (its add
-    * lines ARE the folded live set) plus only the manifests after it — O(1)
-    * + versions-since-checkpoint instead of O(versions), which is what keeps
-    * snapshot resolution flat on a table with a 100k-commit history.
-    */
-  private def liveGroups(base: String, asOf: Int): Seq[Group] = {
-    val (start, init) = checkpointFiles(base).filter(_._1 <= asOf).lastOption match {
-      case Some((cv, p)) => (cv + 1, readManifest(p).add.toVector)
-      case None => (0, Vector.empty[Group])
-    }
-    manifestFiles(base).slice(start, asOf + 1).map(readManifest)
-      .foldLeft(init)((live, m) => live.filterNot(g => m.remove.contains(g.rel)) ++ m.add)
-  }
+  def latestVersion(base: String): Int = log(base).latest
 
   /** Atomic PUT-IF-ABSENT of version `v`'s manifest: the content is staged to
     * a temp file, then materialized at `v<v>.txt` via `Files.createLink` —
@@ -178,24 +217,25 @@ object VersionedTable {
   /** Retries of a commit that lost its version race, before the loss throws. */
   private val MaxRetries = 10
 
-  /** The one commit loop. Each attempt reads the latest version `v`, lets
-    * `resolve(v)` derive the commit (action, added groups, removed
-    * rel-paths) against it, and conditionally puts it as `v + 1`. Losing
-    * the race re-resolves against the new snapshot, at most [[MaxRetries]]
-    * times; then the loss throws. `beforeCommit(attempt)` is a test seam
-    * between resolution and the put — the specs use it to force a
-    * deterministic interleave.
+  /** The one commit loop. Each attempt resolves the latest snapshot once,
+    * lets `derive` compute the commit (action, added groups, removed
+    * rel-paths) from it, and conditionally puts it as the snapshot's
+    * version + 1. Losing the race re-resolves against the new snapshot, at
+    * most [[MaxRetries]] times; then the loss throws.
+    * `beforeCommit(attempt)` is a test seam between resolution and the put
+    * — the specs use it to force a deterministic interleave.
     */
   @annotation.tailrec
   private def commitLoop(base: String, beforeCommit: Int => Unit = _ => (),
-      attempt: Int = 0)(resolve: Int => (String, Seq[Group], Seq[String])): Int = {
-    val v = latestVersion(base)
-    val (action, add, remove) = resolve(v)
+      attempt: Int = 0)(derive: Snapshot => (String, Seq[Group], Seq[String])): Int = {
+    val at = resolve(base)
+    val (action, add, remove) = derive(at)
+    val v = at.version + 1
     beforeCommit(attempt)
-    if (tryCommitAt(base, v + 1, action, add, remove)) v + 1
-    else if (attempt < MaxRetries) commitLoop(base, beforeCommit, attempt + 1)(resolve)
+    if (tryCommitAt(base, v, action, add, remove)) v
+    else if (attempt < MaxRetries) commitLoop(base, beforeCommit, attempt + 1)(derive)
     else throw new java.util.ConcurrentModificationException(
-      s"$action lost version ${v + 1} of $base to another writer on each of " +
+      s"$action lost version $v of $base to another writer on each of " +
         s"its ${MaxRetries + 1} attempts")
   }
 
@@ -266,14 +306,42 @@ object VersionedTable {
     writeCounted(f(read(spark, base, groups, mergeSchema = true)), base, statsCol)._1
   }
 
-  /** The live groups of version `v` that hold a row of `rows`, a frame
-    * [[withGroup]]-tagged at version `v`'s snapshot scan. One pruning job;
-    * the driver collects O(touched groups) names and probes a hash set —
-    * never O(files × groups) substring scans over the manifest.
+  /** The live groups of `at` that hold a row of `rows`, a frame
+    * [[withGroup]]-tagged at `at`'s snapshot scan. One pruning job; the
+    * driver collects O(touched groups) names and probes a hash set — never
+    * O(files × groups) substring scans over the manifest.
     */
-  private def touchedGroups(base: String, v: Int, rows: DataFrame): Seq[Group] = {
+  private def touchedGroups(at: Snapshot, rows: DataFrame): Seq[Group] = {
     val rels = rows.select(GroupCol).distinct().collect().map(_.getString(0)).toSet
-    liveGroups(base, v).filter(g => rels.contains(g.rel))
+    at.groups.filter(g => rels.contains(g.rel))
+  }
+
+  /** A read of every live group of `at`, which must have some. */
+  private def readLive(spark: SparkSession, base: String, at: Snapshot,
+      mergeSchema: Boolean): DataFrame = {
+    require(at.committed(base).groups.nonEmpty,
+      s"version ${at.version} of $base has no live data groups")
+    read(spark, base, at.groups, mergeSchema)
+  }
+
+  /** Append `df` as one group per slice, in one commit: slice k holds the
+    * rows `slices(k)` admits, and slice 0 also the rows whose `key` is NULL.
+    * A NULL key satisfies no slice predicate, and the full snapshot must
+    * keep its rows; a skipping read never wants them (NULL fails its
+    * residual filter whatever groups are opened). Each slice is one
+    * [[writeCounted]] write, whose `statsCol` also decides whether an empty
+    * slice is a group; `each` runs on every written group, with its row
+    * count, before the commit.
+    */
+  private def appendSliced(df: DataFrame, base: String, action: String, key: Column,
+      slices: Seq[Column], statsCol: Option[String])(each: (Group, Long) => Unit): Int = {
+    val groups = slices.zipWithIndex.flatMap { case (slice, k) =>
+      val (group, rows) =
+        writeCounted(df.filter(if (k == 0) slice || key.isNull else slice), base, statsCol)
+      group.foreach(each(_, rows))
+      group
+    }
+    commitLoop(base)(_ => (action, groups, Seq.empty))
   }
 
   /** APPEND `df` as a new file group. The group is written ONCE, then
@@ -302,18 +370,11 @@ object VersionedTable {
     val cuts = df.stat.approxQuantile(statsCol,
       (1 until nGroups).map(_.toDouble / nGroups).toArray, 0.001)
     val bounds = (None +: cuts.map(Option(_)).toSeq) :+ None
-    val groups = bounds.sliding(2).zipWithIndex.flatMap {
-      case (Seq(lo, hi), k) =>
-        val c = col(statsCol).cast("double")
-        val range = (lo.map(c >= _) ++ hi.map(c < _))
-          .reduceOption(_ && _).getOrElse(lit(true))
-        // null clustering keys satisfy NO range predicate — route them into
-        // group 0 so the full snapshot keeps them (a range read never wants
-        // them: NULL fails the residual filter whatever groups are opened)
-        val pred = if (k == 0) range || c.isNull else range
-        writeCounted(df.filter(pred), base, Some(statsCol))._1
+    val c = col(statsCol).cast("double")
+    val ranges = bounds.sliding(2).map { case Seq(lo, hi) =>
+      (lo.map(c >= _) ++ hi.map(c < _)).reduceOption(_ && _).getOrElse(lit(true))
     }.toSeq
-    commitLoop(base)(_ => ("append_clustered", groups, Seq.empty))
+    appendSliced(df, base, "append_clustered", c, ranges, Some(statsCol))((_, _) => ())
   }
 
   /** Table state at `version` (defaults to latest). An empty live set needs a
@@ -322,13 +383,8 @@ object VersionedTable {
     * schema the log recorded declared.
     */
   def snapshot(spark: SparkSession, base: String, version: Int = Int.MaxValue,
-      mergeSchema: Boolean = false): DataFrame = {
-    val v = math.min(version, latestVersion(base))
-    require(v >= 0, s"no committed version in $base")
-    val live = liveGroups(base, v)
-    require(live.nonEmpty, s"version $v of $base has no live data groups")
-    read(spark, base, live, mergeSchema)
-  }
+      mergeSchema: Boolean = false): DataFrame =
+    readLive(spark, base, resolve(base, version), mergeSchema)
 
   /** Schema-evolved read: file groups appended with DIFFERENT (compatible)
     * schemas are unioned by parquet schema merging — columns absent in older
@@ -352,11 +408,7 @@ object VersionedTable {
   def snapshotRange(spark: SparkSession, base: String, statsCol: String,
       lo: Double, hi: Double, version: Int = Int.MaxValue): DataFrame = {
     val c = col(statsCol).cast("double")
-    prunedGroups(base, statsCol, lo, hi, version) match {
-      case Seq() => // every live group skipped: empty result, schema from v
-        snapshot(spark, base, version).filter(lit(false))
-      case groups => read(spark, base, groups).filter(c >= lo && c <= hi)
-    }
+    skippingRead(spark, base, version, overlaps(statsCol, lo, hi), c >= lo && c <= hi)
   }
 
   /** The group paths [[snapshotRange]] would open — exposed so the spec can
@@ -364,19 +416,32 @@ object VersionedTable {
     */
   private[io] def prunedPaths(base: String, statsCol: String, lo: Double,
       hi: Double, version: Int = Int.MaxValue): Seq[String] =
-    prunedGroups(base, statsCol, lo, hi, version).map(g => s"$base/${g.rel}")
+    keptPaths(base, version, overlaps(statsCol, lo, hi))
 
-  private def prunedGroups(base: String, statsCol: String, lo: Double,
-      hi: Double, version: Int): Seq[Group] = {
-    val v = math.min(version, latestVersion(base))
-    require(v >= 0, s"no committed version in $base")
-    liveGroups(base, v).filter { g =>
-      g.statsCol match {
-        case Some(c) if c == statsCol => g.max >= lo && g.min <= hi
-        case _ => true   // no stats for this column: cannot skip safely
-      }
+  /** Whether group `g`'s [min,max] stats on `statsCol` meet [lo,hi]; a
+    * group without stats for the column cannot be skipped safely.
+    */
+  private def overlaps(statsCol: String, lo: Double, hi: Double)(g: Group): Boolean =
+    !g.statsCol.contains(statsCol) || (g.max >= lo && g.min <= hi)
+
+  /** The one skipping read: of the groups live at `version`, only those
+    * `keep` admits are opened, then `residual` applies exactly. When every
+    * group is skipped, the empty result carries the FULL (merged) table
+    * schema — building it from one group would narrow it on a
+    * schema-evolved table.
+    */
+  private def skippingRead(spark: SparkSession, base: String, version: Int,
+      keep: Group => Boolean, residual: Column): DataFrame = {
+    val at = resolve(base, version).committed(base)
+    at.groups.filter(keep) match {
+      case Seq() => readLive(spark, base, at, mergeSchema = true).filter(lit(false))
+      case kept => read(spark, base, kept).filter(residual)
     }
   }
+
+  /** The group paths a [[skippingRead]] at `version` with `keep` opens. */
+  private def keptPaths(base: String, version: Int, keep: Group => Boolean): Seq[String] =
+    resolve(base, version).committed(base).groups.filter(keep).map(g => s"$base/${g.rel}")
 
   /** Copy-on-write DELETE WHERE: rewrite ONLY the file groups that contain
     * matching rows; groups the predicate never touches carry over by
@@ -395,15 +460,15 @@ object VersionedTable {
     */
   def deleteWhere(spark: SparkSession, base: String, predicate: Column,
       beforeCommit: Int => Unit = _ => ()): Int =
-    commitLoop(base, beforeCommit)(v => deleteAt(spark, base, predicate, v))
+    commitLoop(base, beforeCommit)(at => deleteAt(spark, base, predicate, at))
 
-  /** One delete attempt against version `v`: its touched groups rewritten,
-    * without the matching rows, as one new group.
+  /** One delete attempt against snapshot `at`: its touched groups
+    * rewritten, without the matching rows, as one new group.
     */
   private def deleteAt(spark: SparkSession, base: String, predicate: Column,
-      v: Int): (String, Seq[Group], Seq[String]) = {
-    require(v >= 0, s"no committed version in $base")
-    val touched = touchedGroups(base, v, withGroup(snapshot(spark, base, v).filter(predicate)))
+      at: Snapshot): (String, Seq[Group], Seq[String]) = {
+    val touched = touchedGroups(at,
+      withGroup(readLive(spark, base, at, mergeSchema = false).filter(predicate)))
     if (touched.isEmpty) ("delete_noop", Seq.empty, Seq.empty)
     // a row whose predicate is NULL was not matched: it stays
     else ("delete", rewrite(spark, base, touched)(
@@ -447,12 +512,12 @@ object VersionedTable {
       insertWhen: Option[Column] = None,
       evolveSchema: Boolean = false,
       beforeCommit: Int => Unit = _ => ()): Int =
-    commitLoop(base, beforeCommit)(v => mergeAt(spark, base, source, keys,
-      updateWhen, updateSet, deleteWhen, insertWhen, evolveSchema, v))
+    commitLoop(base, beforeCommit)(at => mergeAt(spark, base, source, keys,
+      updateWhen, updateSet, deleteWhen, insertWhen, evolveSchema, at))
 
-  /** One merge attempt against version `v` (-1: no committed version): its
-    * touched groups merged with the whole source, inserts included, as one
-    * new group.
+  /** One merge attempt against snapshot `at` (version -1: none committed):
+    * its touched groups merged with the whole source, inserts included, as
+    * one new group.
     */
   private def mergeAt(spark: SparkSession, base: String, source: DataFrame,
       keys: Seq[String],
@@ -461,15 +526,15 @@ object VersionedTable {
       deleteWhen: Option[Column],
       insertWhen: Option[Column],
       evolveSchema: Boolean,
-      v: Int): (String, Seq[Group], Seq[String]) = {
+      at: Snapshot): (String, Seq[Group], Seq[String]) = {
     // With evolution on, source columns absent from the target join the
     // schema (Delta's mergeSchema on MERGE): the REWRITTEN group carries
     // them, untouched groups keep their old schema (no history rewrite), and
     // snapshotEvolved reads the union. The snapshot itself reads mergeSchema
     // too, so evolving an already-evolved table composes.
     val snap =
-      if (v < 0) spark.createDataFrame(java.util.List.of[Row](), source.schema)
-      else snapshot(spark, base, v, mergeSchema = evolveSchema)
+      if (at.version < 0) spark.createDataFrame(java.util.List.of[Row](), source.schema)
+      else readLive(spark, base, at, mergeSchema = evolveSchema)
     // new-column detection must use the SESSION's resolution rules: under the
     // default caseSensitive=false a source column differing only in case is
     // the SAME column (treating it as new would let widen's withColumn
@@ -492,8 +557,8 @@ object VersionedTable {
     // a semi join: the snapshot rows with a source key, whatever the
     // source's duplicates, with no shuffle to make the source's keys distinct
     val touched =
-      if (v < 0) Seq.empty
-      else touchedGroups(base, v, withGroup(snap).join(source, keys, "left_semi"))
+      if (at.version < 0) Seq.empty
+      else touchedGroups(at, withGroup(snap).join(source, keys, "left_semi"))
     def merged(target: DataFrame): DataFrame =
       graft.ops.Merge.mergeInto(widen(target), source, keys,
         updateWhen = updateWhen, updateSet = updateSet,
@@ -515,28 +580,18 @@ object VersionedTable {
     * vacuums with its group for free.
     */
   def appendBloomIndexed(df: DataFrame, base: String, keyCol: String,
-      nGroups: Int, fpp: Double = 0.01): Int = {
-    val groups = (0 until nGroups).flatMap { k =>
-      // NULL keys satisfy no pmod slice — route them into group 0 so the
-      // full snapshot keeps them (same invariant as appendClustered; a
-      // point lookup never wants them: k = value is NULL-false anyway)
-      val slice0 = pmod(col(keyCol), lit(nGroups)) === k
-      val slice = df.filter(if (k == 0) slice0 || col(keyCol).isNull else slice0)
-      val (group, rows) = writeCounted(slice, base)
-      group.map { g =>
-        // the write observed the bloom's sizing count; one pass over the
-        // written group builds the bloom itself
-        val bloom = read(df.sparkSession, base, Seq(g))
-          .stat.bloomFilter(keyCol, math.max(1L, rows), fpp)
-        val bos = new java.io.ByteArrayOutputStream()
-        bloom.writeTo(bos)
-        Files.write(Paths.get(base, g.rel, s"_bloom_$keyCol.b64"),
-          java.util.Base64.getEncoder.encode(bos.toByteArray))
-        g
-      }
+      nGroups: Int, fpp: Double = 0.01): Int =
+    appendSliced(df, base, "append_bloom", col(keyCol),
+      (0 until nGroups).map(k => pmod(col(keyCol), lit(nGroups)) === k), None) { (g, rows) =>
+      // the write observed the bloom's sizing count; one pass over the
+      // written group builds the bloom itself
+      val bloom = read(df.sparkSession, base, Seq(g))
+        .stat.bloomFilter(keyCol, math.max(1L, rows), fpp)
+      val bos = new java.io.ByteArrayOutputStream()
+      bloom.writeTo(bos)
+      Files.write(Paths.get(base, g.rel, s"_bloom_$keyCol.b64"),
+        java.util.Base64.getEncoder.encode(bos.toByteArray))
     }
-    commitLoop(base)(_ => ("append_bloom", groups, Seq.empty))
-  }
 
   /** Point-lookup read: open only the file groups whose bloom sidecar might
     * contain AT LEAST ONE of `keys` (groups without a sidecar for this
@@ -547,36 +602,25 @@ object VersionedTable {
     * work as snapshot resolution itself.
     */
   def snapshotPoint(spark: SparkSession, base: String, keyCol: String,
-      keys: Seq[Long], version: Int = Int.MaxValue): DataFrame = {
-    pointGroups(base, keyCol, keys, version) match {
-      case Seq() =>
-        // every group skipped: the empty frame still needs the FULL (merged)
-        // table schema — building it from one group would narrow the result
-        // on a schema-evolved table, and .head would throw bare on an empty
-        // live set. snapshotEvolved covers both (clear require inside).
-        snapshotEvolved(spark, base, version).filter(lit(false))
-      case groups => read(spark, base, groups).filter(col(keyCol).isin(keys: _*))
-    }
-  }
+      keys: Seq[Long], version: Int = Int.MaxValue): DataFrame =
+    skippingRead(spark, base, version, mightHold(base, keyCol, keys), col(keyCol).isin(keys: _*))
 
   /** The group paths [[snapshotPoint]] would open — exposed for the spec. */
   private[io] def pointPaths(base: String, keyCol: String, keys: Seq[Long],
       version: Int = Int.MaxValue): Seq[String] =
-    pointGroups(base, keyCol, keys, version).map(g => s"$base/${g.rel}")
+    keptPaths(base, version, mightHold(base, keyCol, keys))
 
-  private def pointGroups(base: String, keyCol: String, keys: Seq[Long],
-      version: Int): Seq[Group] = {
-    val v = math.min(version, latestVersion(base))
-    require(v >= 0, s"no committed version in $base")
-    liveGroups(base, v).filter { g =>
-      val sidecar = Paths.get(base, g.rel, s"_bloom_$keyCol.b64")
-      if (!Files.exists(sidecar)) true // no bloom: cannot skip safely
-      else {
-        val bytes = java.util.Base64.getDecoder.decode(Files.readAllBytes(sidecar))
-        val bloom = org.apache.spark.util.sketch.BloomFilter
-          .readFrom(new java.io.ByteArrayInputStream(bytes))
-        keys.exists(bloom.mightContainLong)
-      }
+  /** Whether group `g`'s bloom sidecar on `keyCol` might hold one of
+    * `keys`; a group without a sidecar for the column cannot be skipped
+    * safely.
+    */
+  private def mightHold(base: String, keyCol: String, keys: Seq[Long])(g: Group): Boolean = {
+    val sidecar = Paths.get(base, g.rel, s"_bloom_$keyCol.b64")
+    !Files.exists(sidecar) || {
+      val bytes = java.util.Base64.getDecoder.decode(Files.readAllBytes(sidecar))
+      val bloom = org.apache.spark.util.sketch.BloomFilter
+        .readFrom(new java.io.ByteArrayInputStream(bytes))
+      keys.exists(bloom.mightContainLong)
     }
   }
 
@@ -586,8 +630,7 @@ object VersionedTable {
     */
   private[io] def recordedSchemas(base: String,
       version: Int = Int.MaxValue): Seq[(String, Option[StructType])] =
-    liveGroups(base, math.min(version, latestVersion(base)))
-      .map(g => s"$base/${g.rel}" -> g.schema)
+    resolve(base, version).groups.map(g => s"$base/${g.rel}" -> g.schema)
 
   /** Write a checkpoint of the CURRENT version's folded live set
     * (`_log/c<v>.txt`, atomic like any commit). Subsequent snapshot
@@ -598,10 +641,9 @@ object VersionedTable {
     * same content.
     */
   def checkpoint(base: String): Int = {
-    val v = latestVersion(base)
-    require(v >= 0, s"no committed version in $base")
-    val live = liveGroups(base, v)
-    val body = ("action checkpoint" +: live.flatMap(_.manifestLines)).mkString("", "\n", "\n")
+    val at = resolve(base).committed(base)
+    val v = at.version
+    val body = ("action checkpoint" +: at.groups.flatMap(_.manifestLines)).mkString("", "\n", "\n")
     val tmp = logDir(base).resolve(f".c$v%05d.txt.tmp")
     Files.write(tmp, body.getBytes("UTF-8"))
     Files.move(tmp, logDir(base).resolve(f"c$v%05d.txt"),
@@ -629,9 +671,8 @@ object VersionedTable {
     * per-partition with a size target, same log contents.
     */
   def optimize(spark: SparkSession, base: String, smallBytes: Long = 64L << 20): Int =
-    commitLoop(base) { v =>
-      require(v >= 0, s"no committed version in $base")
-      val small = liveGroups(base, v)
+    commitLoop(base) { at =>
+      val small = at.committed(base).groups
         .filter(g => dirSize(Paths.get(base, g.rel)) < smallBytes)
       if (small.size < 2) ("optimize_noop", Seq.empty, Seq.empty)
       else ("optimize", rewrite(spark, base, small)(identity).toSeq,
@@ -649,20 +690,22 @@ object VersionedTable {
     * restore horizon IS the vacuum retention window, exactly Delta's
     * contract.
     */
-  def restore(base: String, toVersion: Int): Int =
-    commitLoop(base) { v =>
-      require(toVersion >= 0 && toVersion <= v,
-        s"cannot restore $base to v$toVersion (latest is v$v)")
-      val target = liveGroups(base, toVersion)
+  def restore(base: String, toVersion: Int): Int = {
+    // a committed version's live set never changes: resolved once, by the
+    // first attempt that finds `toVersion` committed
+    lazy val target = resolve(base, toVersion).groups
+    commitLoop(base) { at =>
+      require(toVersion >= 0 && toVersion <= at.version,
+        s"cannot restore $base to v$toVersion (latest is v${at.version})")
       val missing = target.map(_.rel).filterNot(r => Files.exists(Paths.get(base, r)))
       require(missing.isEmpty,
         s"cannot restore $base to v$toVersion: vacuum reclaimed ${missing.mkString(", ")}")
-      val current = liveGroups(base, v)
-      val currentRels = current.map(_.rel).toSet
+      val currentRels = at.groups.map(_.rel).toSet
       val targetRels = target.map(_.rel).toSet
       ("restore", target.filterNot(g => currentRels.contains(g.rel)),
-        current.map(_.rel).filterNot(targetRels.contains))
+        at.groups.map(_.rel).filterNot(targetRels.contains))
     }
+  }
 
   /** VACUUM: physically delete group directories referenced by NO retained
     * version. The newest `retainVersions` versions stay fully readable;
@@ -681,20 +724,18 @@ object VersionedTable {
     * before orphan sweeping, exactly as Delta's VACUUM does.
     */
   def vacuum(base: String, retainVersions: Int = 1): Int = {
-    val latest = latestVersion(base)
-    require(latest >= 0, s"no committed version in $base")
+    val l = log(base)
+    require(l.latest >= 0, s"no committed version in $base")
     require(retainVersions >= 1, "must retain at least the latest version")
-    val floor = math.max(0, latest - retainVersions + 1)
-    val retained = (floor to latest).flatMap(liveGroups(base, _)).map(_.rel).toSet
-    val groupsDir = Paths.get(base, "groups")
-    if (!Files.exists(groupsDir)) 0
-    else {
-      val doomed = Files.list(groupsDir).iterator().asScala.toSeq
-        .filter(Files.isDirectory(_))
-        .filterNot(p => retained.contains(s"groups/${p.getFileName}"))
-      doomed.foreach(p => graft.core.Scratch.delete(p.toString))
-      doomed.size
-    }
+    val floor = math.max(0, l.latest - retainVersions + 1)
+    // a group live at some retained version is live at the floor or added
+    // by a manifest after it
+    val retained = (l.liveAt(floor) ++ l.manifests.drop(floor + 1).flatMap(readManifest(_).add))
+      .map(_.rel).toSet
+    val doomed = listed(Paths.get(base, "groups")).filter(Files.isDirectory(_))
+      .filterNot(p => retained.contains(s"groups/${p.getFileName}"))
+    doomed.foreach(p => graft.core.Scratch.delete(p.toString))
+    doomed.size
   }
 
   /** Versions with their actions and file-group deltas — the `DESCRIBE
@@ -703,7 +744,7 @@ object VersionedTable {
     */
   def history(spark: SparkSession, base: String): DataFrame = {
     import spark.implicits._
-    manifestFiles(base).map(readManifest).zipWithIndex.map { case (m, v) =>
+    log(base).manifests.map(readManifest).zipWithIndex.map { case (m, v) =>
       (v.toLong, m.action, m.add.size.toLong, m.remove.size.toLong)
     }.toDF("version", "action", "n_added_groups", "n_removed_groups")
   }
@@ -756,19 +797,10 @@ object VersionedTable {
   }
 
   /** All tags of a table (name → version), the `refs` listing. */
-  def tags(base: String): Map[String, Int] = {
-    val d = tagDir(base)
-    if (!Files.exists(d)) Map.empty
-    else {
-      val list = Files.list(d)
-      try list.iterator().asScala
-        .filterNot(_.getFileName.toString.startsWith("."))
-        .map(p => p.getFileName.toString ->
-          new String(Files.readAllBytes(p), "UTF-8").trim.toInt)
-        .toMap
-      finally list.close()
-    }
-  }
+  def tags(base: String): Map[String, Int] =
+    listed(tagDir(base)).filterNot(_.getFileName.toString.startsWith("."))
+      .map(p => p.getFileName.toString -> new String(Files.readAllBytes(p), "UTF-8").trim.toInt)
+      .toMap
 
   /** Table state at a NAMED ref — [[snapshot]] through [[tagVersion]]. */
   def snapshotTag(spark: SparkSession, base: String, name: String): DataFrame =

@@ -2,6 +2,8 @@ package graft.io
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -767,5 +769,73 @@ class VersionedTableSpec extends SparkSpec {
       }
     }
     assert(clustered === plain)
+  }
+
+  // ---- one resolution, no leaked handles -----------------------------------
+
+  test("a range read that skips every group answers with the table's merged schema") {
+    import spark.implicits._
+    val base = tmpDir("vt_range_empty_evolved")
+    VersionedTable.appendClustered(Seq((1L, 1.0), (2L, 2.0)).toDF("k", "price"),
+      base, "price", nGroups = 2)
+    VersionedTable.appendClustered(Seq((3L, 3.0, "x"), (4L, 4.0, "y")).toDF("k", "price", "tag"),
+      base, "price", nGroups = 2)
+    assert(VersionedTable.snapshotRange(spark, base, "price", 100.0, 200.0).columns.toSeq ===
+      Seq("k", "price", "tag"))
+  }
+
+  /** This JVM's open file descriptors, counted through a listing that is
+    * closed before the count returns.
+    */
+  private def openFds(): Long = {
+    System.gc()
+    val fds = Files.list(Paths.get("/proc/self/fd"))
+    try fds.count() finally fds.close()
+  }
+
+  test("no file handle outlives a merge, a snapshot or a log read") {
+    assume(Files.isDirectory(Paths.get("/proc/self/fd")), "needs /proc/self/fd")
+    import spark.implicits._
+    val base = tmpDir("vt_fds")
+    val rows = (0L until 40L).map(k => (k, k.toDouble, s"v$k")).toDF("k", "price", "s")
+    VersionedTable.appendClustered(rows.filter(col("k") < 20L), base, "price", nGroups = 2)
+    VersionedTable.appendBloomIndexed(rows.filter(col("k") >= 20L), base, "k", nGroups = 2)
+    def merge(k: Long): Unit = VersionedTable.merge(spark, base,
+      Seq((k, k.toDouble, s"m$k")).toDF("k", "price", "s"), keys = Seq("k"),
+      updateWhen = Some(lit(true)), updateSet = Map("s" -> col("s.s")))
+    def reads(): Unit = {
+      VersionedTable.latestVersion(base)
+      VersionedTable.history(spark, base)
+      VersionedTable.vacuum(base)
+      VersionedTable.snapshotRange(spark, base, "price", 3.0, 9.0)
+      VersionedTable.snapshotPoint(spark, base, "k", Seq(25L))
+    }
+    // one of each first: what Spark opens once per JVM is open before the count
+    merge(0L)
+    VersionedTable.snapshot(spark, base)
+    reads()
+    val before = openFds()
+    (1L to 20L).foreach(merge)
+    (1 to 20).foreach(_ => VersionedTable.snapshot(spark, base))
+    reads()
+    val grown = openFds() - before
+    assert(grown <= 5, s"$grown more open file descriptors after the calls")
+  }
+
+  test("a directory is listed in one place, which closes the listing") {
+    val walk = Files.walk(Paths.get(sys.props("user.dir"), "src", "main"))
+    val sources =
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      finally walk.close()
+    val Def = "def (\\w+)".r
+    val sites = sources.flatMap { p =>
+      val text = Files.readString(p)
+      Iterator.iterate(text.indexOf("Files.list("))(i => text.indexOf("Files.list(", i + 1))
+        .takeWhile(_ >= 0)
+        .map(i => p.getFileName.toString -> Def.findAllMatchIn(text.take(i)).map(_.group(1))
+          .toSeq.lastOption.getOrElse("<top level>"))
+    }
+    assert(sites === List("VersionedTable.scala" -> "listed"),
+      s"directory listings outside the one closing helper: $sites")
   }
 }
